@@ -2496,9 +2496,15 @@ def udf_scalar_pandas(spark, sf):
 @op("udf_iter_tagger", None)
 def udf_iter_tagger(spark, sf):
     """Iterator-of-series batched CRF Viterbi tagger over the fixture
-    transcripts (model loaded once per worker). Parity vs the
-    sequential oracle is pytest-gated (tests/test_spark_parity.py)."""
-    tagged = _pipeline(spark)["tagged"]
+    pipeline's turns (model loaded once per worker), emitting raw BIO
+    tags. Equality with the sequential oracle tagger is pytest-gated
+    (tests/test_noisy_eval.py, tests/test_cjk.py)."""
+    from kgx.spark.udfs import make_tagger_udf
+    from kgx.tagcore import TaggerArtifact
+
+    tagger = make_tagger_udf(spark, TaggerArtifact.load(
+        os.path.join(_fixture_dir(), "tagger_v1.npz")))
+    tagged = _pipeline(spark)["turns"].withColumn("tags", tagger("text"))
     return tagged.select(
         "conv_id",
         "turn_idx",
@@ -2509,8 +2515,10 @@ def udf_iter_tagger(spark, sf):
 
 @op("udf_span_decode", None)
 def udf_span_decode(spark, sf):
-    """BIO -> span structs (A.4 IOB2 repair) via pandas UDF + explode;
-    semantics pytest-gated vs the pure-Python twin."""
+    """Span structs of the fixture pipeline's tag checkpoint: offsets
+    from the pandas tagger UDF (vectorized BIO decode with A.4 IOB2
+    repair), structs assembled JVM-side; mention parity with the
+    sequential oracle is pytest-gated (tests/test_spark_parity.py)."""
     tagged = _pipeline(spark)["tagged"]
     return tagged.select(
         "conv_id", "turn_idx", F.size("spans").alias("n_spans")
@@ -2566,9 +2574,9 @@ def udf_grouped_map(spark, sf):
     " CAST(SUM(l_orderkey) AS BIGINT) AS key_sum FROM lineitem",
 )
 def udf_map_partitions(spark, sf):
-    """mapInPandas per-partition counters (the lineage-metrics pattern,
-    kgx.spark.run.partition_lineage) folded to a partitioning-invariant
-    total so DuckDB can value-check it."""
+    """mapInPandas per-partition counters (the lineage-metrics
+    pattern) folded to a partitioning-invariant total so DuckDB can
+    value-check it."""
     schema = "p_rows bigint, p_keysum bigint"
 
     def counters(batches):
@@ -2686,35 +2694,35 @@ def stream_incremental_canon(spark, sf):
 
     from kgx.spark import streaming
     from kgx.spark.io import TableIO
+    from kgx.spark.pipeline import process_tmp_root
     from kgx.spark.run import load_dims
     from kgx.spark.udfs import make_tagger_spans_udf
 
     fx = _fixture_dir()
     dims = load_dims(spark, fx)
     udf = make_tagger_spans_udf(spark, dims["artifact"])
-    dict_df = dims["dict_df"]
     tbl = pq.read_table(os.path.join(fx, "transcripts.parquet"))
     # first 20 convs, split into two arrival files
     tbl = tbl.filter(pc.less(tbl["conv_id"], "c000020"))
-    with tempfile.TemporaryDirectory(prefix="kgx_inc_canon_") as tmp:
-        arrivals = os.path.join(tmp, "arrivals")
-        os.makedirs(arrivals)
-        pq.write_table(tbl.filter(pc.less(tbl["conv_id"], "c000010")),
-                       os.path.join(arrivals, "a.parquet"))
-        pq.write_table(
-            tbl.filter(pc.greater_equal(tbl["conv_id"], "c000010")),
-            os.path.join(arrivals, "b.parquet"))
-        wh = os.path.join(tmp, "wh")
-        streaming.run_incremental_canon(
-            spark, arrivals, os.path.join(tmp, "ckpt"), wh, udf,
-            dict_df, patterns_rows=dims["patterns_rows"],
-            max_files_per_trigger=1)
-        out = (
-            TableIO(wh).read(spark, "cc_vertices")
-            .withColumn("aliases", F.concat_ws(",", "aliases"))
-        )
-        rows = out.collect()
-    return spark.createDataFrame(rows, out.schema)
+    # the returned frame reads the warehouse lazily, so it lives as
+    # long as the process, not this call
+    tmp = tempfile.mkdtemp(prefix="inc_canon_", dir=process_tmp_root())
+    arrivals = os.path.join(tmp, "arrivals")
+    os.makedirs(arrivals)
+    pq.write_table(tbl.filter(pc.less(tbl["conv_id"], "c000010")),
+                   os.path.join(arrivals, "a.parquet"))
+    pq.write_table(
+        tbl.filter(pc.greater_equal(tbl["conv_id"], "c000010")),
+        os.path.join(arrivals, "b.parquet"))
+    wh = os.path.join(tmp, "wh")
+    streaming.run_incremental_canon(
+        spark, arrivals, os.path.join(tmp, "ckpt"), wh, udf,
+        dims["dict_df"], patterns_rows=dims["patterns_rows"],
+        max_files_per_trigger=1)
+    return (
+        TableIO(wh).read(spark, "cc_vertices")
+        .withColumn("aliases", F.concat_ws(",", "aliases"))
+    )
 
 
 def mm_sample_frames(spark, sf):

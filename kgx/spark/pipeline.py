@@ -1,67 +1,38 @@
-"""End-to-end pipeline assembly (in-memory; checkpointed runner in
-kgx.spark.run adds manifests/resume around the same stages)."""
+"""In-process pipeline over a fixture directory: the checkpointed
+kgx.spark.run.Runner, written to a throwaway warehouse that lives as
+long as the process, with every table read back as a DataFrame."""
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 
-from kgx.spark import stages
-from kgx.spark.udfs import make_tagger_udf
-from kgx.tagcore import TaggerArtifact
+from kgx.spark.run import Runner
+
+_TMP_ROOT: str | None = None
 
 
-def run_pipeline(
-    spark: SparkSession,
-    transcripts_path: str,
-    alias_dict_path: str,
-    patterns_path: str,
-    artifact_path: str,
-    buckets: int = 32,
-) -> dict[str, DataFrame]:
-    artifact = TaggerArtifact.load(artifact_path)
-    tagger = make_tagger_udf(spark, artifact)
-
-    turns = stages.ingest(spark, transcripts_path, buckets=buckets)
-    tagged = stages.tag(turns, tagger)
-    mentions = stages.mentions_of(tagged)
-
-    patterns_rows = [
-        r.asDict() for r in spark.read.parquet(patterns_path).collect()
-    ]
-    triples_raw = stages.extract(tagged, patterns_rows)
-
-    dict_df = stages.dict_latest(spark.read.parquet(alias_dict_path))
-    links, nodes, lsh_edges = stages.link(mentions, dict_df)
-
-    labels = stages.connected_components(nodes, lsh_edges)
-    entity_map, cc_vertices = stages.canonicalize(nodes, labels)
-
-    edges, vertices = stages.materialize(
-        triples_raw, dict_df, entity_map, cc_vertices
-    )
-    return {
-        "turns": turns,
-        "tagged": tagged,
-        "mentions": mentions,
-        "triples_raw": triples_raw,
-        "links": links,
-        "nodes": nodes,
-        "lsh_edges": lsh_edges,
-        "entity_map": entity_map,
-        "edges": edges,
-        "vertices": vertices,
-    }
+def process_tmp_root() -> str:
+    """One temp directory per process, removed at exit: warehouses
+    whose tables are returned as lazy parquet reads must outlive the
+    call that wrote them."""
+    global _TMP_ROOT
+    if _TMP_ROOT is None:
+        _TMP_ROOT = tempfile.mkdtemp(prefix="kgx_")
+        atexit.register(shutil.rmtree, _TMP_ROOT, True)
+    return _TMP_ROOT
 
 
 def run_fixture_pipeline(
     spark: SparkSession, fixture_dir: str, buckets: int = 32,
     artifact: str = "tagger_v1.npz",
 ) -> dict[str, DataFrame]:
-    return run_pipeline(
-        spark,
-        f"{fixture_dir}/transcripts.parquet",
-        f"{fixture_dir}/alias_dict.parquet",
-        f"{fixture_dir}/patterns.parquet",
-        f"{fixture_dir}/{artifact}",
-        buckets=buckets,
-    )
+    runner = Runner(spark, fixture_dir,
+                    tempfile.mkdtemp(prefix="wh_", dir=process_tmp_root()),
+                    "fixture", buckets=buckets, artifact=artifact)
+    # commit events carry a content hash; probe and CC-loop events don't
+    return {e["table"]: runner.read(e["table"])
+            for e in runner.run() if e.get("content_hash")}

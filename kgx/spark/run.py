@@ -8,16 +8,25 @@ whose manifest is complete AND whose inputs fingerprint is unchanged is
 skipped — so a run killed after stage k resumes at k+1 and produces
 byte-identical output (tested in tests/test_resume.py).
 
-Per-partition lineage costs (nearly) nothing extra: row count and an
+Lineage costs (nearly) nothing extra: row count and an
 order-insensitive content signature are collected DURING the write job
 via `df.observe` (sum of per-row murmur3 — commutative, so invariant
 under partitioning/parallelism; this is what the local[8]-vs-local[32]
 equality assertion in bench uses), and per-output-file counters
 (rows, bytes) come from the parquet footers (driver-side metadata
-read). No second scan of the data per stage — at 100 TB a re-scan per
-stage would double the pipeline's IO. A deep per-partition hash pass
-(`partition_lineage`, mapInPandas) remains available for audits and is
-exercised in tests.
+read) into the `metrics` table. No second scan of the data per stage —
+at 100 TB a re-scan per stage would double the pipeline's IO.
+
+Each stage's outputs are built lazily (one builder per table), so the
+eager work a stage needs — the tag stage's duplication-rate probe, the
+canon stage's connected-components loop — runs only when that stage
+has a table left to commit. Every event in `Runner.events` has a
+unique (stage, table) key; the probe's is (tag, tag_probe) and the CC
+loop's is (canon, cc_loop).
+
+The same runner backs the in-process fixture pipeline
+(kgx.spark.pipeline.run_fixture_pipeline), so the oracle-parity tests
+check the code path the CLI ships.
 
 CLI (also the spark-submit entry point; see scripts/submit.sh):
 
@@ -30,13 +39,11 @@ CLI (also the spark-submit entry point; see scripts/submit.sh):
 from __future__ import annotations
 
 import argparse
-import hashlib
+import functools
 import json
 import os
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,48 +71,6 @@ METRICS_SCHEMA = (
     "run_id string, stage string, table string, partition_id int, "
     "rows bigint, bytes bigint, content_hash string"
 )
-
-
-def partition_lineage(df: DataFrame, run_id: str, stage: str,
-                      table: str) -> DataFrame:
-    """One row per partition: rows, approx bytes, order-insensitive
-    content hash. Pure mapInPandas (Arrow-batched, no per-row Python
-    beyond pandas' own vectorized ops)."""
-    cols = df.columns
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        rows = 0
-        nbytes = 0
-        acc = 0
-        for pdf in batches:
-            rows += len(pdf)
-            nbytes += int(pdf.memory_usage(index=False, deep=True).sum())
-            joined = pdf.astype(str).agg("\x1f".join, axis=1)
-            for s in joined:
-                h = hashlib.sha256(s.encode("utf-8", "replace")).digest()
-                acc = (acc + int.from_bytes(h[:8], "big")) % (1 << 63)
-        yield pd.DataFrame(
-            {
-                "run_id": [run_id],
-                "stage": [stage],
-                "table": [table],
-                "partition_id": [pid],
-                "rows": [rows],
-                "bytes": [nbytes],
-                "content_hash": [format(acc, "016x")],
-            }
-        )
-
-    return df.select(cols).mapInPandas(fn, METRICS_SCHEMA)
-
-
-def table_content_hash(metrics_rows: list[dict]) -> str:
-    """Partitioning-invariant table hash: sum of partition hashes."""
-    acc = sum(int(r["content_hash"], 16) for r in metrics_rows) % (1 << 63)
-    return format(acc, "016x")
 
 
 def content_sig_col(df: DataFrame):
@@ -180,9 +145,9 @@ class Runner:
 
     def tagger(self):
         if self._tagger is None:
-            from kgx.spark.udfs import make_tagger_offsets_udf
+            from kgx.spark.udfs import make_tagger_spans_udf
 
-            self._tagger = make_tagger_offsets_udf(
+            self._tagger = make_tagger_spans_udf(
                 self.spark, self.artifact_obj()
             )
         return self._tagger
@@ -255,15 +220,19 @@ class Runner:
             self.io.path("metrics"))
         self._metrics_rows = []
 
-    def _stage_seq(self, stage: str, builders: dict,
-                   input_paths: list[str], partition_by=None) -> None:
-        """Sequenced multi-output stage: each builder may read back the
-        outputs committed before it (so shared sub-plans — the LSH
-        self-join, the big edges join — run once, not once per
-        dependent output)."""
-        fp = fingerprint_paths(*input_paths) + f"|b{self.buckets}"
-        pending = [t for t in builders if not self.io.is_complete(t, fp)]
-        if not pending:
+    def _fingerprint(self, input_paths: list[str]) -> str:
+        return fingerprint_paths(*input_paths) + f"|b{self.buckets}"
+
+    def _stage(self, stage: str, builders: dict,
+               input_paths: list[str], partition_by=None) -> None:
+        """Commit each of a stage's tables from its builder, in order.
+        A builder runs only when some table of the stage is pending, so
+        a resumed run pays none of a finished stage's eager work; a
+        builder may read back the tables committed before it (so
+        shared sub-plans — the LSH self-join, the big edges join — run
+        once, not once per dependent output)."""
+        fp = self._fingerprint(input_paths)
+        if all(self.io.is_complete(t, fp) for t in builders):
             for t in builders:
                 self.events.append(
                     {"stage": stage, "table": t, "skipped": True,
@@ -272,21 +241,6 @@ class Runner:
             return
         for t, build in builders.items():
             self._commit(stage, t, build(), fp, partition_by=partition_by)
-
-    def _stage(self, stage: str, outputs: dict[str, DataFrame],
-               input_paths: list[str], partition_by=None) -> None:
-        fp = fingerprint_paths(*input_paths) + f"|b{self.buckets}"
-        pending = [t for t in outputs
-                   if not self.io.is_complete(t, fp)]
-        if not pending:
-            for t in outputs:
-                self.events.append(
-                    {"stage": stage, "table": t, "skipped": True,
-                     "rows": self.io.manifest(t)["rows"]}
-                )
-            return
-        for t, df in outputs.items():
-            self._commit(stage, t, df, fp, partition_by=partition_by)
 
     def read(self, table: str) -> DataFrame:
         return self.io.read(self.spark, table)
@@ -309,10 +263,12 @@ class Runner:
         return self.events
 
     def stage_ingest(self):
-        turns = stages.ingest_bucketed(
-            self.spark, self.in_path("transcripts"), buckets=self.buckets)
-        self._stage("ingest", {"turns": turns},
-                    [self.in_path("transcripts")], partition_by=["bucket"])
+        self._stage(
+            "ingest",
+            {"turns": lambda: stages.ingest_bucketed(
+                self.spark, self.in_path("transcripts"),
+                buckets=self.buckets)},
+            [self.in_path("transcripts")], partition_by=["bucket"])
 
     def patterns_rows(self) -> list[dict]:
         return [
@@ -322,74 +278,71 @@ class Runner:
         ]
 
     def stage_tag(self):
-        turns = self.read("turns")
-        distinct = self.tag_distinct
-        tag_inputs = [self.io.path("turns"), self.artifact_path,
-                      self.in_path("patterns")]
-        if distinct is None and self.io.is_complete(
-                "tagged",
-                fingerprint_paths(*tag_inputs) + f"|b{self.buckets}"):
-            # resume will skip the stage — don't pay the probe; the
-            # lazy plan below is never executed (mode-independent
-            # fingerprint, value-identical outputs either way)
-            distinct = False
-        if distinct is None:
-            # auto mode: one cheap column-pruned aggregate over the
-            # already-checkpointed turns table (count + HLL distinct
-            # of `text`) measures the duplication rate; past the
-            # measured break-even for the loaded artifact's per-text
-            # cost class (constants above) the content-addressed path
-            # wins. The probe's outcome only picks between two
-            # VALUE-IDENTICAL plans (same content hashes —
-            # tests/test_resume.py cross-mode flip), so HLL
-            # approximation error cannot affect output, and the stage
-            # fingerprint is mode-independent, so resume is
-            # unaffected by what a previous run chose.
-            t0 = time.time()
-            row = turns.agg(
-                F.count("text").alias("n"),
-                F.approx_count_distinct("text").alias("d"),
-            ).collect()[0]
-            rate = row["n"] / max(row["d"], 1)
-            kind = self.artifact_obj().kind
-            threshold = (TAG_DISTINCT_AUTO_MIN_RATE_LEXICON
-                         if kind in _LEXICON_KINDS
-                         else TAG_DISTINCT_AUTO_MIN_RATE_LEARNED)
-            distinct = rate >= threshold
-            # event carries the standard stage/table/rows/wall_s shape
-            # — downstream consumers (scaling_bench stage_walls, the
-            # resume tests) index those keys on every event
-            self.events.append(
-                {"stage": "tag", "table": "tagged",
-                 "probe": "dup_rate", "dup_rate": round(rate, 3),
-                 "auto_tag_distinct": distinct,
-                 "rows": int(row["n"]),
-                 "wall_s": round(time.time() - t0, 3),
-                 "skipped": False}
-            )
-        if distinct:
-            tagged = stages.tag_extract_distinct(
-                turns, self.tagger(), self.patterns_rows(),
-                buckets=self.buckets)
-        else:
-            tagged = stages.tag_extract(turns, self.tagger(),
-                                        self.patterns_rows())
-        self._stage("tag", {"tagged": tagged}, tag_inputs,
+        self._stage("tag", {"tagged": self._tagged},
+                    [self.io.path("turns"), self.artifact_path,
+                     self.in_path("patterns")],
                     partition_by=["bucket"])
 
+    def _tagged(self) -> DataFrame:
+        turns = self.read("turns")
+        distinct = self.tag_distinct
+        if distinct is None:
+            distinct = self._probe_dup_rate(turns)
+        if distinct:
+            return stages.tag_extract_distinct(
+                turns, self.tagger(), self.patterns_rows(),
+                buckets=self.buckets)
+        return stages.tag_extract(turns, self.tagger(),
+                                  self.patterns_rows())
+
+    def _probe_dup_rate(self, turns: DataFrame) -> bool:
+        """Auto mode: one cheap column-pruned aggregate over the
+        already-checkpointed turns table (count + HLL distinct of
+        `text`) measures the duplication rate; past the measured
+        break-even for the loaded artifact's per-text cost class
+        (constants above) the content-addressed path wins. The probe's
+        outcome only picks between two VALUE-IDENTICAL plans (same
+        content hashes — tests/test_resume.py cross-mode flip), so HLL
+        approximation error cannot affect output, and the stage
+        fingerprint is mode-independent, so resume is unaffected by
+        what a previous run chose."""
+        t0 = time.time()
+        row = turns.agg(
+            F.count("text").alias("n"),
+            F.approx_count_distinct("text").alias("d"),
+        ).collect()[0]
+        rate = row["n"] / max(row["d"], 1)
+        kind = self.artifact_obj().kind
+        threshold = (TAG_DISTINCT_AUTO_MIN_RATE_LEXICON
+                     if kind in _LEXICON_KINDS
+                     else TAG_DISTINCT_AUTO_MIN_RATE_LEARNED)
+        distinct = rate >= threshold
+        # event carries the standard stage/table/rows/wall_s shape —
+        # downstream consumers (scaling_bench stage_walls, the resume
+        # tests) index those keys on every event
+        self.events.append(
+            {"stage": "tag", "table": "tag_probe",
+             "probe": "dup_rate", "dup_rate": round(rate, 3),
+             "auto_tag_distinct": distinct,
+             "rows": int(row["n"]),
+             "wall_s": round(time.time() - t0, 3),
+             "skipped": False}
+        )
+        return distinct
+
     def stage_extract(self):
-        tagged = self.read("tagged")
-        triples = stages.triples_from_tagged(tagged)
-        mentions = stages.mentions_of(tagged)
-        self._stage("extract",
-                    {"triples_raw": triples, "mentions": mentions},
-                    [self.io.path("tagged")])
+        self._stage(
+            "extract",
+            {"triples_raw": lambda: stages.triples_from_tagged(
+                self.read("tagged")),
+             "mentions": lambda: stages.mentions_of(self.read("tagged"))},
+            [self.io.path("tagged")])
 
     def stage_link(self):
         mentions = self.read("mentions")
         dict_df = stages.dict_latest(
             self.spark.read.parquet(self.in_path("alias_dict")))
-        self._stage_seq(
+        self._stage(
             "link",
             {
                 "nodes": lambda: stages.link_nodes(mentions, dict_df),
@@ -401,35 +354,37 @@ class Runner:
             [self.io.path("mentions"), self.in_path("alias_dict")])
 
     def stage_canon(self):
-        fp = fingerprint_paths(
-            self.io.path("nodes"), self.io.path("lsh_edges")
-        ) + f"|b{self.buckets}"
-        # the CC loop runs its per-iteration actions EAGERLY here
-        # (localCheckpoint per round), before _stage starts its clock
-        # — record it as its own event so per-stage walls account for
-        # the full run (scaling_bench sums these)
-        t_cc = time.time()
-        labels = stages.connected_components(
-            self.read("nodes"), self.read("lsh_edges"),
-            state_io=self.io if self.cc_checkpoint_every else None,
-            state_fp=fp,
-            checkpoint_every=self.cc_checkpoint_every)
-        self.events.append(
-            {"stage": "canon", "table": "cc_loop", "rows": None,
-             "partitions": None, "content_hash": None,
-             "wall_s": round(time.time() - t_cc, 3), "skipped": False}
-        )
-        entity_map, cc_vertices = stages.canonicalize(self.read("nodes"),
-                                                      labels)
+        inputs = [self.io.path("nodes"), self.io.path("lsh_edges")]
+
+        @functools.cache
+        def canon():
+            # the CC loop runs its per-iteration actions EAGERLY here
+            # (localCheckpoint per round), before _commit starts its
+            # clock — record it as its own event so per-stage walls
+            # account for the full run (scaling_bench sums these)
+            t_cc = time.time()
+            labels = stages.connected_components(
+                self.read("nodes"), self.read("lsh_edges"),
+                state_io=self.io if self.cc_checkpoint_every else None,
+                state_fp=self._fingerprint(inputs),
+                checkpoint_every=self.cc_checkpoint_every)
+            self.events.append(
+                {"stage": "canon", "table": "cc_loop", "rows": None,
+                 "partitions": None, "content_hash": None,
+                 "wall_s": round(time.time() - t_cc, 3),
+                 "skipped": False}
+            )
+            return stages.canonicalize(self.read("nodes"), labels)
+
         self._stage("canon",
-                    {"entity_map": entity_map,
-                     "cc_vertices": cc_vertices},
-                    [self.io.path("nodes"), self.io.path("lsh_edges")])
+                    {"entity_map": lambda: canon()[0],
+                     "cc_vertices": lambda: canon()[1]},
+                    inputs)
 
     def stage_materialize(self):
         dict_df = stages.dict_latest(
             self.spark.read.parquet(self.in_path("alias_dict")))
-        self._stage_seq(
+        self._stage(
             "materialize",
             {
                 "edges": lambda: stages.materialize_edges(

@@ -1,17 +1,23 @@
 """Pipeline stages as DataFrame -> DataFrame functions (SURVEY.md §3.2).
 
-    transcripts -ingest-> turns -tag-> tagged -> mentions
-    tagged -extract-> triples_raw
-    mentions + alias_dict -link-> links, nodes, lsh_edges
-    nodes + lsh_edges -canon-> entity_map, cc_vertices
-    triples_raw + entity_map -materialize-> edges, vertices
+    transcripts -ingest_bucketed-> turns
+    turns -tag_extract-> tagged (spans + candidate rel, no text)
+    tagged -mentions_of / triples_from_tagged-> mentions, triples_raw
+    mentions + alias_dict -link_*-> nodes, lsh_edges, links
+    nodes + lsh_edges -connected_components/canonicalize->
+        entity_map, cc_vertices
+    triples_raw + entity_map -materialize_*-> edges, vertices
+
+This is the one stage graph: kgx.spark.run.Runner sequences it with
+checkpoints, and the streaming path (kgx.spark.streaming) applies the
+same functions per micro-batch.
 
 Scale notes (SURVEY.md §4): one explicit repartition by conv_id hash up
-front; the tag+extract path is partition-local after it (window and
-groupBy keys are prefixed by conv_id). Dimension joins (alias_dict,
-patterns) broadcast. Pattern matching is a constant-folded WHEN chain
-of literal regexes (whole-stage codegen), not a Python loop. The CC
-loop localCheckpoints every iteration to cut lineage.
+front; the tag+extract path is partition-local after it (groupBy keys
+are prefixed by conv_id). Dimension joins (alias_dict, patterns)
+broadcast. Pattern matching is a constant-folded WHEN chain of literal
+regexes (whole-stage codegen), not a Python loop. The CC loop
+localCheckpoints every iteration to cut lineage.
 """
 
 from __future__ import annotations
@@ -26,8 +32,8 @@ from kgx.spark.lsh import (
     guarded_bucket_pairs_incremental,
 )
 from kgx.spark.udfs import (
+    SPANS_FROM_OFFSETS,
     band_key_cols,
-    decode_spans,
     jaccard_col,
     minhash_sig,
     normalize_surface,
@@ -52,19 +58,13 @@ def tool_id_col(tool: Column) -> Column:
 # --- ingest -----------------------------------------------------------------
 
 
-def ingest(spark, transcripts_path: str, buckets: int = 32) -> DataFrame:
-    """Scan + hygiene filter + explicit repartition by conv_id hash.
-
-    `text` is never mutated (input_hint invariant); the filter only
-    drops rows, the projection keeps all input columns.
-    """
-    df = spark.read.parquet(transcripts_path)
-    # isNotNull is implied by the length predicate but stated explicitly
-    # so it pushes down to the parquet scan (page/row-group skipping)
-    df = df.where(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
-    return df.repartition(buckets, "conv_id")
+def nonempty_text(turns: DataFrame) -> DataFrame:
+    """Hygiene filter: drop turns whose text is null or blank; `text`
+    itself is never mutated (input_hint invariant). isNotNull is
+    implied by the length predicate but stated explicitly so it pushes
+    down to the parquet scan."""
+    return turns.where(
+        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0))
 
 
 def ingest_bucketed(spark, transcripts_path: str,
@@ -75,10 +75,7 @@ def ingest_bucketed(spark, transcripts_path: str,
     output files, not tasks x buckets tiny ones. bucket is a function
     of conv_id, so conv_id-locality (the per-conv window/groupBy key)
     is preserved."""
-    df = spark.read.parquet(transcripts_path)
-    df = df.where(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
+    df = nonempty_text(spark.read.parquet(transcripts_path))
     df = df.withColumn(
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(buckets))
     )
@@ -88,18 +85,16 @@ def ingest_bucketed(spark, transcripts_path: str,
 # --- tag --------------------------------------------------------------------
 
 
-def tag(turns: DataFrame, tagger_udf) -> DataFrame:
-    """Batched CRF Viterbi tagging + span decode per turn."""
-    return turns.withColumn("tags", tagger_udf("text")).withColumn(
-        "spans", decode_spans("text", "tags")
-    )
-
-
 def tag_spans(turns: DataFrame, tag_spans_udf) -> DataFrame:
-    """Single-pass variant: spans straight from text (no tags column,
-    one Arrow crossing). Same semantics as tag() + drop('tags'),
-    asserted in tests."""
-    return turns.withColumn("spans", tag_spans_udf("text"))
+    """Entity spans per turn: the tagger UDF
+    (udfs.make_tagger_spans_udf) emits only primitive span offsets; the
+    surfaces and span structs are built JVM-side (substring +
+    transform, whole-stage codegen)."""
+    return (
+        turns.withColumn("off", tag_spans_udf("text"))
+        .withColumn("spans", F.expr(SPANS_FROM_OFFSETS))
+        .drop("off")
+    )
 
 
 REL_TYPE_DDL = (
@@ -152,20 +147,20 @@ def rel_candidates_col(patterns_rows: list[dict]):
     )
 
 
-def tag_extract(turns: DataFrame, tag_offsets_udf,
+def tag_extract(turns: DataFrame, tag_spans_udf,
                 patterns_rows: list[dict]) -> DataFrame:
     """Fused tag+relation pass (SURVEY §4 'tag+extract in one
     partition-local pass'): spans from the offsets UDF, candidate
     triples from the JVM WHEN-chain, `text` dropped — the checkpoint
     carries only spans + rel (+ turn keys), roughly halving the
     pipeline's biggest write."""
-    tagged = tag_spans_jvm(turns, tag_offsets_udf)
+    tagged = tag_spans(turns, tag_spans_udf)
     return tagged.withColumn(
         "rel", rel_candidates_col(patterns_rows)
     ).drop("text")
 
 
-def tag_extract_distinct(turns: DataFrame, tag_offsets_udf,
+def tag_extract_distinct(turns: DataFrame, tag_spans_udf,
                          patterns_rows: list[dict],
                          buckets: int | None = None) -> DataFrame:
     """Content-addressed twin of tag_extract: run the tagger ONCE per
@@ -197,8 +192,8 @@ def tag_extract_distinct(turns: DataFrame, tag_offsets_udf,
     emission model in the artifact slot — the reference contract's
     BiLSTM/BERT branch costs orders of magnitude more per turn), where
     the saving approaches the corpus duplication rate."""
-    uniq = tag_spans_jvm(
-        turns.select("text").distinct(), tag_offsets_udf
+    uniq = tag_spans(
+        turns.select("text").distinct(), tag_spans_udf
     ).withColumn("rel", rel_candidates_col(patterns_rows))
     other = [c for c in turns.columns if c != "text"]
     out = turns.join(uniq, "text").select(*other, "spans", "rel")
@@ -210,52 +205,6 @@ def tag_extract_distinct(turns: DataFrame, tag_offsets_udf,
         # anti-pattern ingest_bucketed exists to prevent)
         out = out.repartition(buckets, "bucket")
     return out
-
-
-def triples_from_tagged(tagged: DataFrame) -> DataFrame:
-    """triples_raw from the fused checkpoint: explode precomputed rel
-    + uses_tool triples (speaker = first PER mention per conv)."""
-    rel = tagged.select(
-        "conv_id", "turn_idx", "ts", F.explode("rel").alias("r")
-    ).select("conv_id", "turn_idx", "r.*", "ts")
-
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "begin")
-    speakers = (
-        mentions_of(tagged)
-        .where(F.col("etype") == "PER")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("conv_id", F.col("surface").alias("speaker_surface"))
-    )
-    tool_triples = (
-        tagged.where((F.col("role") == "tool") & F.col("tool").isNotNull())
-        .join(speakers, "conv_id")
-        .select(
-            "conv_id", "turn_idx",
-            F.col("speaker_surface").alias("subj_surface"),
-            F.lit("PER").alias("subj_etype"),
-            F.lit("uses_tool").alias("pred"),
-            F.col("tool").alias("obj_surface"),
-            F.lit("TOOL").alias("obj_etype"),
-            F.lit(-1).alias("subj_begin"),
-            F.lit(-1).alias("obj_begin"),
-            "ts",
-        )
-    )
-    return rel.select(tool_triples.columns).unionByName(tool_triples)
-
-
-def tag_spans_jvm(turns: DataFrame, tag_offsets_udf) -> DataFrame:
-    """Fastest variant: Python emits only primitive span offsets; the
-    surfaces + span structs are built JVM-side (substring + transform,
-    whole-stage codegen). Identical output to tag_spans (tested)."""
-    from kgx.spark.udfs import SPANS_FROM_OFFSETS
-
-    return (
-        turns.withColumn("off", tag_offsets_udf("text"))
-        .withColumn("spans", F.expr(SPANS_FROM_OFFSETS))
-        .drop("off")
-    )
 
 
 def mentions_of(tagged: DataFrame) -> DataFrame:
@@ -276,67 +225,15 @@ def mentions_of(tagged: DataFrame) -> DataFrame:
 
 # --- extract ----------------------------------------------------------------
 
-# consecutive mention pairs + inter-mention text, partition-local;
-# callers must filter size(spans) >= 2 first (sequence() would descend)
-_PAIRS_EXPR = """
-transform(sequence(1, size(spans) - 1), i -> struct(
-    spans[i-1] AS m1,
-    spans[i] AS m2,
-    substring(text, spans[i-1].end + 1,
-              spans[i].begin - spans[i-1].end) AS inter))
-"""
 
-
-def rel_triples(tagged: DataFrame, patterns_rows: list[dict]) -> DataFrame:
-    """A.6 pattern relations only (no uses_tool), fully partition-local
-    + codegen: consecutive mention pairs from a higher-order
-    `transform` over the spans array (no self-join); first matching
-    pattern (lowest pred lexicographically) as a WHEN chain of literal
-    regexes. Per-turn — independent of conversation grouping, which is
-    what lets the streaming path emit these per micro-batch."""
-    pats = sorted(patterns_rows, key=lambda p: p["pred"])
-
-    pairs = (
-        tagged.where(F.size("spans") >= 2)
-        .select(
-            "conv_id", "turn_idx", "ts",
-            F.explode(F.expr(_PAIRS_EXPR)).alias("p"),
-        )
-        .select(
-            "conv_id", "turn_idx", "ts",
-            F.col("p.m1").alias("m1"),
-            F.col("p.m2").alias("m2"),
-            F.col("p.inter").alias("inter"),
-        )
-    )
-    pred_col = F.lit(None).cast("string")
-    chain = None
-    for p in pats:
-        cond = (
-            (F.col("m1.etype") == p["subj_etype"])
-            & (F.col("m2.etype") == p["obj_etype"])
-            & F.col("inter").rlike(p["regex"])
-        )
-        chain = F.when(cond, p["pred"]) if chain is None else chain.when(
-            cond, p["pred"]
-        )
-    pred_col = chain.otherwise(F.lit(None)) if chain is not None else pred_col
-
-    return (
-        pairs.withColumn("pred", pred_col)
-        .where(F.col("pred").isNotNull())
-        .select(
-            "conv_id", "turn_idx",
-            F.col("m1.surface").alias("subj_surface"),
-            F.col("m1.etype").alias("subj_etype"),
-            "pred",
-            F.col("m2.surface").alias("obj_surface"),
-            F.col("m2.etype").alias("obj_etype"),
-            F.col("m1.begin").alias("subj_begin"),
-            F.col("m2.begin").alias("obj_begin"),
-            "ts",
-        )
-    )
+def pattern_triples_of(tagged: DataFrame) -> DataFrame:
+    """A.6 pattern relations: the candidate triples tag_extract
+    precomputed per turn, one row each. Per-turn, so independent of
+    conversation grouping — the streaming path emits these per
+    micro-batch."""
+    return tagged.select(
+        "conv_id", "turn_idx", "ts", F.explode("rel").alias("r")
+    ).select("conv_id", "turn_idx", "r.*", "ts")
 
 
 def conv_speakers_of(tagged: DataFrame) -> DataFrame:
@@ -364,7 +261,7 @@ def tool_turns_of(tagged: DataFrame) -> DataFrame:
 def tool_triples_from(tool_turns: DataFrame,
                       speakers: DataFrame) -> DataFrame:
     """uses_tool triples: each tool turn joined to its conversation's
-    speaker (same output schema as rel_triples)."""
+    speaker (same output schema as pattern_triples_of)."""
     sp = speakers.select(
         "conv_id", F.col("sp.surface").alias("speaker_surface")
     )
@@ -381,14 +278,11 @@ def tool_triples_from(tool_turns: DataFrame,
     )
 
 
-def extract(tagged: DataFrame, patterns_rows: list[dict]) -> DataFrame:
-    """A.6 relation extraction: pattern relations + uses_tool triples
-    (composition of rel_triples / conv_speakers_of / tool_triples_from
-    — the same parts the streaming path applies incrementally)."""
-    rel = rel_triples(tagged, patterns_rows)
-    tool = tool_triples_from(tool_turns_of(tagged),
-                             conv_speakers_of(tagged))
-    return rel.unionByName(tool)
+def triples_from_tagged(tagged: DataFrame) -> DataFrame:
+    """triples_raw from the fused checkpoint: pattern relations +
+    uses_tool triples (speaker = first PER mention per conv)."""
+    return pattern_triples_of(tagged).unionByName(
+        tool_triples_from(tool_turns_of(tagged), conv_speakers_of(tagged)))
 
 
 # --- link -------------------------------------------------------------------
@@ -588,20 +482,6 @@ def link_links(mentions: DataFrame, dict_df: DataFrame,
             .alias("score"),
         )
     )
-
-
-def link(mentions: DataFrame, dict_df: DataFrame):
-    """A.7: exact broadcast link + MinHash-LSH fuzzy candidates.
-
-    Returns (links, nodes, lsh_edges). In-memory composition for
-    tests/pipeline; the checkpointed runner sequences the three
-    (committing nodes and lsh_edges first and reading them back) so
-    the LSH self-join runs once, not once per dependent output.
-    """
-    nodes = link_nodes(mentions, dict_df)
-    lsh_edges = link_lsh_edges(nodes)
-    links = link_links(mentions, dict_df, lsh_edges)
-    return links, nodes, lsh_edges
 
 
 # --- canon ------------------------------------------------------------------
@@ -1052,12 +932,3 @@ def materialize_vertices(edges: DataFrame, cc_vertices: DataFrame,
         .join(degree, "entity_id", "left")
         .withColumn("degree", F.coalesce(F.col("degree"), F.lit(0)))
     )
-
-
-def materialize(triples_raw: DataFrame, dict_df: DataFrame,
-                entity_map: DataFrame, cc_vertices: DataFrame):
-    """Canonical edges + vertices (in-memory composition; the runner
-    sequences the two, reading edges back from its checkpoint)."""
-    edges = materialize_edges(triples_raw, dict_df, entity_map)
-    vertices = materialize_vertices(edges, cc_vertices, triples_raw)
-    return edges, vertices

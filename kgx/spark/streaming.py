@@ -3,9 +3,13 @@
 The north rule is batch (checkpoint-resumable spark-submit jobs), but
 the engine also exposes the incremental-ingest path as a real
 Structured Streaming job: new transcript parquet files landing in a
-directory are tagged with the same single-pass Viterbi UDF and rolled
-into watermarked tumbling-window mention counts. The same stage
-functions are reused — DataFrame code is identical for batch and
+directory are tagged with the same offsets tagger UDF
+(udfs.make_tagger_spans_udf + stages.tag_spans) the batch runner uses
+and rolled into watermarked tumbling-window mention counts. The
+incremental KG path (incremental_canon_updater) runs the batch
+runner's fused tag+relation pass (stages.tag_extract) per micro-batch
+and folds the same pattern/uses_tool triples into its logs. The stage
+functions are shared — DataFrame code is identical for batch and
 streaming in Spark; only source/sink differ.
 
 At production scale this is the "10^12 turns keep arriving" story:
@@ -94,10 +98,7 @@ def stream_transcripts_kafka(spark: SparkSession, bootstrap_servers: str,
 def stream_mentions(turns: DataFrame, tag_spans_udf) -> DataFrame:
     """Streaming tag+decode -> exploded mention rows (stateless: the
     pandas UDF runs per micro-batch exactly as in batch)."""
-    clean = turns.where(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
-    tagged = stages.tag_spans(clean, tag_spans_udf)
+    tagged = stages.tag_spans(stages.nonempty_text(turns), tag_spans_udf)
     return tagged.select(
         "conv_id", "turn_idx", "ts", F.explode("spans").alias("sp")
     ).select(
@@ -117,10 +118,7 @@ def windowed_mention_counts(turns: DataFrame, tag_spans_udf,
     Late turns beyond the watermark are dropped (documented at-most
     lateness); state for closed windows is reclaimed — this is what
     bounds memory on an unbounded stream."""
-    clean = turns.where(
-        F.col("text").isNotNull() & (F.length(F.trim(F.col("text"))) > 0)
-    )
-    tagged = stages.tag_spans(clean, tag_spans_udf)
+    tagged = stages.tag_spans(stages.nonempty_text(turns), tag_spans_udf)
     mentions = tagged.select(
         "ts", F.explode("spans").alias("sp")
     ).select("ts", F.col("sp.etype").alias("etype"))
@@ -301,14 +299,12 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
                 if periodic or over_fanin:
                     io.compact(spark, tbl)
 
-        clean = turns_batch.where(
-            F.col("text").isNotNull()
-            & (F.length(F.trim(F.col("text"))) > 0)
-        )
+        clean = stages.nonempty_text(turns_batch)
         if clean.isEmpty():
             finish()
             return
-        tagged = stages.tag_spans(clean, tag_spans_udf).localCheckpoint()
+        tagged = stages.tag_extract(
+            clean, tag_spans_udf, patterns_rows).localCheckpoint()
         mentions_batch = stages.mentions_of(tagged)
 
         def append_edge_delta() -> None:
@@ -318,10 +314,8 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
             # raw facts are logged (tool turns + the batch's speaker
             # partial — min-of-struct merges across batches); the
             # speaker join happens in the canonical_edges view.
-            triples = stages.rel_triples(tagged, patterns_rows or [])
-            delta = stages.edges_partial(
-                stages.triples_node_keyed(triples, dict_df)
-            )
+            delta = stages.edges_partial(stages.triples_node_keyed(
+                stages.pattern_triples_of(tagged), dict_df))
             io.append(delta, "edges_raw", agg_spec=EDGES_AGG_SPEC,
                       batch_tag=tag)
             io.append(stages.tool_turns_of(tagged), "tool_turns",

@@ -1,10 +1,15 @@
 """Arrow-vectorized pandas UDFs — the only Python on the executor hot
 path (SURVEY.md §2 Table B.10).
 
-`make_tagger_udf` is the iterator-of-series pattern: the frozen model
-is materialized once per Python worker (from a broadcast), then every
+The taggers follow the iterator-of-series pattern: the frozen model is
+materialized once per Python worker (from a broadcast), then every
 Arrow batch runs ONE numpy DP over the whole batch (batched CRF Viterbi
-— north star). Everything else is vectorized pandas/numpy.
+— north star). `make_tagger_spans_udf` is the pipeline's tagger (batch
+runner, streaming and harness): it returns span offsets as primitive
+int arrays, the cheapest Arrow crossing, and stages.tag_spans builds
+the span structs JVM-side. `make_tagger_udf` returns the raw
+per-character BIO tags, which only the conlleval paths need.
+Everything else is vectorized pandas/numpy.
 """
 
 from __future__ import annotations
@@ -27,7 +32,6 @@ from kgx.contract import (
 from kgx.tagcore import (
     LexiconMatcher,
     TaggerArtifact,
-    decode_bio,
     decode_bio_batch_arrays,
     make_batch_emitter,
     make_emitter,
@@ -69,31 +73,6 @@ def make_tagger_udf(spark: SparkSession, artifact: TaggerArtifact):
     return tag_turns
 
 
-def make_tagger_spans_udf(spark: SparkSession, artifact: TaggerArtifact):
-    """text -> entity spans in ONE Python pass (Viterbi + BIO decode
-    inside the same worker call). Tagging and decode as separate UDFs
-    would ship text across the Arrow boundary twice and tags once —
-    measured ~20% of the tag stage at 19.7M turns."""
-    bc = spark.sparkContext.broadcast(artifact.as_dict())
-
-    @F.pandas_udf(SPAN_TYPE)
-    def tag_spans(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        art = TaggerArtifact.from_dict(bc.value)
-        matcher = LexiconMatcher(art)
-        emit = make_emitter(art, matcher)
-        a = art.transitions
-        for texts in batches:
-            vals = texts.fillna("").tolist()
-            ems = [emit(t) for t in vals]
-            paths = viterbi_batch_sorted(ems, a, chunk=VITERBI_CHUNK)
-            yield pd.Series(
-                [decode_bio([TAGS[j] for j in p], t)
-                 for p, t in zip(paths, vals)]
-            )
-
-    return tag_spans
-
-
 OFFSETS_TYPE = T.StructType(
     [
         T.StructField("begins", T.ArrayType(T.IntegerType())),
@@ -102,12 +81,10 @@ OFFSETS_TYPE = T.StructType(
     ]
 )
 
-ETYPE_CODES = ("PER", "LOC", "ORG")
 
-
-def make_tagger_offsets_udf(spark: SparkSession, artifact: TaggerArtifact):
+def make_tagger_spans_udf(spark: SparkSession, artifact: TaggerArtifact):
     """text -> span OFFSETS as three primitive int arrays; surfaces and
-    the span structs are assembled JVM-side (stages.tag_spans_jvm).
+    the span structs are assembled JVM-side (stages.tag_spans).
 
     Crossing the Arrow boundary with list-of-struct spans (strings per
     span) measured ~2x the tagger's actual compute at 19.7M turns;
@@ -167,15 +144,6 @@ ELSE
       element_at(array('PER','LOC','ORG'), off.codes[i-1] + 1) AS etype))
 END
 """
-
-
-@F.pandas_udf(SPAN_TYPE)
-def decode_spans(texts: pd.Series, tags: pd.Series) -> pd.Series:
-    """(text, tags) -> array<struct> entity spans (A.4 IOB2 repair)."""
-    out = []
-    for text, tg in zip(texts.fillna(""), tags):
-        out.append(decode_bio(list(tg) if tg is not None else [], text))
-    return pd.Series(out)
 
 
 @F.pandas_udf(T.StringType())

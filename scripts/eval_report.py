@@ -9,7 +9,8 @@
    the Spark tagger UDF on each tier's char-BIO eval fixture.
 3. Per-table row counts, both engines.
 
-Writes EVAL.md + prints one JSON line per tier.
+Writes EVAL.md + prints one JSON line per tier; exits non-zero when
+any tier fails its P/R gate or its tagger diverges from the oracle's.
 
 Usage: python scripts/eval_report.py [--tiers t2,t2_zh]
 """
@@ -172,6 +173,17 @@ def evaluate(spark, tier: str,
     return out, md
 
 
+def failed_gates(outs: list[dict]) -> list[str]:
+    """One line per tier whose hard gate failed: triple P/R below the
+    bar, or a Spark tagger that diverged from the oracle tagger."""
+    return [
+        f"{o['tier']}/{o['artifact']}: pass={o['pass']}, "
+        f"tagger_diverged_sentences={o['tagger_diverged_sentences']}"
+        for o in outs
+        if not o["pass"] or o["tagger_diverged_sentences"] > 0
+    ]
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--tiers", default="t2,t2_zh,t2_noisy")
@@ -239,6 +251,9 @@ def main() -> None:
         f.write("\n".join(md))
     for out in outs:
         print(json.dumps(out))
+    failed = failed_gates(outs)
+    if failed:
+        sys.exit("gate failed: " + "; ".join(failed))
 
 
 if __name__ == "__main__":

@@ -42,7 +42,8 @@ def test_filter_and_projection_pushdown(spark):
 def test_ingest_scan_prunes_and_pushes(spark, t1_dir):
     from kgx.spark import stages
 
-    turns = stages.ingest(spark, f"{t1_dir}/transcripts.parquet", buckets=8)
+    turns = stages.ingest_bucketed(
+        spark, f"{t1_dir}/transcripts.parquet", buckets=8)
     plan = plan_of(turns.select("conv_id", "turn_idx"))
     assert "PushedFilters" in plan
     # the hygiene filter itself needs `text`, but nothing else leaks in
@@ -63,8 +64,9 @@ def test_link_uses_broadcast_join(spark, t1_dir):
         "surface string, etype string",
     )
     dict_df = spark.read.parquet(f"{t1_dir}/alias_dict.parquet")
-    links, nodes, lsh = stages.link(mentions, stages.dict_latest(dict_df))
-    plan = plan_of(links)
+    dict_df = stages.dict_latest(dict_df)
+    lsh = stages.link_lsh_edges(stages.link_nodes(mentions, dict_df))
+    plan = plan_of(stages.link_links(mentions, dict_df, lsh))
     assert "BroadcastHashJoin" in plan, plan
     del normalize_surface
 
@@ -81,20 +83,21 @@ def test_flagship_plan_broadcasts_dims(spark):
 def test_extract_is_shuffle_lean(spark, t1_dir):
     """Relation extraction from pre-bucketed turns: the pair/WHEN-chain
     path must not introduce a join for the pattern match (patterns are
-    constant-folded literals) — only the uses_tool speaker window and
-    the final union are allowed exchanges."""
+    constant-folded literals) — only the uses_tool speaker aggregate
+    and the final union are allowed exchanges."""
     from kgx.spark import stages
-    from kgx.spark.udfs import make_tagger_udf
+    from kgx.spark.udfs import make_tagger_spans_udf
     from kgx.tagcore import TaggerArtifact
 
-    tagger = make_tagger_udf(
+    tagger = make_tagger_spans_udf(
         spark, TaggerArtifact.load(f"{t1_dir}/tagger_v1.npz"))
-    turns = stages.ingest(spark, f"{t1_dir}/transcripts.parquet", buckets=8)
-    tagged = stages.tag(turns, tagger)
+    turns = stages.ingest_bucketed(
+        spark, f"{t1_dir}/transcripts.parquet", buckets=8)
     patterns = [r.asDict() for r in
                 spark.read.parquet(f"{t1_dir}/patterns.parquet").collect()]
-    rel_only = stages.extract(tagged, patterns)
-    plan = plan_of(rel_only)
+    triples = stages.triples_from_tagged(
+        stages.tag_extract(turns, tagger, patterns))
+    plan = plan_of(triples)
     # pattern WHEN-chain is in the plan as a CASE, not a join
     assert plan.count("SortMergeJoin") == 0, plan
 
@@ -204,7 +207,7 @@ def test_tag_distinct_plan_tags_above_the_distinct(spark, t1_dir):
     path's plan has no aggregate below the UDF — the two shapes are
     the contract."""
     from kgx.spark import stages
-    from kgx.spark.udfs import make_tagger_offsets_udf
+    from kgx.spark.udfs import make_tagger_spans_udf
     from kgx.tagcore import TaggerArtifact
 
     art = TaggerArtifact.load(f"{t1_dir}/tagger_v1.npz")
@@ -212,7 +215,7 @@ def test_tag_distinct_plan_tags_above_the_distinct(spark, t1_dir):
         f"{t1_dir}/patterns.parquet").collect()]
     turns = stages.ingest_bucketed(
         spark, f"{t1_dir}/transcripts.parquet", buckets=8)
-    udf = make_tagger_offsets_udf(spark, art)
+    udf = make_tagger_spans_udf(spark, art)
 
     plan = plan_of(stages.tag_extract_distinct(turns, udf, patterns))
     tree = plan.split("\n\n")[0]  # physical tree, not the detail dump

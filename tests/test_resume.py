@@ -222,3 +222,39 @@ def test_auto_tag_distinct_probe_picks_by_duplication(
         forced.run(upto="tag")
         assert (auto.io.manifest("tagged")["content_hash"]
                 == forced.io.manifest("tagged")["content_hash"]), tag
+
+
+@pytest.fixture(scope="module")
+def auto_run(spark, t1_dir, warehouses):
+    """One complete run in auto tag mode (probe on) on its own
+    warehouse."""
+    r = Runner(spark, t1_dir, str(warehouses / "auto"), "auto", buckets=8)
+    r.run()
+    return r
+
+
+def test_events_keyed_uniquely_by_stage_and_table(auto_run):
+    """Each (stage, table) gets one record: the dup-rate probe and the
+    CC loop have keys of their own, distinct from the commits."""
+    keys = [(e["stage"], e["table"]) for e in auto_run.events
+            if not e.get("skipped")]
+    assert len(keys) == len(set(keys)), keys
+    assert ("tag", "tag_probe") in keys and ("canon", "cc_loop") in keys
+
+
+def test_rerun_of_complete_run_skips_probe_and_cc_loop(spark, t1_dir,
+                                                       auto_run):
+    """A rerun on a complete warehouse does none of a finished stage's
+    eager work — no dup-rate probe, no CC loop — and leaves every
+    table's content hash as it was."""
+    hashes = {e["table"]: e["content_hash"] for e in auto_run.events
+              if e.get("content_hash")}
+    again = Runner(spark, t1_dir, auto_run.io.warehouse, "again",
+                   buckets=8)
+    again.run()
+    assert not [e for e in again.events if e.get("probe")], again.events
+    assert not [e for e in again.events
+                if e["table"] == "cc_loop" and not e.get("skipped")]
+    assert all(e.get("skipped") for e in again.events), again.events
+    assert {t: again.io.manifest(t)["content_hash"]
+            for t in hashes} == hashes

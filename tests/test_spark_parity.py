@@ -1,6 +1,7 @@
-"""Spark-parity tests (SURVEY.md §5 tier 3): every pipeline stage's
-DataFrame output equals the sequential oracle's, order-insensitive,
-plus the per-turn text-equality invariant and the triple P/R gate."""
+"""Spark-parity tests (SURVEY.md §5 tier 3): every table of the
+checkpointed Runner (the path the CLI ships) equals the sequential
+oracle's, order-insensitive, plus the per-turn text-equality invariant
+and the triple P/R gate."""
 
 import pyarrow.parquet as pq
 import pytest
@@ -82,11 +83,12 @@ def test_triple_prf_gate(spark_out, golden):
 
 
 def test_text_equality_invariant(spark_out, t1_dir):
-    """input_hint invariant: per-turn text byte-identical in tagged."""
+    """input_hint invariant: per-turn text byte-identical in the turns
+    checkpoint (the last table that carries text)."""
     src = {(t["conv_id"], t["turn_idx"]): t["text"]
            for t in pq.read_table(f"{t1_dir}/transcripts.parquet").to_pylist()}
-    for r in spark_out["tagged"].select("conv_id", "turn_idx",
-                                        "text").collect():
+    for r in spark_out["turns"].select("conv_id", "turn_idx",
+                                       "text").collect():
         assert src[(r["conv_id"], r["turn_idx"])] == r["text"]
 
 
@@ -107,26 +109,6 @@ def test_sha16_spark_twin_matches_python(spark):
     for r in rows:
         assert r["p"] == prov_id(r["etype"], r["norm"])
         assert r["t"] == tool_id(r["norm"])
-
-
-def test_tag_spans_single_pass_equals_two_pass(spark, t1_dir):
-    """stages.tag_spans (one Arrow crossing) must equal stages.tag +
-    drop(tags) (two UDF passes) row for row."""
-    from pyspark.sql import functions as F
-
-    from kgx.spark import stages
-    from kgx.spark.udfs import make_tagger_spans_udf, make_tagger_udf
-    from kgx.tagcore import TaggerArtifact
-
-    art = TaggerArtifact.load(f"{t1_dir}/tagger_v1.npz")
-    turns = stages.ingest_bucketed(
-        spark, f"{t1_dir}/transcripts.parquet", buckets=8)
-    two = stages.tag(turns, make_tagger_udf(spark, art)).drop("tags")
-    one = stages.tag_spans(turns, make_tagger_spans_udf(spark, art))
-    cols = ["conv_id", "turn_idx", F.to_json("spans").alias("spans_json")]
-    a = two.select(*cols)
-    b = one.select(*cols)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_distribution_invariance_bucket_counts(spark, t1_dir):
@@ -154,62 +136,6 @@ def test_distribution_invariance_bucket_counts(spark, t1_dir):
         assert bb.exceptAll(aa).count() == 0, tbl
 
 
-def test_tag_spans_jvm_equals_python_spans(spark, t1_dir):
-    """JVM-assembled spans (offsets UDF + substring/transform) must be
-    identical to the Python-assembled spans."""
-    from pyspark.sql import functions as F
-
-    from kgx.spark import stages
-    from kgx.spark.udfs import (
-        make_tagger_offsets_udf,
-        make_tagger_spans_udf,
-    )
-    from kgx.tagcore import TaggerArtifact
-
-    art = TaggerArtifact.load(f"{t1_dir}/tagger_v1.npz")
-    turns = stages.ingest_bucketed(
-        spark, f"{t1_dir}/transcripts.parquet", buckets=8)
-    py = stages.tag_spans(turns, make_tagger_spans_udf(spark, art))
-    jvm = stages.tag_spans_jvm(turns, make_tagger_offsets_udf(spark, art))
-    cols = ["conv_id", "turn_idx", F.to_json("spans").alias("sj")]
-    a, b = py.select(*cols), jvm.select(*cols)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert py.schema["spans"] == jvm.schema["spans"]
-
-
-def test_fused_tag_extract_equals_classic(spark, t1_dir):
-    """The fused checkpoint (spans + precomputed rel, no text) must
-    yield exactly the triples_raw of the classic two-stage path."""
-    from pyspark.sql import functions as F
-
-    from kgx.spark import stages
-    from kgx.spark.udfs import make_tagger_offsets_udf, make_tagger_udf
-    from kgx.tagcore import TaggerArtifact
-
-    art = TaggerArtifact.load(f"{t1_dir}/tagger_v1.npz")
-    patterns = [r.asDict() for r in
-                spark.read.parquet(f"{t1_dir}/patterns.parquet").collect()]
-    turns = stages.ingest_bucketed(
-        spark, f"{t1_dir}/transcripts.parquet", buckets=8)
-
-    classic = stages.extract(
-        stages.tag(turns, make_tagger_udf(spark, art)), patterns)
-    fused_ck = stages.tag_extract(
-        turns, make_tagger_offsets_udf(spark, art), patterns)
-    assert "text" not in fused_ck.columns
-    fused = stages.triples_from_tagged(fused_ck)
-
-    assert sorted(classic.columns) == sorted(fused.columns)
-    a = classic.select(*sorted(classic.columns))
-    b = fused.select(*sorted(classic.columns))
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # mentions path unchanged on the fused checkpoint
-    m = stages.mentions_of(fused_ck)
-    m2 = stages.mentions_of(stages.tag(turns, make_tagger_udf(spark, art)))
-    assert m.exceptAll(m2).count() == 0 and m2.exceptAll(m).count() == 0
-    del F
-
-
 def test_tag_extract_distinct_equals_default(spark, t1_dir):
     """Content-addressed tagging (tag distinct texts, join back) must
     be row-for-row identical to the default per-turn path — spans/rel
@@ -220,7 +146,7 @@ def test_tag_extract_distinct_equals_default(spark, t1_dir):
     from pyspark.sql import functions as F
 
     from kgx.spark import stages
-    from kgx.spark.udfs import make_tagger_offsets_udf
+    from kgx.spark.udfs import make_tagger_spans_udf
     from kgx.tagcore import TaggerArtifact
 
     art = TaggerArtifact.load(f"{t1_dir}/tagger_v1.npz")
@@ -233,9 +159,9 @@ def test_tag_extract_distinct_equals_default(spark, t1_dir):
     assert n_distinct < n_turns  # the fixture really has duplicates
 
     base = stages.tag_extract(
-        turns, make_tagger_offsets_udf(spark, art), patterns)
+        turns, make_tagger_spans_udf(spark, art), patterns)
     ca = stages.tag_extract_distinct(
-        turns, make_tagger_offsets_udf(spark, art), patterns)
+        turns, make_tagger_spans_udf(spark, art), patterns)
     assert ca.columns == base.columns
     cols = [c for c in base.columns if c not in ("spans", "rel")] + [
         F.to_json("spans").alias("sj"), F.to_json("rel").alias("rj")]
