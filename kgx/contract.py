@@ -70,7 +70,7 @@ def normalize(surface: str) -> str:
     return unicodedata.normalize("NFKC", surface).casefold().strip()
 
 
-# --- A.7 MinHash / LSH ------------------------------------------------------
+# --- A.7 similarity threshold; MinHash / LSH (dedup harness, benchmark) -----
 
 MINHASH_PERMS = 64
 LSH_BANDS = 16

@@ -2680,7 +2680,7 @@ def stream_windowed_counts(spark, sf):
 def stream_incremental_canon(spark, sf):
     """Streaming incremental link/canon/edges (B.9): fixture
     transcripts arrive as TWO files -> two micro-batches; each batch's
-    new nodes are diffed in, LSH edges generated new-x-all only,
+    new nodes are diffed in, similarity edges generated new-x-all only,
     connected components solved on the condensed (batch-sized) graph,
     label/map/vertex DELTAS appended to keyed logs, and the batch's
     triples folded into the additive node-keyed edge log. Returns the

@@ -10,7 +10,7 @@ Contract refinements pinned here (both implementations follow them):
     conversation by (turn_idx, begin); conversations without a PER
     mention emit no uses_tool triples. uses_tool provenance begins = -1.
   * A.7 linking uses the LATEST alias_dict version per (etype, alias)
-    (max dict_ts); LSH candidate pairs are restricted to equal etype.
+    (max dict_ts); similarity pairs are restricted to equal etype.
   * A.8 canonical member ordering prefers dictionary nodes over
     provisional ones: min by (is_prov, etype, norm, node_id). Canonical
     name = dict canonical_name for dict nodes, normalized surface for
@@ -27,9 +27,7 @@ import pyarrow.parquet as pq
 
 from kgx.contract import (
     JACCARD_TAU,
-    band_keys,
     jaccard,
-    minhash_signature,
     normalize,
     prov_id,
     tool_id,
@@ -207,33 +205,22 @@ def link_and_canonicalize(mentions: list[dict], alias_rows: list[dict]):
                     "is_prov": 1,
                 }
 
-    # MinHash-LSH over all node rows, same-etype buckets.
-    # NOTE: the oracle emits the FULL within-bucket clique (the A.7
-    # contract); the production stage caps buckets at MAX_LSH_BUCKET
-    # and star-links (kgx/spark/lsh.py) — a deliberate scale
-    # approximation. Parity between the two therefore presupposes
-    # every fixture bucket stays within the cap, which
-    # tests/test_lsh_guard.py::test_fixture_band_buckets_within_guard_cap
-    # pins explicitly.
-    buckets: dict[tuple[str, str], list[tuple[str, str]]] = defaultdict(list)
-    for (etype, norm) in sorted(node_rows):
-        sig = minhash_signature(norm)
-        for bk in band_keys(sig):
-            buckets[(etype, bk)].append((etype, norm))
-    cand_pairs: set[tuple[tuple, tuple]] = set()
-    for members in buckets.values():
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                a, b = sorted((members[i], members[j]))
-                if a != b:
-                    cand_pairs.add((a, b))
+    # A.7 similarity edges: brute-force all pairs per etype with exact
+    # char-bigram Jaccard >= tau, ordered norm_a < norm_b (the Spark
+    # stage finds the same pairs with an exact prefix-filtered join,
+    # stages.similar_edges).
+    by_etype: dict[str, list[str]] = defaultdict(list)
+    for etype, norm in sorted(node_rows):
+        by_etype[etype].append(norm)
     verified: list[tuple[str, str, float]] = []
-    for a, b in sorted(cand_pairs):
-        sim = jaccard(a[1], b[1])
-        if sim >= JACCARD_TAU:
-            verified.append(
-                (node_rows[a]["node_id"], node_rows[b]["node_id"], sim)
-            )
+    for etype, norms in sorted(by_etype.items()):
+        for i, na in enumerate(norms):
+            for nb in norms[i + 1:]:
+                sim = jaccard(na, nb)
+                if sim >= JACCARD_TAU:
+                    verified.append((node_rows[(etype, na)]["node_id"],
+                                     node_rows[(etype, nb)]["node_id"],
+                                     sim))
 
     # connected components (union-find)
     uf = UnionFind()

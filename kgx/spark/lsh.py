@@ -1,14 +1,11 @@
-"""Shared LSH bucket-join guard (single implementation, two families).
+"""LSH bucket-join guard for the B.13 near-duplicate harness ops.
 
-Both LSH families in this repo block candidate pairs through banded
-bucket self-joins: the B.13 dedup/ANN harness ops (kgx/harness.py) and
-the production A.7 entity-linking stage (kgx/spark/stages.py
-link_lsh_edges + incremental).  An unguarded bucket of n members costs
-O(n^2) candidate pairs inside ONE Spark task — and a hot band bucket
-(thousands of near-identical aliases: transliterations,
-serial-numbered org names) is exactly what entity linking attracts at
-10^12-turn scale.  This module is the one place the guard lives so the
-two families cannot drift (SURVEY.md B.13; round-3 review items 1+7).
+The dedup/ANN harness ops (kgx/harness.py) block candidate pairs
+through banded bucket self-joins. An unguarded bucket of n members
+costs O(n^2) candidate pairs inside ONE Spark task, and a hot band
+bucket (thousands of near-identical documents) is exactly what a
+near-dup corpus produces at scale. Entity linking does not use this
+module: it runs an exact prefix-filtered join (stages.similar_edges).
 
 Guard semantics (shared by every caller):
   * buckets with <= cap members emit the full within-bucket clique,
@@ -25,9 +22,8 @@ direct pair.  For near-identical clusters — the case that actually
 produces oversized buckets — the representative is within threshold of
 everyone and connectivity is preserved; heterogeneous oversized
 buckets trade that tail of recall for linear cost.  Downstream
-verifies (exact Jaccard in linking, exact-sim checks in dedup) still
-filter every emitted pair, so the guard can only remove candidates,
-never admit false ones.
+exact-similarity checks still filter every emitted pair, so the guard
+can only remove candidates, never admit false ones.
 """
 
 from __future__ import annotations
@@ -68,7 +64,7 @@ def guarded_bucket_pairs(
     candidate pair with columns ``a_<c>`` / ``b_<c>`` for each member
     column, satisfying a strict order on the FIRST member column
     (``a_<first> < b_<first>`` — members whose first column ties are
-    never paired, matching both call sites' pre-guard semantics).
+    never paired).
 
     Buckets with <= `cap` members emit the full clique via an
     equi self-join; larger buckets star-link every member to the
@@ -98,111 +94,3 @@ def guarded_bucket_pairs(
         & (F.col(f"m.{first}") > F.col(f"rep.{first}"))
     ).select(F.col("rep").alias("ma"), F.col("m").alias("mb"))
     return _flatten(cand_small.unionByName(cand_big), member_cols)
-
-
-def guarded_bucket_pairs_incremental(
-    new_banded: DataFrame,
-    all_banded: DataFrame,
-    bucket_cols: list[str],
-    member_cols: list[str],
-    cap: int = MAX_LSH_BUCKET,
-) -> DataFrame:
-    """Candidate pairs touching at least one NEW member, with
-    per-batch, per-bucket cost O(|new members| * cap).
-
-    `all_banded` must be a superset of `new_banded` (the accumulated
-    member set INCLUDING this batch).  Output shape and ordering match
-    :func:`guarded_bucket_pairs`.  The accumulated side is scanned
-    ONCE, filtered by broadcast semi-join to the buckets the batch
-    touches, and materialized — so the pair join, the size aggregate,
-    and the representative lookup all run over the batch's bucket
-    working set, not the full accumulated table.
-
-    Buckets whose accumulated size is <= `cap` emit new x all pairs
-    (strictly ordered on the first member column, order-normalized) —
-    the union over batches reproduces exactly the clique the batch
-    guard emits, which is what the batch==stream equality suite pins.
-    Larger buckets emit stars:
-      * if the bucket's representative is unchanged by this batch
-        (it is an OLD member), a star pair (representative, new
-        member) per new member;
-      * if a NEW member became the representative, a star pair
-        (representative, member) for EVERY member of the bucket —
-        linear in bucket size, paid only on representative-change
-        batches.
-    Consequently every member of an oversized bucket is at some batch
-    paired directly with the bucket's FINAL representative (when it
-    arrived, or when the final representative arrived after it), so
-    the union over batches is a SUPERSET of the batch guard's star
-    set: at the guard level the components are identical (pinned by
-    the oversized-bucket property test), and after a downstream
-    similarity verify the incremental path merges everything the
-    batch path merges (it may additionally merge via
-    interim-representative pairs that also pass the verify — a
-    true-similarity edge either way; heterogeneous oversized buckets
-    already concede this recall/precision tail in BOTH paths, see the
-    module docstring).
-    """
-    first = member_cols[0]
-    m = F.struct(*[F.col(c) for c in member_cols])
-    new_m = (
-        new_banded.select(*bucket_cols, m.alias("m")).localCheckpoint()
-    )
-    # one scan of the accumulated side: restrict it to the buckets
-    # this batch touches (broadcast semi-join — the new side is
-    # batch-sized) and materialize the touched membership once; every
-    # aggregate and join below is then proportional to the batch's
-    # bucket working set, never to the full accumulated table
-    all_m = (
-        all_banded.select(*bucket_cols, m.alias("m"))
-        .join(
-            F.broadcast(new_m.select(*bucket_cols).distinct()),
-            bucket_cols,
-            "left_semi",
-        )
-        .localCheckpoint()
-    )
-    # flag rows of the all side that belong to this batch, then one
-    # aggregate computes size, representative, and the min OLD member
-    allf = all_m.join(
-        F.broadcast(new_m.withColumn("_new", F.lit(1))),
-        [*bucket_cols, "m"],
-        "left",
-    )
-    sizes = allf.groupBy(*bucket_cols).agg(
-        F.count("*").alias("n"),
-        F.min("m").alias("rep"),
-        F.min(F.when(F.col("_new").isNull(), F.col("m"))).alias(
-            "rep_old"
-        ),
-    )
-    new_s = new_m.join(sizes, bucket_cols)
-    all_s = all_m.join(sizes, bucket_cols)
-    a = new_s.where(F.col("n") <= cap).alias("a")
-    b = all_s.where(F.col("n") <= cap).alias("b")
-    swap = F.col(f"a.m.{first}") > F.col(f"b.m.{first}")
-    cand_small = a.join(
-        b,
-        _bucket_eq("a", "b", bucket_cols)
-        & (F.col(f"a.m.{first}") != F.col(f"b.m.{first}")),
-    ).select(
-        F.when(swap, F.col("b.m")).otherwise(F.col("a.m")).alias("ma"),
-        F.when(swap, F.col("a.m")).otherwise(F.col("b.m")).alias("mb"),
-    )
-    # a new member became the representative iff rep is not the min
-    # OLD member (rep_old null = the whole bucket arrived this batch)
-    rep_is_new = F.col("rep_old").isNull() | (
-        F.col("rep") != F.col("rep_old")
-    )
-    star_sel = [F.col("rep").alias("ma"), F.col("m").alias("mb")]
-    not_rep = F.col(f"m.{first}") != F.col(f"rep.{first}")
-    stars_all = all_s.where(
-        (F.col("n") > cap) & rep_is_new & not_rep
-    ).select(*star_sel)
-    stars_new = new_s.where(
-        (F.col("n") > cap) & ~rep_is_new & not_rep
-    ).select(*star_sel)
-    return _flatten(
-        cand_small.unionByName(stars_all).unionByName(stars_new),
-        member_cols,
-    )

@@ -67,6 +67,12 @@ TAG_DISTINCT_AUTO_MIN_RATE_LEXICON = 15.0
 TAG_DISTINCT_AUTO_MIN_RATE_LEARNED = 1.2
 _LEXICON_KINDS = {"lexicon_crf", "lexicon_ctx_crf"}
 
+# The canon stage commits connected-components state to the warehouse
+# every this many iterations. That commit is the durable cut a rerun
+# resumes from; the loop's per-iteration localCheckpoint only cuts
+# lineage (executor-local, lost with the executor).
+CC_CHECKPOINT_EVERY = 5
+
 METRICS_SCHEMA = (
     "run_id string, stage string, table string, partition_id int, "
     "rows bigint, bytes bigint, content_hash string"
@@ -119,7 +125,6 @@ class Runner:
     def __init__(self, spark: SparkSession, input_dir: str, out: str,
                  run_id: str, buckets: int = 32,
                  artifact: str = "tagger_v1.npz",
-                 cc_checkpoint_every: int = 5,
                  tag_distinct: bool | None = None):
         self.spark = spark
         self.input_dir = input_dir
@@ -127,9 +132,6 @@ class Runner:
         self.run_id = run_id
         self.buckets = buckets
         self.artifact_path = os.path.join(input_dir, artifact)
-        # reliable (warehouse-backed) CC state commits every k
-        # iterations; 0 disables (sandbox-fast, executor-local only)
-        self.cc_checkpoint_every = cc_checkpoint_every
         # content-addressed tagging: tag distinct texts, join back
         # (value-identical output/content hashes; wins when the corpus
         # repeats turns). True/False force the mode; None (default)
@@ -342,12 +344,16 @@ class Runner:
         mentions = self.read("mentions")
         dict_df = stages.dict_latest(
             self.spark.read.parquet(self.in_path("alias_dict")))
+
+        def lsh_edges() -> DataFrame:
+            nodes = self.read("nodes")
+            return stages.similar_edges(nodes, nodes)
+
         self._stage(
             "link",
             {
                 "nodes": lambda: stages.link_nodes(mentions, dict_df),
-                "lsh_edges": lambda: stages.link_lsh_edges(
-                    self.read("nodes")),
+                "lsh_edges": lsh_edges,
                 "links": lambda: stages.link_links(
                     mentions, dict_df, self.read("lsh_edges")),
             },
@@ -365,9 +371,8 @@ class Runner:
             t_cc = time.time()
             labels = stages.connected_components(
                 self.read("nodes"), self.read("lsh_edges"),
-                state_io=self.io if self.cc_checkpoint_every else None,
-                state_fp=self._fingerprint(inputs),
-                checkpoint_every=self.cc_checkpoint_every)
+                state_io=self.io, state_fp=self._fingerprint(inputs),
+                checkpoint_every=CC_CHECKPOINT_EVERY)
             self.events.append(
                 {"stage": "canon", "table": "cc_loop", "rows": None,
                  "partitions": None, "content_hash": None,
@@ -411,10 +416,6 @@ def main(argv=None) -> dict:
                     help="tagger checkpoint file inside --input (the "
                     "pluggable model slot: tagger_v1.npz lexicon+CRF, "
                     "tagger_v2.npz context-cue-weighted)")
-    ap.add_argument("--cc-checkpoint-every", type=int, default=5,
-                    help="commit CC iteration state to the warehouse "
-                    "every N iterations (cluster-safe resume; 0 = "
-                    "executor-local lineage cuts only)")
     ap.add_argument("--stop-after", default=None,
                     help="simulate failure after this stage (resume test)")
     ap.add_argument("--cores", type=int, default=None)
@@ -445,7 +446,6 @@ def main(argv=None) -> dict:
     t0 = time.time()
     runner = Runner(spark, args.input, args.out, args.run_id,
                     buckets=args.buckets, artifact=args.artifact,
-                    cc_checkpoint_every=args.cc_checkpoint_every,
                     tag_distinct=args.tag_distinct)
     events = runner.run(upto=args.stop_after, only=only)
     report = {

@@ -3,7 +3,8 @@
     transcripts -ingest_bucketed-> turns
     turns -tag_extract-> tagged (spans + candidate rel, no text)
     tagged -mentions_of / triples_from_tagged-> mentions, triples_raw
-    mentions + alias_dict -link_*-> nodes, lsh_edges, links
+    mentions + alias_dict -link_nodes / similar_edges / link_links->
+        nodes, lsh_edges, links
     nodes + lsh_edges -connected_components/canonicalize->
         entity_map, cc_vertices
     triples_raw + entity_map -materialize_*-> edges, vertices
@@ -16,8 +17,13 @@ Scale notes (SURVEY.md §4): one explicit repartition by conv_id hash up
 front; the tag+extract path is partition-local after it (groupBy keys
 are prefixed by conv_id). Dimension joins (alias_dict, patterns)
 broadcast. Pattern matching is a constant-folded WHEN chain of literal
-regexes (whole-stage codegen), not a Python loop. The CC loop
-localCheckpoints every iteration to cut lineage.
+regexes (whole-stage codegen), not a Python loop. Similarity linking
+(similar_edges) is one exact prefix-filtered equi-join over the
+distinct (etype, norm) nodes; a streaming batch that adds nodes runs
+it with its new nodes against the accumulated node log (one scan and
+one bigram-frequency aggregate of that log). The CC loop
+localCheckpoints every iteration to cut lineage; the durable cut is
+the optional warehouse commit of its state (connected_components).
 """
 
 from __future__ import annotations
@@ -26,16 +32,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kgx.contract import JACCARD_TAU, SEP
-from kgx.spark import lsh as lsh_guard
-from kgx.spark.lsh import (
-    guarded_bucket_pairs,
-    guarded_bucket_pairs_incremental,
-)
 from kgx.spark.udfs import (
     SPANS_FROM_OFFSETS,
-    band_key_cols,
+    bigram_arr_col,
     jaccard_col,
-    minhash_sig,
     normalize_surface,
 )
 
@@ -337,35 +337,85 @@ def link_nodes(mentions: DataFrame, dict_df: DataFrame) -> DataFrame:
     return dict_nodes.unionByName(prov_nodes)
 
 
-def banded_nodes(nodes: DataFrame) -> DataFrame:
-    """(etype, norm, node_id) -> one row per LSH band bucket key.
+def similar_edges(new: DataFrame, nodes: DataFrame) -> DataFrame:
+    """A.7 similarity edges: verified (src, dst, sim) for every
+    same-etype node pair whose exact char-bigram Jaccard is >=
+    JACCARD_TAU and that has at least one endpoint in `new`. `nodes`
+    must contain `new`. Batch linking passes the full node table as
+    both; the streaming path passes a batch's new nodes and the
+    accumulated node log, so each pair is found in the batch where its
+    later endpoint arrives and the union over batches IS the batch
+    edge set.
 
-    Band keys are a pure function of `norm`, so for IMMUTABLE node
-    rows they can be computed once and stored (the streaming path
-    keeps them in the node_bands log — per batch the MinHash pandas
-    UDF then runs over the NEW nodes only, while the accumulated
-    side is a plain parquet scan of stored bands)."""
-    return (
-        nodes.select("etype", "norm", "node_id")
-        .withColumn("sig", minhash_sig("norm"))
+    Candidates come from a prefix-filtered set-similarity join, which
+    is exact (no true pair is missed), unlike MinHash blocking:
+      * tokens are the bigram sets jaccard_col verifies, ordered per
+        etype by (document frequency over `nodes`, token);
+      * each node keeps its first n - floor(tau * n) + 1 tokens, n the
+        size of its bigram set. Two sets with Jaccard >= tau share a
+        token within their first n - ceil(tau * n) + 1, and floor
+        never exceeds ceil, so float rounding can only add candidates;
+      * candidates are an equi-join on (etype, token) of the new
+        side's prefixes with the accumulated side's, ordered so
+        norm_a < norm_b, then verified by _verify_pairs.
+    Everything runs in the JVM (no Python UDF).
+
+    Trade-offs: a cluster of k mutually similar aliases yields all of
+    its true edges, up to k(k-1)/2, where MinHash bucketing used to
+    star-link a hot bucket. Nodes are distinct (etype, norm) aliases,
+    bounded by vocabulary, not by corpus size (at most 310 on the test
+    fixtures). A call scans `nodes`
+    once: its bigrams are shuffled once for the frequency count (a
+    window) and both join sides reuse that exchange, so a stream batch
+    that adds nodes pays one pass over the accumulated node log."""
+    toks = nodes.select(
+        "etype", "norm", "node_id",
+        F.explode(bigram_arr_col("norm")).alias("tok"),
+    ).withColumn(
+        "df", F.count("*").over(Window.partitionBy("etype", "tok")))
+    ranked = F.col("ranked")
+    n = F.size(ranked)
+    prefix = (
+        toks.groupBy("etype", "norm", "node_id")
+        .agg(F.sort_array(F.collect_list(F.struct("df", "tok")))
+             .alias("ranked"))
         .select(
             "etype", "norm", "node_id",
-            F.explode(band_key_cols()).alias("bk"),
+            F.explode(F.slice(
+                ranked, 1, n - F.floor(F.lit(JACCARD_TAU) * n) + 1
+            )).alias("t"),
         )
+        .select("etype", "norm", "node_id", F.col("t.tok").alias("tok"))
     )
+    a = prefix.join(new.select("etype", "norm"), ["etype", "norm"],
+                    "left_semi").alias("a")
+    b = prefix.alias("b")
+    # a.norm != b.norm, so ordering the (norm, node_id) structs orders
+    # each pair by norm
+    ma = F.struct(F.col("a.norm"), F.col("a.node_id"))
+    mb = F.struct(F.col("b.norm"), F.col("b.node_id"))
+    lo, hi = F.least(ma, mb), F.greatest(ma, mb)
+    pairs = a.join(
+        b,
+        (F.col("a.etype") == F.col("b.etype"))
+        & (F.col("a.tok") == F.col("b.tok"))
+        & (F.col("a.norm") != F.col("b.norm")),
+    ).select(
+        lo["node_id"].alias("src"),
+        hi["node_id"].alias("dst"),
+        lo["norm"].alias("norm_a"),
+        hi["norm"].alias("norm_b"),
+    )
+    return _verify_pairs(pairs)
 
 
 def _verify_pairs(pairs: DataFrame) -> DataFrame:
-    """Guarded candidate pairs -> verified (src, dst, sim) edges via
-    exact bigram Jaccard (A.7 verify step, pure JVM)."""
-    cand = pairs.select(
-        F.col("a_node_id").alias("src"),
-        F.col("b_node_id").alias("dst"),
-        F.col("a_norm").alias("norm_a"),
-        F.col("b_norm").alias("norm_b"),
-    ).dropDuplicates(["src", "dst", "norm_a", "norm_b"])
+    """Candidate (src, dst, norm_a, norm_b) pairs -> verified
+    (src, dst, sim) edges via exact bigram Jaccard (A.7 verify step,
+    pure JVM)."""
     return (
-        cand.withColumn("sim", jaccard_col("norm_a", "norm_b"))
+        pairs.dropDuplicates(["src", "dst", "norm_a", "norm_b"])
+        .withColumn("sim", jaccard_col("norm_a", "norm_b"))
         .where(F.col("sim") >= F.lit(JACCARD_TAU))
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst", "sim")
@@ -373,77 +423,12 @@ def _verify_pairs(pairs: DataFrame) -> DataFrame:
     )
 
 
-def link_lsh_edges(nodes: DataFrame,
-                   cap: int = lsh_guard.MAX_LSH_BUCKET) -> DataFrame:
-    """MinHash-LSH blocking over distinct (etype, norm) node rows,
-    verified by exact bigram Jaccard (A.7).
-
-    Candidate pairs go through the SHARED bucket-size guard
-    (kgx/spark/lsh.py — the same implementation the B.13 dedup harness
-    uses): a band bucket with more than MAX_LSH_BUCKET members — a
-    hot cluster of near-identical aliases, exactly what entity linking
-    attracts at scale — is star-linked to its min-norm member instead
-    of exploding into an O(n^2) within-bucket clique join, keeping the
-    cluster connected for connected-components at linear cost."""
-    return _verify_pairs(
-        guarded_bucket_pairs(
-            banded_nodes(nodes),
-            bucket_cols=["etype", "bk"],
-            member_cols=["norm", "node_id"],
-            cap=cap,
-        )
-    )
-
-
-def link_lsh_edges_incremental(
-        new_nodes: DataFrame, all_nodes: DataFrame,
-        cap: int = lsh_guard.MAX_LSH_BUCKET) -> DataFrame:
-    """Incremental LSH edges: candidate pairs touching at least one
-    NEW node (new x all banded equi-join — the cost is proportional to
-    the micro-batch, not the accumulated node table), verified by the
-    same exact bigram Jaccard. Pairs are normalized to the batch
-    convention (norm_a < norm_b), so for buckets within the shared
-    guard's cap the union with the previous edge table reproduces
-    exactly the edge set a cold batch run would build (asserted in
-    tests/test_streaming_canon.py). Buckets past MAX_LSH_BUCKET
-    star-link so that every member is at some batch paired with the
-    bucket's FINAL representative (kgx/spark/lsh.py): the verified
-    union is a SUPERSET of the batch guard's verified star edges —
-    every merge the batch path makes, the stream makes too; a
-    heterogeneous oversized bucket may additionally merge via an
-    interim representative whose similarity also passes the Jaccard
-    verify (a true-similarity edge; both paths already trade exact
-    clique semantics in oversized buckets — guard-level components
-    pinned in tests/test_lsh_guard.py)."""
-    return link_lsh_edges_incremental_banded(
-        banded_nodes(new_nodes), banded_nodes(all_nodes), cap=cap
-    )
-
-
-def link_lsh_edges_incremental_banded(
-        new_banded: DataFrame, all_banded: DataFrame,
-        cap: int = lsh_guard.MAX_LSH_BUCKET) -> DataFrame:
-    """link_lsh_edges_incremental over PRE-BANDED frames
-    (etype, norm, node_id, bk) — the streaming path stores bands in
-    the node_bands log when a node first arrives (bands are a pure
-    function of the immutable norm), so the accumulated side here is
-    a plain parquet scan with no per-batch MinHash recompute."""
-    return _verify_pairs(
-        guarded_bucket_pairs_incremental(
-            new_banded,
-            all_banded,
-            bucket_cols=["etype", "bk"],
-            member_cols=["norm", "node_id"],
-            cap=cap,
-        )
-    )
-
-
 def link_links(mentions: DataFrame, dict_df: DataFrame,
                lsh_edges: DataFrame) -> DataFrame:
-    """Per-mention link rows (exact broadcast hit, LSH-supported, or
-    provisional). Pass a materialized lsh_edges (read back from its
-    checkpoint) so its self-join is not recomputed."""
+    """Per-mention link rows: exact broadcast hit, similarity-supported
+    (method "lsh", the contract's name) or provisional. Pass a
+    materialized lsh_edges (read back from its checkpoint) so the
+    similarity join is not recomputed."""
     ment = mentions.withColumn("norm", normalize_surface("surface"))
     dic = _dict_cols(dict_df)
     exact = ment.join(
@@ -461,7 +446,7 @@ def link_links(mentions: DataFrame, dict_df: DataFrame,
         .groupBy("nid")
         .agg(F.max("sim").alias("best_sim"))
     )
-    # node_sim is DATA-DERIVED (one row per LSH-edge endpoint) — it
+    # node_sim is DATA-DERIVED (one row per similarity-edge endpoint) — it
     # grows with the corpus, so a broadcast hint would OOM the driver
     # at scale; leave the strategy to AQE (which will still broadcast
     # it when it happens to be small).
@@ -493,8 +478,7 @@ CC_STATE_TABLE = "cc_state"
 def connected_components(nodes: DataFrame, lsh_edges: DataFrame,
                          state_io=None, state_fp: str | None = None,
                          checkpoint_every: int = 5,
-                         max_iters: int = CC_MAX_ITERS,
-                         labels0: DataFrame | None = None) -> DataFrame:
+                         max_iters: int = CC_MAX_ITERS) -> DataFrame:
     """Min-label propagation + pointer doubling over iterative
     DataFrame joins; localCheckpoint each iteration cuts the lineage
     (SURVEY §4). Returns (node_id, label).
@@ -506,21 +490,15 @@ def connected_components(nodes: DataFrame, lsh_edges: DataFrame,
     plain propagation would need 10^5. Labels are always existing
     node ids (min over ids), so the jump lookup always hits.
 
-    Reliability: localCheckpoint is EXECUTOR-LOCAL storage — on a real
-    cluster an executor loss mid-loop makes the lineage unrecoverable.
-    Pass `state_io` (a TableIO) to additionally commit the label table
-    through the warehouse every `checkpoint_every` iterations, tagged
-    with `state_fp`; a rerun with the same (io, fp) RESUMES from the
-    last committed iteration (tested by killing a run mid-loop in
-    tests/test_cc_checkpoint.py). The warehouse write doubles as a
-    durable lineage cut for that iteration.
-
-    Incremental mode: pass `labels0` (node_id, label) to SEED the
-    propagation — e.g. the previous micro-batch's converged labels
-    plus identity rows for new nodes (streaming incremental canon).
-    Min-label propagation from any per-component-consistent seed
-    converges to the same min(node_id) per component as a cold start,
-    but in rounds proportional to the CHANGED region only."""
+    Durability: localCheckpoint only cuts lineage. It is
+    executor-local storage, so on a real cluster an executor loss
+    mid-loop makes the lineage unrecoverable. The durable cut is the
+    warehouse commit: pass `state_io` (a TableIO) to commit the label
+    table every `checkpoint_every` iterations, tagged with `state_fp`
+    (the Runner always does, every run.CC_CHECKPOINT_EVERY
+    iterations). A rerun with the same (io, fp) RESUMES from the last
+    committed iteration (tested by killing a run mid-loop in
+    tests/test_cc_checkpoint.py)."""
     spark = nodes.sparkSession
     start_iter = 0
     labels = None
@@ -529,8 +507,6 @@ def connected_components(nodes: DataFrame, lsh_edges: DataFrame,
         man = state_io.manifest(CC_STATE_TABLE)
         start_iter = int(man.get("cc_iter", -1)) + 1
         labels = state_io.read(spark, CC_STATE_TABLE)
-    if labels is None and labels0 is not None:
-        labels = labels0.select("node_id", "label").localCheckpoint()
     if labels is None:
         labels = (
             nodes.select("node_id")
@@ -644,8 +620,8 @@ def incremental_labels(labels_prev: DataFrame, new_nodes: DataFrame,
                        new_edges: DataFrame) -> DataFrame:
     """Condensed-graph incremental connected components: given the
     previous converged labels, a batch of NEW nodes, and new edges
-    (each touching at least one new node — the incremental-LSH
-    invariant), return the LABEL DELTA: rows only for existing nodes
+    (each touching at least one new node — what similar_edges returns
+    for a batch's new nodes), return the LABEL DELTA: rows only for existing nodes
     whose component merged plus the new nodes.
 
     The CC itself runs on the CONDENSED graph — nodes are previous

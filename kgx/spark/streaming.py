@@ -153,9 +153,8 @@ def run_available_now(query_df: DataFrame, checkpoint_dir: str,
     return q
 
 
-CANON_TABLES = ("nodes", "node_bands", "lsh_edges", "cc_labels",
-                "entity_map", "cc_vertices", "edges_raw", "tool_turns",
-                "conv_speakers")
+CANON_TABLES = ("nodes", "lsh_edges", "cc_labels", "entity_map",
+                "cc_vertices", "edges_raw", "tool_turns", "conv_speakers")
 
 EDGES_AGG_SPEC = {
     "keys": ["subj_node", "pred", "obj_node"],
@@ -229,12 +228,17 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
 
     * new (etype, norm) nodes are diffed against the node log and only
       the delta segment is appended (TableIO.append);
-    * LSH candidate edges are generated only for new x all and
-      appended (an edge needs >=1 new endpoint, so no old pair can
-      reappear — append needs no global dedup);
+    * similarity edges are generated only for pairs with a new
+      endpoint (stages.similar_edges(new, all)) and appended: no old
+      pair can reappear, so append needs no global dedup, and each
+      pair lands in the batch where its later endpoint arrives, so the
+      log equals the batch pipeline's lsh_edges by construction. The
+      one per-batch pass over accumulated state is this call's scan
+      of the node log (plus one bigram-frequency aggregate over it);
+      a batch that adds no node skips it;
     * connected components run on the CONDENSED graph — nodes = old
-      component labels + new node ids, edges = the new LSH edges with
-      endpoints mapped through the previous labels. An old label is
+      component labels + new node ids, edges = the new similarity
+      edges with endpoints mapped through the previous labels. An old label is
       the min id of its component, so the condensed component minimum
       IS the full-graph component minimum; the CC input is
       batch-sized, never corpus-sized;
@@ -336,12 +340,7 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
             io.append(nodes_b.dropDuplicates(["node_id", "norm"]),
                       "nodes", batch_tag=tag)
             nodes0 = io.read(spark, "nodes")
-            # band keys are computed ONCE per node (pure function of
-            # the immutable norm) and stored, so later batches scan
-            # them instead of re-running MinHash over accumulated state
-            io.append(stages.banded_nodes(nodes0), "node_bands",
-                      batch_tag=tag)
-            io.append(stages.link_lsh_edges(nodes0), "lsh_edges",
+            io.append(stages.similar_edges(nodes0, nodes0), "lsh_edges",
                       batch_tag=tag)
             edges0 = io.read(spark, "lsh_edges")
             labels = stages.connected_components(nodes0, edges0)
@@ -374,18 +373,7 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
             return
         io.append(new_only, "nodes", batch_tag=tag)
         nodes_all = io.read(spark, "nodes")
-        if io.manifest("node_bands") is None:
-            # one-time migration for a warehouse created before the
-            # stored-bands log: seed from the pre-batch node state
-            # (O(state) once; the segment carries this batch's tag so
-            # a crash rollback simply redoes the seeding)
-            io.append(stages.banded_nodes(nodes_prev), "node_bands",
-                      batch_tag=tag)
-        new_bands = stages.banded_nodes(new_only).localCheckpoint()
-        io.append(new_bands, "node_bands", batch_tag=tag)
-        lsh_new = stages.link_lsh_edges_incremental_banded(
-            new_bands, io.read(spark, "node_bands")
-        ).localCheckpoint()
+        lsh_new = stages.similar_edges(new_only, nodes_all).localCheckpoint()
         io.append(lsh_new.select("src", "dst", "sim"), "lsh_edges",
                   batch_tag=tag)
 

@@ -34,9 +34,7 @@ from kgx.tagcore import (
     TaggerArtifact,
     decode_bio_batch_arrays,
     make_batch_emitter,
-    make_emitter,
     viterbi_batch_padded,
-    viterbi_batch_sorted,
 )
 
 SPAN_TYPE = T.ArrayType(
@@ -54,6 +52,19 @@ VITERBI_CHUNK = 512  # bounds the padded DP tensor: 512 seqs x 512
 # steps x 7 tags x 4B (float32 model path) ~ 7.3MB per chunk
 
 
+def _viterbi_chunks(vals: list[str], emit_batch, a: np.ndarray):
+    """The Viterbi loop both tagger UDFs share: texts are decoded in
+    length-sorted chunks of VITERBI_CHUNK, so each padded DP tensor
+    wastes little work, and each chunk stays in padded-matrix form end
+    to end (emissions fill the DP tensor directly, no per-text numpy
+    allocations). Yields (input indices, padded paths, lens)."""
+    order = sorted(range(len(vals)), key=lambda i: len(vals[i]))
+    for lo in range(0, len(vals), VITERBI_CHUNK):
+        idx = order[lo : lo + VITERBI_CHUNK]
+        em, lens = emit_batch([vals[i] for i in idx])
+        yield idx, viterbi_batch_padded(em, lens, a), lens
+
+
 def make_tagger_udf(spark: SparkSession, artifact: TaggerArtifact):
     """text -> array<string> BIO tags; model loaded once per worker."""
     bc = spark.sparkContext.broadcast(artifact.as_dict())
@@ -61,14 +72,15 @@ def make_tagger_udf(spark: SparkSession, artifact: TaggerArtifact):
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def tag_turns(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         art = TaggerArtifact.from_dict(bc.value)
-        matcher = LexiconMatcher(art)
-        emit = make_emitter(art, matcher)
+        emit_batch = make_batch_emitter(art, LexiconMatcher(art))
         a = art.transitions
         for texts in batches:
             vals = texts.fillna("").tolist()
-            ems = [emit(t) for t in vals]
-            paths = viterbi_batch_sorted(ems, a, chunk=VITERBI_CHUNK)
-            yield pd.Series([[TAGS[j] for j in p] for p in paths])
+            tags: list = [None] * len(vals)
+            for idx, paths, lens in _viterbi_chunks(vals, emit_batch, a):
+                for k, i in enumerate(idx):
+                    tags[i] = [TAGS[j] for j in paths[k, : lens[k]].tolist()]
+            yield pd.Series(tags)
 
     return tag_turns
 
@@ -95,8 +107,7 @@ def make_tagger_spans_udf(spark: SparkSession, artifact: TaggerArtifact):
     @F.pandas_udf(OFFSETS_TYPE)
     def tag_offsets(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         art = TaggerArtifact.from_dict(bc.value)
-        matcher = LexiconMatcher(art)
-        emit_batch = make_batch_emitter(art, matcher)
+        emit_batch = make_batch_emitter(art, LexiconMatcher(art))
         a = art.transitions
         for texts in batches:
             vals = texts.fillna("").tolist()
@@ -104,17 +115,9 @@ def make_tagger_spans_udf(spark: SparkSession, artifact: TaggerArtifact):
             begins: list = [None] * nb
             ends: list = [None] * nb
             codes: list = [None] * nb
-            # length-sorted chunks (same rationale as
-            # viterbi_batch_sorted: tight padded DP tensors), but the
-            # whole chunk stays in padded-matrix form end to end —
-            # emissions fill the DP tensor directly and span offsets
-            # come out of one vectorized BIO pass, no per-text numpy
-            # allocations or per-span Python dicts.
-            order = sorted(range(nb), key=lambda i: len(vals[i]))
-            for lo in range(0, nb, VITERBI_CHUNK):
-                idx = order[lo : lo + VITERBI_CHUNK]
-                em, lens = emit_batch([vals[i] for i in idx])
-                paths = viterbi_batch_padded(em, lens, a)
+            # span offsets come out of one vectorized BIO pass per
+            # chunk, no per-span Python dicts
+            for idx, paths, lens in _viterbi_chunks(vals, emit_batch, a):
                 # int32 arrays, not lists: pandas/Arrow converts them
                 # ~1.6x faster and they match the array<int> schema
                 bs, es, cs = decode_bio_batch_arrays(paths, lens)
@@ -182,7 +185,7 @@ def bigram_arr_col(c: str):
 
 def jaccard_col(a: str, b: str):
     """Exact char-bigram Jaccard as a pure JVM expression (verify step
-    after LSH blocking — replaces the Arrow-crossing pandas UDF; the
+    of stages.similar_edges — replaces the Arrow-crossing pandas UDF; the
     double division of small int counts is bit-identical to the
     Python twin contract.jaccard, asserted in tests)."""
     ga, gb = bigram_arr_col(a), bigram_arr_col(b)

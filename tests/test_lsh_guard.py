@@ -1,22 +1,10 @@
-"""Shared LSH bucket-size guard (kgx/spark/lsh.py) and its production
-call sites (A.7 link stage, kgx/spark/stages.py).
-
-Pins the round-3 review contract: candidate counts are LINEAR in
-bucket size past MAX_LSH_BUCKET (star-link, not clique), oversized
-buckets stay connected for connected-components, and the incremental
-guard produces the SAME components as the cold batch guard even when a
-bucket crosses the cap mid-stream (edge lists may differ there — only
-components are pinned, by design)."""
+"""LSH bucket-size guard (kgx/spark/lsh.py) of the B.13 dedup harness
+ops: candidate counts are LINEAR in bucket size past the cap
+(star-link, not clique), and small buckets emit the full clique."""
 
 import random
 
-import pytest
-from pyspark.sql import functions as F
-
-from kgx.spark.lsh import (
-    guarded_bucket_pairs,
-    guarded_bucket_pairs_incremental,
-)
+from kgx.spark.lsh import guarded_bucket_pairs
 
 
 def ref_guard_pairs(rows, cap):
@@ -39,27 +27,6 @@ def ref_guard_pairs(rows, cap):
                 if m[0] > rep[0]:
                     out.add((rep, m))
     return out
-
-
-def components(pairs, nodes):
-    """Union-find components over (a, b) pairs -> frozenset of
-    frozensets covering `nodes`."""
-    parent = {n: n for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    groups = {}
-    for n in nodes:
-        groups.setdefault(find(n), set()).add(n)
-    return frozenset(frozenset(g) for g in groups.values())
 
 
 def banded_df(spark, rows):
@@ -117,173 +84,3 @@ def test_guard_matches_reference_randomized(spark):
                              cap=cap)
     )
     assert got == ref_guard_pairs(rows, cap=cap)
-
-
-def split_batches(rows, n_batches, rng):
-    """Partition (bucket, member) rows by MEMBER into n_batches
-    arrival waves (a member's band rows all arrive together)."""
-    members = sorted({m for _, m in rows})
-    rng.shuffle(members)
-    waves = [set() for _ in range(n_batches)]
-    for i, m in enumerate(members):
-        waves[i % n_batches].add(m)
-    return [[(bk, m) for bk, m in rows if m in wave] for wave in waves]
-
-
-def incremental_union(spark, batches, cap):
-    seen, out = [], set()
-    for batch in batches:
-        seen += batch
-        out |= spark_pairs(
-            guarded_bucket_pairs_incremental(
-                banded_df(spark, batch), banded_df(spark, seen),
-                ["bk"], ["id"], cap=cap,
-            )
-        )
-    return out
-
-
-def test_incremental_union_equals_batch_under_cap(spark):
-    rng = random.Random(7)
-    cap = 16
-    rows = [(f"b{bk}", (f"m{i:03d}",))
-            for bk in range(3) for i in rng.sample(range(60), 10)]
-    got = incremental_union(spark, split_batches(rows, 3, rng), cap)
-    # below the cap the union over batches IS the batch clique set
-    assert got == ref_guard_pairs(rows, cap=cap)
-
-
-def test_incremental_oversized_components_match_batch(spark):
-    rng = random.Random(99)
-    cap = 6
-    # one hot bucket (crosses the cap mid-stream) + two small ones
-    rows = [("hot", (f"h{i:03d}",)) for i in range(21)]
-    rows += [("s1", (f"a{i}",)) for i in range(4)]
-    rows += [("s2", (f"b{i}",)) for i in range(3)]
-    batches = split_batches(rows, 4, rng)
-    inc = incremental_union(spark, batches, cap)
-    batch_pairs = ref_guard_pairs(rows, cap=cap)
-    nodes = {m for _, m in rows}
-    # components equal even though the hot bucket's edge lists differ
-    assert components(inc, nodes) == components(batch_pairs, nodes)
-    # hot bucket is one component in both
-    hot = frozenset({m for bk, m in rows if bk == "hot"})
-    assert hot in components(inc, nodes)
-    # per-batch candidate volume stays linear: <= |new|*cap + #buckets
-    seen = []
-    for batch in batches:
-        seen += batch
-        n_pairs = guarded_bucket_pairs_incremental(
-            banded_df(spark, batch), banded_df(spark, seen),
-            ["bk"], ["id"], cap=cap,
-        ).count()
-        new_members = len({m for _, m in batch})
-        assert n_pairs <= new_members * cap + 3
-
-
-@pytest.fixture(scope="module")
-def hot_alias_cluster():
-    """Near-identical alias surfaces that REALLY collide in the
-    production MinHash band family: greedily pick variants of one base
-    name sharing a single band key (computed with the same
-    contract-pinned signature the Spark path uses)."""
-    from kgx.contract import band_keys, minhash_signature, normalize
-
-    base = "acme corporation international"
-    cands = [f"{base} {i:02d}" for i in range(200)]
-    by_band = {}
-    for c in cands:
-        for bk in set(band_keys(minhash_signature(normalize(c)))):
-            by_band.setdefault(bk, []).append(c)
-    best = max(by_band.values(), key=len)
-    assert len(best) >= 12, "fixture assumption: a shared band exists"
-    return best[:12]
-
-
-def link_components(edges_df, node_ids):
-    pairs = {(r["src"], r["dst"]) for r in edges_df.collect()}
-    return components(pairs, set(node_ids)), pairs
-
-
-def test_link_lsh_edges_guard_end_to_end(spark, hot_alias_cluster):
-    """Production A.7 stage: an oversized near-identical alias cluster
-    is star-linked (linear), stays ONE component, and the incremental
-    path converges to the same components as the cold batch run."""
-    from kgx.contract import normalize
-    from kgx.spark import stages
-
-    cap = 4
-    norms = sorted({normalize(s) for s in hot_alias_cluster})
-    nodes_rows = [("ORG", n, f"prov:{i:02d}") for i, n in
-                  enumerate(norms)]
-    nodes = spark.createDataFrame(
-        nodes_rows, "etype string, norm string, node_id string"
-    )
-    node_ids = [r[2] for r in nodes_rows]
-    n = len(node_ids)
-
-    edges = stages.link_lsh_edges(nodes, cap=cap)
-    comps, pairs = link_components(edges, node_ids)
-    # the whole near-identical cluster canonicalizes together
-    assert frozenset(node_ids) in comps
-    # and NOT via a quadratic clique: strictly fewer than C(n,2) edges
-    assert len(pairs) < n * (n - 1) // 2
-    unguarded, _ = link_components(
-        stages.link_lsh_edges(nodes, cap=10 ** 9), node_ids
-    )
-    assert unguarded == comps
-
-    # incremental arrival in 3 waves -> same components
-    rng = random.Random(3)
-    order = node_ids[:]
-    rng.shuffle(order)
-    waves = [order[0:4], order[4:8], order[8:]]
-    seen_ids, inc_pairs = [], set()
-    for wave in waves:
-        seen_ids += wave
-        new_df = nodes.where(F.col("node_id").isin(wave))
-        all_df = nodes.where(F.col("node_id").isin(seen_ids))
-        delta = stages.link_lsh_edges_incremental(new_df, all_df,
-                                                  cap=cap)
-        inc_pairs |= {(r["src"], r["dst"]) for r in delta.collect()}
-    assert components(inc_pairs, set(node_ids)) == comps
-
-
-def test_incremental_union_is_superset_of_batch_pairs(spark):
-    """Oversized buckets: the incremental union must contain every
-    pair the batch guard emits (re-star on representative change), so
-    downstream the stream merges everything a cold batch run merges."""
-    rng = random.Random(41)
-    cap = 5
-    # descending-ish arrival so the representative changes repeatedly
-    rows = [("hot", (f"h{i:03d}",)) for i in range(18)]
-    batches = split_batches(rows, 5, rng)
-    inc = incremental_union(spark, batches, cap)
-    batch_pairs = ref_guard_pairs(rows, cap=cap)
-    assert batch_pairs <= inc
-
-
-def test_fixture_band_buckets_within_guard_cap(spark, t1_dir, t2_dir):
-    """The sequential oracle (the pinned reference) emits the FULL
-    within-bucket clique; the production stage caps buckets at
-    MAX_LSH_BUCKET and star-links. Oracle-parity therefore requires
-    every fixture band bucket to stay within the cap — make that
-    silent precondition an explicit gate so a future fixture change
-    that violates it fails HERE, not as a mysterious parity diff."""
-    from pyspark.sql import functions as F
-
-    from kgx.spark import stages
-    from kgx.spark.lsh import MAX_LSH_BUCKET
-    from kgx.spark.pipeline import run_fixture_pipeline
-
-    for d in (t1_dir, t2_dir):
-        nodes = run_fixture_pipeline(spark, d, buckets=8)["nodes"]
-        mx = (
-            stages.banded_nodes(nodes)
-            .groupBy("etype", "bk").count()
-            .agg(F.max("count")).first()[0]
-        )
-        assert mx is not None and mx <= MAX_LSH_BUCKET, (
-            f"{d}: hottest band bucket has {mx} members "
-            f"(cap {MAX_LSH_BUCKET}) — oracle clique vs guarded "
-            f"production pairs would diverge")

@@ -65,7 +65,8 @@ def test_link_uses_broadcast_join(spark, t1_dir):
     )
     dict_df = spark.read.parquet(f"{t1_dir}/alias_dict.parquet")
     dict_df = stages.dict_latest(dict_df)
-    lsh = stages.link_lsh_edges(stages.link_nodes(mentions, dict_df))
+    nodes = stages.link_nodes(mentions, dict_df)
+    lsh = stages.similar_edges(nodes, nodes)
     plan = plan_of(stages.link_links(mentions, dict_df, lsh))
     assert "BroadcastHashJoin" in plan, plan
     del normalize_surface
@@ -102,9 +103,10 @@ def test_extract_is_shuffle_lean(spark, t1_dir):
     assert plan.count("SortMergeJoin") == 0, plan
 
 
-def test_dedup_plans_have_no_all_pairs_join(spark):
-    """Every LSH-blocked dedup op must block through equi-joins only —
-    a CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan
+def test_dedup_plans_have_no_all_pairs_join(spark, t1_dir):
+    """Every LSH-blocked dedup op, and the link stage's exact
+    similarity join, must find candidates through equi-joins only — a
+    CartesianProduct / BroadcastNestedLoopJoin anywhere in the plan
     means an O(n^2) stage is back."""
     from kgx.harness import (
         dedup_embedding_cosine,
@@ -112,12 +114,21 @@ def test_dedup_plans_have_no_all_pairs_join(spark):
         dedup_ngram_jaccard,
         dedup_simhash,
     )
+    from kgx.spark import stages
 
-    for op in (dedup_minhash_lsh, dedup_simhash, dedup_ngram_jaccard,
-               dedup_embedding_cosine):
-        plan = plan_of(op(spark, SF))
-        assert "CartesianProduct" not in plan, op.__name__
-        assert "BroadcastNestedLoopJoin" not in plan, op.__name__
+    plans = {
+        op.__name__: plan_of(op(spark, SF))
+        for op in (dedup_minhash_lsh, dedup_simhash, dedup_ngram_jaccard,
+                   dedup_embedding_cosine)
+    }
+    nodes = stages.dict_latest(
+        spark.read.parquet(f"{t1_dir}/alias_dict.parquet")
+    ).select("etype", F.col("alias").alias("norm"),
+             F.col("entity_id").alias("node_id"))
+    plans["similar_edges"] = plan_of(stages.similar_edges(nodes, nodes))
+    for name, plan in plans.items():
+        assert "CartesianProduct" not in plan, name
+        assert "BroadcastNestedLoopJoin" not in plan, name
 
 
 def test_no_row_python_udf_in_engine():

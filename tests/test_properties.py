@@ -16,7 +16,6 @@ from kgx.tagcore import (
     decode_bio,
     viterbi,
     viterbi_batch,
-    viterbi_batch_sorted,
 )
 
 A = build_transitions()
@@ -84,7 +83,6 @@ def test_batched_variants_agree_with_single(ems):
     ems64 = [e.astype(np.float64) for e in ems]
     want = [viterbi(e, A) for e in ems64]
     assert viterbi_batch(ems64, A) == want
-    assert viterbi_batch_sorted(ems64, A, chunk=3) == want
 
 
 @settings(max_examples=80, deadline=None)
@@ -170,7 +168,7 @@ def test_incremental_labels_equal_cold_cc(spark):
     graphs and random batch splits — including merges of several old
     components through one new node, isolated new nodes, and
     new-to-new edges. (Invariant exploited: every post-batch edge
-    touches >= 1 new node, which the incremental LSH guarantees.)"""
+    touches >= 1 new node, which stages.similar_edges guarantees.)"""
     import random
 
     from pyspark.sql import functions as F
@@ -229,7 +227,6 @@ def test_float32_fast_path_agrees_on_half_integers(ems):
     want = [viterbi(e.astype(np.float64), A) for e in ems32]
     a32 = A.astype(np.float32)
     assert viterbi_batch(ems32, a32) == want
-    assert viterbi_batch_sorted(ems32, a32, chunk=3) == want
 
 
 def test_viterbi_batch_promotes_non_float_inputs():

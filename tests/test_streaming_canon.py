@@ -44,6 +44,9 @@ def test_incremental_canon_equals_batch(spark, t1_dir, tmp_path):
     io = TableIO(wh)
     # the state really went through multiple incremental merges
     assert io.manifest("nodes")["version"] >= 2
+    # linking keeps no state besides the node log and its edges
+    assert io.manifest("node_bands") is None
+    assert not os.path.exists(io.table_dir("node_bands"))
 
     got_map = {
         (r["node_id"], r["canonical_id"])
@@ -349,54 +352,6 @@ def test_auto_compaction_bounds_segment_fanin(spark, t1_dir, tmp_path):
             f"{tbl}: {nseg} segments after 10 batches — fan-in "
             f"unbounded despite max_segments={cap}")
 
-    got_map = {
-        (r["node_id"], r["canonical_id"])
-        for r in io.read(spark, "entity_map").collect()
-    }
-    batch = run_fixture_pipeline(spark, t1_dir, buckets=8)
-    want_map = {
-        (r["node_id"], r["canonical_id"])
-        for r in batch["entity_map"].collect()
-    }
-    assert got_map == want_map
-
-
-def test_node_bands_migration_from_legacy_warehouse(spark, t1_dir,
-                                                    tmp_path):
-    """A warehouse created before the stored-bands log existed has no
-    node_bands table: the next batch must seed it from the pre-batch
-    node state and keep producing exactly the batch pipeline's
-    canonical map."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from kgx.spark.udfs import make_tagger_spans_udf
-
-    cut = "c000020"
-    m0 = _turns_of(spark, t1_dir, F.col("conv_id") < cut)
-    m1 = _turns_of(spark, t1_dir, F.col("conv_id") >= cut)
-    dims = load_dims(spark, t1_dir)
-    udf = make_tagger_spans_udf(spark, dims["artifact"])
-    wh = str(tmp_path / "wh")
-    update = streaming.incremental_canon_updater(
-        spark, wh, dims["dict_df"], udf,
-        patterns_rows=dims["patterns_rows"])
-    update(m0, 0)
-
-    io = TableIO(wh)
-    # simulate a pre-stored-bands warehouse
-    os.remove(io.manifest_path("node_bands"))
-    shutil.rmtree(os.path.join(io.table_dir("node_bands"), "_v1"),
-                  ignore_errors=True)
-    assert io.manifest("node_bands") is None
-
-    update(m1, 1)
-    # bands were reseeded and cover the whole node state
-    bands = io.read(spark, "node_bands")
-    nodes = io.read(spark, "nodes")
-    assert (bands.select("node_id", "norm").distinct().count()
-            == nodes.select("node_id", "norm").distinct().count())
     got_map = {
         (r["node_id"], r["canonical_id"])
         for r in io.read(spark, "entity_map").collect()

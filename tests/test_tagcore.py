@@ -134,20 +134,6 @@ def test_artifact_roundtrip(tmp_path):
     assert np.allclose(back.transitions, art.transitions)
 
 
-def test_viterbi_batch_sorted_matches_batch():
-    """Length-bucketed decode must return identical paths in input
-    order, including empty sequences."""
-    import numpy as np
-
-    from kgx.tagcore import build_transitions, viterbi_batch, viterbi_batch_sorted
-
-    rng = np.random.RandomState(3)
-    a = build_transitions()
-    ems = [rng.randn(rng.randint(0, 40), 7).astype(np.float32) * 5
-           for _ in range(300)]
-    assert viterbi_batch_sorted(ems, a, chunk=32) == viterbi_batch(ems, a)
-
-
 def test_demo_one_ep3_shape():
     """EP3 demo contract: sentence -> PER/LOC/ORG surface lists from
     the same frozen artifact the pipeline ships."""
