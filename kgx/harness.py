@@ -235,7 +235,7 @@ def scan_iceberg(spark, sf):
     from kgx.spark.io import TableIO
 
     io = TableIO(os.path.join(REPO, ".kgx_out", "iceberg_demo"))
-    io.write(t(spark, sf, "region"), "region_copy", mode="overwrite")
+    io.write(t(spark, sf, "region"), "region_copy")
     return io.read(spark, "region_copy")
 
 
@@ -1386,14 +1386,14 @@ def _lsh_candidate_pairs(banded: DataFrame, id_col: str,
                          cap: int = MAX_LSH_BUCKET) -> DataFrame:
     """(id, band-key) rows -> deduped candidate pairs (id_a < id_b).
 
-    Thin adapter over the SHARED bucket-size guard
-    (kgx/spark/lsh.py guarded_bucket_pairs — one implementation for
-    both the dedup harness family and the production A.7 link stage,
-    so the two cannot drift): buckets up to `cap` members emit the
-    full within-bucket clique, larger buckets star-link every member
-    to the bucket's min id (linear, connectivity-preserving; recall
-    caveat + multi-band pigeonhole contract documented in the shared
-    module and pinned by tests/test_dedup.py)."""
+    Thin adapter over the bucket-size guard the dedup/ANN harness ops
+    share (kgx/spark/lsh.py guarded_bucket_pairs; entity linking does
+    not use it — stages.similar_edges is an exact join): buckets up to
+    `cap` members emit the full within-bucket clique, larger buckets
+    star-link every member to the bucket's min id (linear,
+    connectivity-preserving; recall caveat + multi-band pigeonhole
+    contract documented in that module and pinned by
+    tests/test_dedup.py)."""
     pairs = guarded_bucket_pairs(
         banded, bucket_cols=[bk_col], member_cols=[id_col], cap=cap
     )

@@ -72,18 +72,17 @@ class TableIO:
         self,
         df: DataFrame,
         table: str,
-        mode: str = "overwrite",
         partition_by: list[str] | None = None,
         inputs_fingerprint: str | None = None,
         extra: dict | None = None,
-        rows: int | None = None,
         defer_manifest: bool = False,
     ) -> dict:
-        """Write parquet + manifest; manifest lands last (commit marker).
+        """Write a new parquet version of `table` + its manifest;
+        manifest lands last (commit marker).
 
-        Row count comes from the caller (e.g. an Observation collected
-        during the write job) or, failing that, from the parquet
-        footers — never from a second full scan of the data.
+        The manifest's row count comes from the parquet footers
+        (driver-side metadata read) — never from a second full scan of
+        the data.
 
         With defer_manifest=True the data is written but the manifest
         file is NOT: the caller enriches the returned dict (e.g. with
@@ -99,13 +98,12 @@ class TableIO:
                 f"{table} is a log table — use append(), not write() "
                 "(a snapshot write would orphan its delta segments)")
         version = (prev["version"] + 1) if prev and "version" in prev else 1
-        w = df.write.mode(mode)
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         t0 = time.time()
         w.parquet(self.path(table, version))
-        if rows is None:
-            rows = sum(r for _, r, _ in self.file_stats(table, version))
+        rows = sum(r for _, r, _ in self.file_stats(table, version))
         snapshots = list(prev.get("snapshots", [])) if prev else []
         snapshots.append({"version": version, "rows": rows,
                           **({"run_id": extra["run_id"]}

@@ -59,13 +59,11 @@ STAGES = ("ingest", "tag", "extract", "link", "canon", "materialize")
 # PER-TEXT TAGGER COST. With the cheap lexicon artifacts, an
 # alternated same-window A/B showed a net LOSS at rate 8.6 on the
 # 218k-turn bench corpus (tag stage +1.0 s) and a net win at rate 20
-# on the 4.37M-turn x20 corpus (10.2 -> 8.4 s) — the lexicon
-# threshold sits between. A learned-emission artifact (the reference
-# contract's BiLSTM/BERT branch) is orders of magnitude costlier per
-# text, where the ~1.2 break-even of the original estimate applies.
+# on the 4.37M-turn x20 corpus (10.2 -> 8.4 s) — the threshold sits
+# between. The lexicon emitters are the only kinds tagcore can run;
+# a new emission model (e.g. a learned BiLSTM/BERT branch, orders of
+# magnitude costlier per text) must re-measure this break-even.
 TAG_DISTINCT_AUTO_MIN_RATE_LEXICON = 15.0
-TAG_DISTINCT_AUTO_MIN_RATE_LEARNED = 1.2
-_LEXICON_KINDS = {"lexicon_crf", "lexicon_ctx_crf"}
 
 # The canon stage commits connected-components state to the warehouse
 # every this many iterations. That commit is the durable cut a rerun
@@ -92,22 +90,32 @@ def content_sig_col(df: DataFrame):
     ).alias("sig")
 
 
+def read_alias_dict(spark: SparkSession, dims_dir: str) -> DataFrame:
+    """The latest alias dictionary (lazy: no job until used)."""
+    return stages.dict_latest(
+        spark.read.parquet(os.path.join(dims_dir, "alias_dict.parquet")))
+
+
+def read_patterns(spark: SparkSession, dims_dir: str) -> list[dict]:
+    """The relation patterns as plain dicts (one collect)."""
+    return [
+        r.asDict()
+        for r in spark.read.parquet(
+            os.path.join(dims_dir, "patterns.parquet")).collect()
+    ]
+
+
 def load_dims(spark: SparkSession, dims_dir: str,
               artifact: str = "tagger_v1.npz") -> dict:
     """Load the dimension inputs every pipeline flavor needs — the
     latest alias dictionary, the relation patterns as plain dicts, and
     the tagger artifact — from one directory layout. Single source of
     truth for the batch CLI, the streaming CLI, the harness and tests
-    (a schema or slot change lands in exactly one place)."""
+    (a schema or slot change lands in exactly one place; the Runner
+    reads each dim lazily through the same helpers)."""
     return {
-        "dict_df": stages.dict_latest(
-            spark.read.parquet(os.path.join(dims_dir,
-                                            "alias_dict.parquet"))),
-        "patterns_rows": [
-            r.asDict()
-            for r in spark.read.parquet(
-                os.path.join(dims_dir, "patterns.parquet")).collect()
-        ],
+        "dict_df": read_alias_dict(spark, dims_dir),
+        "patterns_rows": read_patterns(spark, dims_dir),
         "artifact": TaggerArtifact.load(
             os.path.join(dims_dir, artifact)),
     }
@@ -139,7 +147,6 @@ class Runner:
         # stage_tag.
         self.tag_distinct = tag_distinct
         self._tagger = None
-        self._artifact_obj = None
         self.events: list[dict] = []
         self._metrics_rows: list[dict] = []
 
@@ -150,16 +157,19 @@ class Runner:
             from kgx.spark.udfs import make_tagger_spans_udf
 
             self._tagger = make_tagger_spans_udf(
-                self.spark, self.artifact_obj()
+                self.spark, TaggerArtifact.load(self.artifact_path)
             )
         return self._tagger
 
-    def artifact_obj(self) -> TaggerArtifact:
-        """One parse of the artifact npz per run — shared by the
-        tagger UDF and the auto-tag-distinct probe's kind check."""
-        if self._artifact_obj is None:
-            self._artifact_obj = TaggerArtifact.load(self.artifact_path)
-        return self._artifact_obj
+    # dims are read at most once per run, and only by a builder that
+    # runs — a rerun of a complete warehouse reads neither
+    @functools.cached_property
+    def alias_dict(self) -> DataFrame:
+        return read_alias_dict(self.spark, self.input_dir)
+
+    @functools.cached_property
+    def patterns_rows(self) -> list[dict]:
+        return read_patterns(self.spark, self.input_dir)
 
     def in_path(self, name: str) -> str:
         return os.path.join(self.input_dir, f"{name}.parquet")
@@ -177,7 +187,7 @@ class Runner:
         # crash from leaving a complete-but-hashless manifest behind
         man = self.io.write(
             observed, table, partition_by=partition_by,
-            inputs_fingerprint=fingerprint, rows=None,
+            inputs_fingerprint=fingerprint,
             extra={"run_id": self.run_id, "stage": stage},
             defer_manifest=True,
         )
@@ -272,13 +282,6 @@ class Runner:
                 buckets=self.buckets)},
             [self.in_path("transcripts")], partition_by=["bucket"])
 
-    def patterns_rows(self) -> list[dict]:
-        return [
-            r.asDict()
-            for r in self.spark.read.parquet(
-                self.in_path("patterns")).collect()
-        ]
-
     def stage_tag(self):
         self._stage("tag", {"tagged": self._tagged},
                     [self.io.path("turns"), self.artifact_path,
@@ -292,17 +295,17 @@ class Runner:
             distinct = self._probe_dup_rate(turns)
         if distinct:
             return stages.tag_extract_distinct(
-                turns, self.tagger(), self.patterns_rows(),
+                turns, self.tagger(), self.patterns_rows,
                 buckets=self.buckets)
         return stages.tag_extract(turns, self.tagger(),
-                                  self.patterns_rows())
+                                  self.patterns_rows)
 
     def _probe_dup_rate(self, turns: DataFrame) -> bool:
         """Auto mode: one cheap column-pruned aggregate over the
         already-checkpointed turns table (count + HLL distinct of
         `text`) measures the duplication rate; past the measured
-        break-even for the loaded artifact's per-text cost class
-        (constants above) the content-addressed path wins. The probe's
+        break-even (TAG_DISTINCT_AUTO_MIN_RATE_LEXICON) the
+        content-addressed path wins. The probe's
         outcome only picks between two VALUE-IDENTICAL plans (same
         content hashes — tests/test_resume.py cross-mode flip), so HLL
         approximation error cannot affect output, and the stage
@@ -314,11 +317,7 @@ class Runner:
             F.approx_count_distinct("text").alias("d"),
         ).collect()[0]
         rate = row["n"] / max(row["d"], 1)
-        kind = self.artifact_obj().kind
-        threshold = (TAG_DISTINCT_AUTO_MIN_RATE_LEXICON
-                     if kind in _LEXICON_KINDS
-                     else TAG_DISTINCT_AUTO_MIN_RATE_LEARNED)
-        distinct = rate >= threshold
+        distinct = rate >= TAG_DISTINCT_AUTO_MIN_RATE_LEXICON
         # event carries the standard stage/table/rows/wall_s shape —
         # downstream consumers (scaling_bench stage_walls, the resume
         # tests) index those keys on every event
@@ -341,9 +340,7 @@ class Runner:
             [self.io.path("tagged")])
 
     def stage_link(self):
-        mentions = self.read("mentions")
-        dict_df = stages.dict_latest(
-            self.spark.read.parquet(self.in_path("alias_dict")))
+        mentions = functools.cache(lambda: self.read("mentions"))
 
         def lsh_edges() -> DataFrame:
             nodes = self.read("nodes")
@@ -352,10 +349,11 @@ class Runner:
         self._stage(
             "link",
             {
-                "nodes": lambda: stages.link_nodes(mentions, dict_df),
+                "nodes": lambda: stages.link_nodes(mentions(),
+                                                   self.alias_dict),
                 "lsh_edges": lsh_edges,
                 "links": lambda: stages.link_links(
-                    mentions, dict_df, self.read("lsh_edges")),
+                    mentions(), self.alias_dict, self.read("lsh_edges")),
             },
             [self.io.path("mentions"), self.in_path("alias_dict")])
 
@@ -387,13 +385,11 @@ class Runner:
                     inputs)
 
     def stage_materialize(self):
-        dict_df = stages.dict_latest(
-            self.spark.read.parquet(self.in_path("alias_dict")))
         self._stage(
             "materialize",
             {
                 "edges": lambda: stages.materialize_edges(
-                    self.read("triples_raw"), dict_df,
+                    self.read("triples_raw"), self.alias_dict,
                     self.read("entity_map")),
                 "vertices": lambda: stages.materialize_vertices(
                     self.read("edges"), self.read("cc_vertices"),

@@ -13,11 +13,13 @@ This is the one stage graph: kgx.spark.run.Runner sequences it with
 checkpoints, and the streaming path (kgx.spark.streaming) applies the
 same functions per micro-batch.
 
-Scale notes (SURVEY.md §4): one explicit repartition by conv_id hash up
-front; the tag+extract path is partition-local after it (groupBy keys
-are prefixed by conv_id). Dimension joins (alias_dict, patterns)
-broadcast. Pattern matching is a constant-folded WHEN chain of literal
-regexes (whole-stage codegen), not a Python loop. Similarity linking
+Scale notes (SURVEY.md §4): ingest repartitions once by a conv_id
+hash bucket, and tagging is per row. That locality does not survive
+the runner's checkpoints: every stage reads its input back from
+parquet, so the extract stage's per-conversation groupBys shuffle by
+conv_id again. Dimension joins (alias_dict, patterns) broadcast.
+Pattern matching is a constant-folded WHEN chain of literal regexes
+(whole-stage codegen), not a Python loop. Similarity linking
 (similar_edges) is one exact prefix-filtered equi-join over the
 distinct (etype, norm) nodes; a streaming batch that adds nodes runs
 it with its new nodes against the accumulated node log (one scan and
@@ -178,8 +180,8 @@ def tag_extract_distinct(turns: DataFrame, tag_spans_udf,
     unique-per-key so there is no pair explosion. Selected
     automatically by default: the runner probes the corpus
     duplication rate at the tag stage and flips this path on past the
-    measured break-even for the artifact's cost class
-    (run.TAG_DISTINCT_AUTO_MIN_RATE_*); `--tag-distinct` /
+    measured break-even (run.TAG_DISTINCT_AUTO_MIN_RATE_LEXICON);
+    `--tag-distinct` /
     `--no-tag-distinct` force either mode.
 
     Measured on the x20-duplicated 4.37M-turn fixture at local[32],

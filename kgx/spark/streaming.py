@@ -195,8 +195,8 @@ def _canon_mark_applied(io, batch_id: int) -> None:
 
 
 def incremental_canon_updater(spark: SparkSession, warehouse: str,
-                              dict_df: DataFrame, tag_spans_udf=None,
-                              patterns_rows: list | None = None,
+                              dict_df: DataFrame, tag_spans_udf,
+                              patterns_rows: list,
                               compact_every: int = 0,
                               max_segments: int = 16):
     """foreachBatch sink that streams the WHOLE KG forward: each
@@ -270,12 +270,6 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
     the default bound over a many-batch run)."""
     from kgx.spark.io import TableIO
 
-    if tag_spans_udf is None or patterns_rows is None:
-        raise ValueError(
-            "incremental_canon_updater requires tag_spans_udf and "
-            "patterns_rows (pass patterns_rows=[] explicitly for a "
-            "deployment with no relation patterns) — a silent default "
-            "would stream a KG missing every pattern edge")
     io = TableIO(warehouse)
 
     def update(turns_batch: DataFrame, batch_id: int) -> None:
@@ -422,7 +416,7 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
 def run_incremental_canon(spark: SparkSession, arrivals_dir: str | None,
                           checkpoint_dir: str, warehouse: str,
                           tag_spans_udf, dict_df: DataFrame,
-                          patterns_rows: list | None = None,
+                          patterns_rows: list,
                           max_files_per_trigger: int = 1,
                           compact_every: int = 0,
                           max_segments: int = 16,

@@ -3,13 +3,15 @@ path (SURVEY.md §2 Table B.10).
 
 The taggers follow the iterator-of-series pattern: the frozen model is
 materialized once per Python worker (from a broadcast), then every
-Arrow batch runs ONE numpy DP over the whole batch (batched CRF Viterbi
-— north star). `make_tagger_spans_udf` is the pipeline's tagger (batch
-runner, streaming and harness): it returns span offsets as primitive
-int arrays, the cheapest Arrow crossing, and stages.tag_spans builds
-the span structs JVM-side. `make_tagger_udf` returns the raw
-per-character BIO tags, which only the conlleval paths need.
-Everything else is vectorized pandas/numpy.
+Arrow batch runs tagcore's batched path (make_batch_emitter ->
+viterbi_batch_padded) in length-sorted chunks — one numpy DP per
+chunk (batched CRF Viterbi — north star). `make_tagger_spans_udf` is
+the pipeline's tagger (batch runner, streaming and harness): it
+decodes with decode_bio_batch_arrays and returns span offsets as
+primitive int arrays, the cheapest Arrow crossing, and
+stages.tag_spans builds the span structs JVM-side. `make_tagger_udf`
+returns the raw per-character BIO tags, which only the conlleval
+paths need. Everything else is vectorized pandas/numpy.
 """
 
 from __future__ import annotations
@@ -22,13 +24,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kgx.contract import (
-    LSH_BANDS,
-    LSH_ROWS,
-    TAGS,
-    char_bigrams,
-    minhash_signature,
-)
+from kgx.contract import LSH_BANDS, LSH_ROWS, TAGS, minhash_signature
 from kgx.tagcore import (
     LexiconMatcher,
     TaggerArtifact,
@@ -192,12 +188,6 @@ def jaccard_col(a: str, b: str):
     inter = F.size(F.array_intersect(ga, gb))
     den = F.size(ga) + F.size(gb) - inter
     return F.when(den == 0, F.lit(1.0)).otherwise(inter / den)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def bigrams_udf(norms: pd.Series) -> pd.Series:
-    """Distinct char bigrams (used by the dedup/text harness ops)."""
-    return pd.Series([char_bigrams(n) for n in norms.fillna("")])
 
 
 @F.pandas_udf(T.ArrayType(T.IntegerType()))

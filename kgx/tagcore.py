@@ -11,10 +11,20 @@ Spark UDFs both load the same artifact — "same checkpoint, two
 execution engines", which is exactly what the P/R gate measures
 (pipeline divergence, not model divergence).
 
+Two execution paths over one model:
+
+* per text (the oracle's reference): make_emitter -> viterbi ->
+  decode_bio;
+* batched (the Spark UDFs, one padded tensor per Arrow chunk):
+  make_batch_emitter -> viterbi_batch_padded -> decode_bio_batch_arrays.
+
+Both emitters get their scoring rule from _model_fill, the one place
+that reads the artifact's kind.
+
 Decode contract (A.3): argmax_y sum_t E[t, y_t] + sum_t A[y_{t-1}, y_t],
 ties broken toward the LOWEST tag id — `np.argmax` returns the first
 maximal index, which with tag ids 0..6 is exactly that rule, on both
-the single-sequence and the batched path.
+paths.
 """
 
 from __future__ import annotations
@@ -167,148 +177,85 @@ class LexiconMatcher:
         ]
 
 
-def _fill_match_rows(e: np.ndarray, text: str, t: int,
-                     matcher: LexiconMatcher) -> None:
-    """Write the v1 per-match B/I scores into e[:t] (shared by the
-    single-text and batched emission builders so the model semantics
-    exist in exactly one place)."""
-    for begin, end, etype, _form in matcher.matches(text[:t]):
-        b_id, i_id = TAG2ID[f"B-{etype}"], TAG2ID[f"I-{etype}"]
-        stop = min(end, t)
-        e[begin:stop, :] = MISS_SCORE  # slice-assign, no per-char loop
-        e[begin, b_id] = MATCH_SCORE
-        e[begin + 1 : stop, i_id] = MATCH_SCORE
+def _model_fill(artifact: TaggerArtifact, matcher: LexiconMatcher):
+    """Emission-model dispatch on artifact.kind — the ONLY code that
+    reads it. Returns fill(e, text, t), which writes the model's
+    per-match B/I scores into e[:t] over the "prefer O" defaults.
 
-
-def _fill_match_rows_ctx(e: np.ndarray, text: str, t: int,
-                         matcher: LexiconMatcher, cues: tuple,
-                         weak_forms: frozenset) -> None:
-    """v2 twin of _fill_match_rows: cue-bonused B scores, weak-form
-    gating. The single place that knows the ctx scoring rule."""
-    for begin, end, etype, form in matcher.matches(text[:t]):
-        bonus = 0.0
-        for cs, ce, bo in cues:
-            if (
-                ce == etype
-                and begin >= len(cs)
-                and text[begin - len(cs) : begin] == cs
-            ):
-                bonus = max(bonus, float(bo))
-        if form in weak_forms and bonus == 0.0:
-            continue  # unsupported weak form: no emission at all
-        b_id, i_id = TAG2ID[f"B-{etype}"], TAG2ID[f"I-{etype}"]
-        stop = min(end, t)
-        e[begin:stop, :] = MISS_SCORE
-        e[begin, b_id] = MATCH_SCORE + bonus
-        e[begin + 1 : stop, i_id] = MATCH_SCORE
-
-
-def emissions(text: str, matcher: LexiconMatcher) -> np.ndarray:
-    """Per-char emission scores E[T x 7] (text truncated to MAX_TAG_LEN)."""
-    t = min(len(text), MAX_TAG_LEN)
-    e = np.zeros((t, NUM_TAGS), dtype=np.float32)
-    e[:, 1:] = MISS_SCORE  # default: prefer O
-    _fill_match_rows(e, text, t, matcher)
-    return e
-
-
-def emissions_ctx(text: str, matcher: LexiconMatcher, cues: tuple,
-                  weak_forms: frozenset) -> np.ndarray:
-    """v2 emission model (kind="lexicon_ctx_crf"): like emissions(),
-    but a cue string ending right before a hit's begin adds its bonus
-    to the B-score, and WEAK forms are emitted only when supported by
-    a cue. A distinct model behind the same slot — the BiLSTM/BERT
-    second-checkpoint story of SURVEY A.3."""
-    t = min(len(text), MAX_TAG_LEN)
-    e = np.zeros((t, NUM_TAGS), dtype=np.float32)
-    e[:, 1:] = MISS_SCORE
-    _fill_match_rows_ctx(e, text, t, matcher, cues, weak_forms)
-    return e
-
-
-def emissions_batch(
-    texts: list[str], matcher: LexiconMatcher
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batched v1 emissions: one padded [n, tmax, 7] float32 tensor
-    plus per-sequence lengths, filled directly (three bulk numpy ops
-    for the defaults + sparse per-match slice assigns) instead of one
-    small allocation per text. Row i's valid prefix is bit-identical
-    to emissions(texts[i], matcher) (property-tested); padding steps
-    are never read by the padded DP (scores past each length are
-    frozen, backtrace is masked)."""
-    n = len(texts)
-    lens = np.fromiter(
-        (min(len(t), MAX_TAG_LEN) for t in texts), np.int64, count=n
-    )
-    tmax = int(lens.max(initial=0))
-    em = np.zeros((n, tmax, NUM_TAGS), dtype=np.float32)
-    if tmax == 0:
-        return em, lens
-    em[:, :, 1:] = MISS_SCORE
-    for i, text in enumerate(texts):
-        _fill_match_rows(em[i], text, int(lens[i]), matcher)
-    return em, lens
-
-
-def emissions_ctx_batch(
-    texts: list[str],
-    matcher: LexiconMatcher,
-    cues: tuple,
-    weak_forms: frozenset,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Batched twin of emissions_ctx (v2 model), same padded-tensor
-    contract as emissions_batch."""
-    n = len(texts)
-    lens = np.fromiter(
-        (min(len(t), MAX_TAG_LEN) for t in texts), np.int64, count=n
-    )
-    tmax = int(lens.max(initial=0))
-    em = np.zeros((n, tmax, NUM_TAGS), dtype=np.float32)
-    if tmax == 0:
-        return em, lens
-    em[:, :, 1:] = MISS_SCORE
-    for i, text in enumerate(texts):
-        _fill_match_rows_ctx(
-            em[i], text, int(lens[i]), matcher, cues, weak_forms
-        )
-    return em, lens
-
-
-def make_batch_emitter(artifact: TaggerArtifact, matcher: LexiconMatcher):
-    """Batched counterpart of make_emitter: texts -> (padded em, lens).
-    Same kind dispatch, same single-place model knowledge."""
-    if artifact.kind == "lexicon_ctx_crf":
+    v1 ("lexicon_crf") scores every lexicon hit; v2
+    ("lexicon_ctx_crf") adds a cue's bonus to the B-score when the cue
+    string ends right before the hit, and emits WEAK forms only when a
+    cue supports them — the BiLSTM/BERT second-checkpoint story of
+    SURVEY A.3. v1 is v2 with no cues and no weak forms."""
+    if artifact.kind == "lexicon_crf":
+        cues, weak_forms = (), frozenset()
+    elif artifact.kind == "lexicon_ctx_crf":
+        cues = artifact.cues
         weak_forms = frozenset(
             f for f, w in zip(artifact.forms, artifact.weak) if w
         )
-        cues = artifact.cues
-
-        def emit_batch(texts: list[str]):
-            return emissions_ctx_batch(texts, matcher, cues, weak_forms)
-
-        return emit_batch
-    if artifact.kind != "lexicon_crf":
+    else:
         raise ValueError(f"unknown tagger artifact kind: {artifact.kind}")
-    return lambda texts: emissions_batch(texts, matcher)
+
+    def fill(e: np.ndarray, text: str, t: int) -> None:
+        for begin, end, etype, form in matcher.matches(text[:t]):
+            bonus = 0.0
+            for cs, ce, bo in cues:
+                if (
+                    ce == etype
+                    and begin >= len(cs)
+                    and text[begin - len(cs) : begin] == cs
+                ):
+                    bonus = max(bonus, float(bo))
+            if form in weak_forms and bonus == 0.0:
+                continue  # unsupported weak form: no emission at all
+            b_id, i_id = TAG2ID[f"B-{etype}"], TAG2ID[f"I-{etype}"]
+            stop = min(end, t)
+            e[begin:stop, :] = MISS_SCORE  # slice-assign, no per-char loop
+            e[begin, b_id] = MATCH_SCORE + bonus
+            e[begin + 1 : stop, i_id] = MATCH_SCORE
+
+    return fill
 
 
 def make_emitter(artifact: TaggerArtifact, matcher: LexiconMatcher):
-    """Emission-model dispatch on artifact.kind — the ONLY place that
-    knows which model an artifact carries. Viterbi/decode/pipeline are
-    agnostic."""
-    if artifact.kind == "lexicon_ctx_crf":
-        weak_forms = frozenset(
-            f for f, w in zip(artifact.forms, artifact.weak) if w
+    """Per-text emitter: text -> emission scores E[T x 7] float32
+    (text truncated to MAX_TAG_LEN). The oracle's reference path."""
+    fill = _model_fill(artifact, matcher)
+
+    def emit(text: str) -> np.ndarray:
+        t = min(len(text), MAX_TAG_LEN)
+        e = np.zeros((t, NUM_TAGS), dtype=np.float32)
+        e[:, 1:] = MISS_SCORE  # default: prefer O
+        fill(e, text, t)
+        return e
+
+    return emit
+
+
+def make_batch_emitter(artifact: TaggerArtifact, matcher: LexiconMatcher):
+    """Batched emitter: texts -> (one padded [n, tmax, 7] float32
+    tensor, per-text lengths), filled directly (bulk numpy defaults +
+    sparse per-match slice assigns) instead of one small allocation
+    per text. Row i's valid prefix is bit-identical to
+    make_emitter(...)(texts[i]) (tested); padding steps are never
+    read by the padded DP (scores past each length are frozen,
+    backtrace is masked)."""
+    fill = _model_fill(artifact, matcher)
+
+    def emit_batch(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
+        n = len(texts)
+        lens = np.fromiter(
+            (min(len(t), MAX_TAG_LEN) for t in texts), np.int64, count=n
         )
-        cues = artifact.cues
+        em = np.zeros((n, int(lens.max(initial=0)), NUM_TAGS),
+                      dtype=np.float32)
+        em[:, :, 1:] = MISS_SCORE
+        for i, text in enumerate(texts):
+            fill(em[i], text, int(lens[i]))
+        return em, lens
 
-        def emit(text: str) -> np.ndarray:
-            return emissions_ctx(text, matcher, cues, weak_forms)
-
-        return emit
-    if artifact.kind != "lexicon_crf":
-        raise ValueError(f"unknown tagger artifact kind: {artifact.kind}")
-    return lambda text: emissions(text, matcher)
+    return emit_batch
 
 
 def viterbi(e: np.ndarray, a: np.ndarray) -> list[int]:
@@ -330,53 +277,21 @@ def viterbi(e: np.ndarray, a: np.ndarray) -> list[int]:
     return path
 
 
-def viterbi_batch(
-    em_list: list[np.ndarray], a: np.ndarray
-) -> list[list[int]]:
-    """Batched Viterbi over variable-length sequences (one numpy DP).
-
-    Pads to the batch max length and runs the DP across the whole batch
-    per time step — this is the vectorized shape the Spark iterator UDF
-    uses (north star: "batched CRF Viterbi decode"). Padding steps use
-    zero emissions and identity-ish transitions; each sequence's path is
-    read back at its true length, so padding never affects the argmax
-    within the valid prefix (scores beyond len are simply ignored).
-    """
-    n = len(em_list)
-    if n == 0:
-        return []
-    lens = np.array([e.shape[0] for e in em_list], dtype=np.int64)
-    tmax = int(lens.max(initial=0))
-    if tmax == 0:
-        return [[] for _ in range(n)]
-    # DP precision follows the PROMOTED input dtype (emissions AND
-    # transitions): the model path is all-float32 — and its values are
-    # half-integer constants (enforced at artifact load, magnitude
-    # < 2^24), so the float32 DP is EXACT there: same argmax, half the
-    # memory bandwidth of float64 in the hot loop (~25% faster).
-    # float64 (or any non-float32) input anywhere promotes the whole
-    # DP to float64, so arbitrary-valued callers get the bit-exact
-    # reference behavior (property-tested both ways).
-    dtype = np.result_type(np.float32, a.dtype,
-                           *(e.dtype for e in em_list))
-    if dtype != np.float32:
-        dtype = np.float64
-    em = np.zeros((n, tmax, NUM_TAGS), dtype=dtype)
-    for i, e in enumerate(em_list):
-        em[i, : e.shape[0]] = e
-    paths = viterbi_batch_padded(em, lens, a)
-    return [paths[i, : lens[i]].tolist() for i in range(n)]
-
-
 def viterbi_batch_padded(
     em: np.ndarray, lens: np.ndarray, a: np.ndarray
 ) -> np.ndarray:
     """Core padded-tensor Viterbi DP: em is [n, tmax, 7], lens the
     per-sequence valid lengths; returns int8 paths [n, tmax] (values
-    past each length are zero-filled, never meaningful). Same dtype
-    promotion rule as viterbi_batch (which delegates here): an
-    all-float32 input runs the exact float32 fast path, anything else
-    promotes the whole DP to float64.
+    past each length are zero-filled, never meaningful).
+
+    DP precision follows the PROMOTED input dtype (emissions AND
+    transitions): the model path is all-float32 — and its values are
+    half-integer constants (enforced at artifact load, magnitude
+    < 2^24), so the float32 DP is EXACT there: same argmax, half the
+    memory bandwidth of float64 in the hot loop (~25% faster).
+    float64 (or any non-float32) input anywhere promotes the whole DP
+    to float64, so arbitrary-valued callers get the bit-exact
+    reference behavior (tested both ways against viterbi).
 
     The max-plus step exploits transition COLUMN structure instead of
     materializing the [n, 7, 7] candidate tensor: cur-tags whose
@@ -478,7 +393,7 @@ def decode_bio_batch_arrays(
     even), lens the valid lengths. Returns per-sequence (begins, ends,
     etype_codes) as int32 numpy arrays with codes 0=PER 1=LOC 2=ORG —
     the exact spans decode_bio produces, including IOB2 repair
-    (property-tested via the list wrapper below): a position OPENS a
+    (tested against decode_bio): a position OPENS a
     span iff its tag is non-O and (it is a B tag, or the previous tag
     is O / a different entity type); a span runs until the next opener
     or non-entity position.
@@ -524,20 +439,6 @@ def decode_bio_batch_arrays(
     )
 
 
-def decode_bio_batch(
-    paths: np.ndarray, lens: np.ndarray
-) -> tuple[list[list[int]], list[list[int]], list[list[int]]]:
-    """List-typed wrapper of decode_bio_batch_arrays (same spans;
-    kept for callers and property tests that compare against the
-    single-sequence decode_bio oracle)."""
-    bs, es, cs = decode_bio_batch_arrays(paths, lens)
-    return (
-        [x.tolist() for x in bs],
-        [x.tolist() for x in es],
-        [x.tolist() for x in cs],
-    )
-
-
 def _span(begin: int, end: int, etype: str, text: str) -> dict:
     return {
         "begin": begin,
@@ -545,9 +446,3 @@ def _span(begin: int, end: int, etype: str, text: str) -> dict:
         "etype": etype,
         "surface": text[begin:end],
     }
-
-
-def tag_text(text: str, matcher: LexiconMatcher, a: np.ndarray) -> list[str]:
-    """text -> BIO tag strings (len == min(len(text), MAX_TAG_LEN))."""
-    e = emissions(text, matcher)
-    return [TAGS[i] for i in viterbi(e, a)]

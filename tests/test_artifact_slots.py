@@ -31,14 +31,20 @@ def test_v2_roundtrip_and_v1_compat(t1v2_dir):
 
 
 def test_unknown_kind_rejected():
-    from kgx.tagcore import LexiconMatcher, build_transitions, make_emitter
+    from kgx.tagcore import (
+        LexiconMatcher,
+        build_transitions,
+        make_batch_emitter,
+        make_emitter,
+    )
 
     art = TaggerArtifact(
         forms=("x",), etypes=("PER",), transitions=build_transitions(),
         kind="bert_base",  # not implemented in this environment
     )
-    with pytest.raises(ValueError):
-        make_emitter(art, LexiconMatcher(art))
+    for make in (make_emitter, make_batch_emitter):
+        with pytest.raises(ValueError, match="bert_base"):
+            make(art, LexiconMatcher(art))
 
 
 def test_v2_is_behaviorally_distinct(t1v2_dir):

@@ -4,8 +4,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from kgx import oracle
+from kgx.contract import TAGS
 from kgx.evalkit import conlleval, triple_prf
-from kgx.tagcore import LexiconMatcher, TaggerArtifact, tag_text
+from kgx.tagcore import LexiconMatcher, TaggerArtifact, make_emitter, viterbi
 
 
 @pytest.fixture(scope="module")
@@ -67,12 +68,13 @@ def test_conlleval_on_bio_fixture(t1_dir):
     (gold spans come from the same gazetteer splices the lexicon holds)."""
     rows = pq.read_table(f"{t1_dir}/bio_eval.parquet").to_pylist()
     art = TaggerArtifact.load(f"{t1_dir}/tagger_v1.npz")
-    matcher = LexiconMatcher(art)
+    emit = make_emitter(art, LexiconMatcher(art))
     gold, pred = [], []
     for r in rows:
         text = "".join(r["chars"])
         gold.append(r["gold_tags"])
-        pred.append(tag_text(text, matcher, art.transitions))
+        pred.append([TAGS[i] for i in viterbi(emit(text),
+                                                art.transitions)])
     rep = conlleval(gold, pred)
     assert rep["overall"]["f1"] >= 0.99, rep["overall"]
     assert rep["token_accuracy"] >= 0.99

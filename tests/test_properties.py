@@ -15,8 +15,9 @@ from kgx.tagcore import (
     build_transitions,
     decode_bio,
     viterbi,
-    viterbi_batch,
+    viterbi_batch_padded,
 )
+from tests.tagger_pad import padded_viterbi
 
 A = build_transitions()
 
@@ -82,7 +83,7 @@ def test_viterbi_is_optimal_with_lowest_id_ties(e):
 def test_batched_variants_agree_with_single(ems):
     ems64 = [e.astype(np.float64) for e in ems]
     want = [viterbi(e, A) for e in ems64]
-    assert viterbi_batch(ems64, A) == want
+    assert padded_viterbi(ems64, A) == want
 
 
 @settings(max_examples=80, deadline=None)
@@ -226,15 +227,19 @@ def test_float32_fast_path_agrees_on_half_integers(ems):
     ems32 = [(np.round(e * 2) / 2).astype(np.float32) for e in ems]
     want = [viterbi(e.astype(np.float64), A) for e in ems32]
     a32 = A.astype(np.float32)
-    assert viterbi_batch(ems32, a32) == want
+    assert padded_viterbi(ems32, a32) == want
 
 
 def test_viterbi_batch_promotes_non_float_inputs():
-    """Non-float32 inputs must promote the DP to float64 — an int64
-    emission of 2^24+1 is not float32-representable and a downcast
-    would flip the argmax against the reference."""
+    """Non-float32 inputs must promote the padded DP to float64 — an
+    int64 emission of 2^24+1 is not float32-representable and a
+    downcast would flip the argmax against the reference."""
     e = np.zeros((2, NUM_TAGS), dtype=np.int64)
     e[1, 3] = 2**24
     e[1, 4] = 2**24 + 1
     want = viterbi(e.astype(np.float64), A)
-    assert viterbi_batch([e], A) == [want]
+    # the int64 tensor goes in as is: the promotion under test is
+    # viterbi_batch_padded's own
+    paths = viterbi_batch_padded(e[None], np.array([2]), A)
+    assert paths[0].tolist() == want
+    assert want[1] == 4

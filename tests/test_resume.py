@@ -245,13 +245,21 @@ def test_events_keyed_uniquely_by_stage_and_table(auto_run):
 def test_rerun_of_complete_run_skips_probe_and_cc_loop(spark, t1_dir,
                                                        auto_run):
     """A rerun on a complete warehouse does none of a finished stage's
-    eager work — no dup-rate probe, no CC loop — and leaves every
-    table's content hash as it was."""
+    eager work — no dup-rate probe, no CC loop, no table or dim read,
+    so no Spark job at all — and leaves every table's content hash as
+    it was."""
     hashes = {e["table"]: e["content_hash"] for e in auto_run.events
               if e.get("content_hash")}
     again = Runner(spark, t1_dir, auto_run.io.warehouse, "again",
                    buckets=8)
-    again.run()
+    sc = spark.sparkContext
+    sc.setJobGroup("rerun_complete", "rerun of a complete warehouse")
+    try:
+        again.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("rerun_complete") == []
     assert not [e for e in again.events if e.get("probe")], again.events
     assert not [e for e in again.events
                 if e["table"] == "cc_loop" and not e.get("skipped")]

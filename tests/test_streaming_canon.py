@@ -301,7 +301,7 @@ def test_empty_first_batch_then_data(spark, t1_dir, tmp_path):
 
 
 def test_updater_requires_udf_and_patterns(spark, tmp_path):
-    with pytest.raises(ValueError, match="patterns_rows"):
+    with pytest.raises(TypeError, match="patterns_rows"):
         streaming.incremental_canon_updater(
             spark, str(tmp_path), None)
 

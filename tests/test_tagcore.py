@@ -13,11 +13,13 @@ from kgx.tagcore import (
     TaggerArtifact,
     build_transitions,
     decode_bio,
-    emissions,
-    tag_text,
+    decode_bio_batch_arrays,
+    make_batch_emitter,
+    make_emitter,
     viterbi,
-    viterbi_batch,
+    viterbi_batch_padded,
 )
+from tests.tagger_pad import pad, padded_viterbi
 
 
 def brute_force(e: np.ndarray, a: np.ndarray) -> list[int]:
@@ -61,7 +63,7 @@ def test_viterbi_batch_matches_single():
     a = build_transitions()
     ems = [rng.randn(t, NUM_TAGS).astype(np.float32) * 2
            for t in (1, 3, 8, 5, 2, 13)]
-    batch = viterbi_batch(ems, a)
+    batch = padded_viterbi(ems, a)
     for e, got in zip(ems, batch):
         assert got == viterbi(e, a)
 
@@ -109,7 +111,8 @@ def test_tag_text_end_to_end():
     art = _artifact()
     m = LexiconMatcher(art)
     text = "Ana Park visited Lake Virel ."
-    tags = tag_text(text, m, art.transitions)
+    path = viterbi(make_emitter(art, m)(text), art.transitions)
+    tags = [TAGS[i] for i in path]
     assert len(tags) == len(text)
     spans = decode_bio(tags, text)
     assert [(s["surface"], s["etype"]) for s in spans] == [
@@ -120,7 +123,7 @@ def test_tag_text_end_to_end():
 def test_emissions_shape_and_truncation():
     art = _artifact()
     m = LexiconMatcher(art)
-    e = emissions("x" * 1000, m)
+    e = make_emitter(art, m)("x" * 1000)
     assert e.shape == (512, NUM_TAGS)
 
 
@@ -197,8 +200,6 @@ def _rand_texts(rng, n, alphabet, forms):
 
 @pytest.mark.parametrize("seed", range(3))
 def test_emissions_batch_matches_single(seed):
-    from kgx.tagcore import emissions_batch
-
     rng = np.random.RandomState(seed)
     forms = ["ada", "bob corp", "cd", "dd inc"]
     etypes = ["PER", "ORG", "LOC", "ORG"]
@@ -209,22 +210,17 @@ def test_emissions_batch_matches_single(seed):
     )
     m = LexiconMatcher(art)
     texts = _rand_texts(rng, 40, "abcd ", forms) + ["", "x" * 600]
-    em, lens = emissions_batch(texts, m)
+    em, lens = make_batch_emitter(art, m)(texts)
     assert em.dtype == np.float32
+    emit = make_emitter(art, m)
     for i, t in enumerate(texts):
-        single = emissions(t, m)
+        single = emit(t)
         assert lens[i] == single.shape[0]
         assert np.array_equal(em[i, : lens[i]], single)
 
 
 @pytest.mark.parametrize("seed", range(3))
 def test_emissions_ctx_batch_matches_single(seed):
-    from kgx.tagcore import (
-        emissions_ctx,
-        emissions_ctx_batch,
-        make_batch_emitter,
-    )
-
     rng = np.random.RandomState(seed + 50)
     forms = ("ada", "bobcorp", "cd")
     etypes = ("PER", "ORG", "LOC")
@@ -239,17 +235,22 @@ def test_emissions_ctx_batch_matches_single(seed):
         weak=weak,
     )
     m = LexiconMatcher(art)
-    weak_forms = frozenset(f for f, w in zip(forms, weak) if w)
     texts = _rand_texts(rng, 40, "abcdr t", list(forms)) + [
         "dr ada", "ada", "at bobcorp", ""
     ]
-    em, lens = emissions_ctx_batch(texts, m, cues, weak_forms)
+    em, lens = make_batch_emitter(art, m)(texts)
+    emit = make_emitter(art, m)
     for i, t in enumerate(texts):
-        single = emissions_ctx(t, m, cues, weak_forms)
+        single = emit(t)
+        assert lens[i] == single.shape[0]
         assert np.array_equal(em[i, : lens[i]], single)
-    # dispatcher picks the ctx model for the v2 kind
-    em2, lens2 = make_batch_emitter(art, m)(texts)
-    assert np.array_equal(em2, em) and np.array_equal(lens2, lens)
+    # both emitters run the ctx model for the v2 kind: a cue adds its
+    # bonus to the B-score, and an unsupported weak form emits nothing
+    b_per, b_org = TAGS.index("B-PER"), TAGS.index("B-ORG")
+    k = len(texts) - 4
+    assert em[k, 3, b_per] == 12.0  # "dr ada": 10 + cue bonus 2.0
+    assert em[k + 1, 0, b_per] < 0  # bare weak "ada": no emission
+    assert em[k + 2, 3, b_org] == 11.5  # "at bobcorp": 10 + 1.5
 
 
 @pytest.mark.parametrize("seed", range(5))
@@ -257,42 +258,37 @@ def test_decode_bio_batch_matches_single(seed):
     """Vectorized span decode == decode_bio on random tag matrices,
     including invalid IOB2 sequences that exercise the repair path
     and full-length rows (span running to the padded matrix edge)."""
-    from kgx.tagcore import decode_bio_batch
-
     rng = np.random.RandomState(seed)
     n, tmax = 30, 9
     paths = rng.randint(0, NUM_TAGS, size=(n, tmax)).astype(np.int8)
     lens = rng.randint(0, tmax + 1, size=n).astype(np.int64)
     lens[0], paths[0] = tmax, NUM_TAGS - 1  # full row of I-ORG
     code_of = {"PER": 0, "LOC": 1, "ORG": 2}
-    bs, es, cs = decode_bio_batch(paths, lens)
+    bs, es, cs = decode_bio_batch_arrays(paths, lens)
     for i in range(n):
         tags = [TAGS[j] for j in paths[i, : lens[i]]]
         text = "x" * int(lens[i])
         spans = decode_bio(tags, text)
-        assert bs[i] == [s["begin"] for s in spans]
-        assert es[i] == [s["end"] for s in spans]
-        assert cs[i] == [code_of[s["etype"]] for s in spans]
+        assert bs[i].dtype == es[i].dtype == cs[i].dtype == np.int32
+        assert bs[i].tolist() == [s["begin"] for s in spans]
+        assert es[i].tolist() == [s["end"] for s in spans]
+        assert cs[i].tolist() == [code_of[s["etype"]] for s in spans]
 
 
 def test_viterbi_batch_padded_direct():
-    """Padded-core entry point: same paths as the list API for
-    variable-length float32 model inputs, zero past each length."""
-    from kgx.tagcore import viterbi_batch_padded
-
+    """Padded-core entry point: same paths as the per-sequence
+    reference for variable-length float32 model inputs, zero past
+    each length."""
     rng = np.random.RandomState(11)
     a = build_transitions()
     ems = [
         (rng.randint(-20, 21, size=(t, NUM_TAGS)) / 2.0).astype(np.float32)
         for t in (3, 1, 7, 5, 7)
     ]
-    want = viterbi_batch(ems, a)
-    lens = np.array([e.shape[0] for e in ems], dtype=np.int64)
-    em = np.zeros((len(ems), 7, NUM_TAGS), dtype=np.float32)
-    for i, e in enumerate(ems):
-        em[i, : e.shape[0]] = e
+    em, lens = pad(ems)
+    assert em.dtype == np.float32
     paths = viterbi_batch_padded(em, lens, a)
     assert paths.shape == (5, 7)
-    for i in range(len(ems)):
-        assert paths[i, : lens[i]].tolist() == want[i]
+    for i, e in enumerate(ems):
+        assert paths[i, : lens[i]].tolist() == viterbi(e, a)
         assert not paths[i, lens[i] :].any() or lens[i] == 7
