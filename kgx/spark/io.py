@@ -3,14 +3,16 @@ parquet + a JSON manifest (SURVEY.md §7 hard parts: Iceberg runtime
 jars are absent in this sandbox; this layer keeps the pipeline code
 backend-agnostic so `spark.read.format('iceberg')` is a drop-in).
 
-A manifest records what Iceberg's snapshot metadata would: inputs
-fingerprint, row count, schema, completion marker — which is exactly
-what stage-level checkpoint/resume needs (BASELINE north_rule:
-"resumable from checkpoint with per-partition lineage + metrics").
+A manifest is the one record of a table's metadata, as Iceberg's
+snapshot metadata would be: inputs fingerprint, row count, content
+hash, schema, per-file lineage (path, rows, bytes) and the completion
+marker — what stage-level checkpoint/resume needs (BASELINE
+north_rule: "resumable from checkpoint with per-partition lineage +
+metrics"). Reads of the current data use its schema (no inference).
 
 Two table kinds:
-  * snapshot tables (write/finalize): every write is a full immutable
-    snapshot `_v{n}`; reads see the current one; old ones expire.
+  * snapshot tables (write): every write is a full immutable snapshot
+    `_v{n}`; reads see the current one; old ones expire.
   * log tables (append): every write is a DELTA segment; reads resolve
     the merged view — plain union, latest-wins-per-key with tombstones
     (upsert log), or per-key sum/min/max (aggregation log). Segments
@@ -23,10 +25,32 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def content_sig_col(df: DataFrame):
+    """Order/partitioning-invariant content signature aggregate:
+    sum of per-row murmur3 hashes, computed JVM-side inside whatever
+    job consumes it (no extra scan). F.hash handles nested
+    array/struct columns natively — no stringification (casting a
+    spans array<struct> to string per row measured ~30% of the tag
+    stage). Engine-specific values, but only ever compared
+    Spark-to-Spark (resume identity, N-vs-4N equality)."""
+    return F.sum(
+        F.hash(*[F.col(c) for c in df.columns]).cast("bigint")
+    ).alias("sig")
+
+
+def stored_schema(manifest: dict, drop=()) -> T.StructType:
+    """The schema a manifest stores, without the `drop` columns."""
+    return T.StructType(
+        [f for f in T.StructType.fromJson(manifest["schema"]).fields
+         if f.name not in drop])
 
 
 class TableIO:
@@ -75,37 +99,38 @@ class TableIO:
         partition_by: list[str] | None = None,
         inputs_fingerprint: str | None = None,
         extra: dict | None = None,
-        defer_manifest: bool = False,
     ) -> dict:
-        """Write a new parquet version of `table` + its manifest;
-        manifest lands last (commit marker).
+        """Write a new parquet snapshot of `table` and commit its
+        manifest; the manifest lands last (commit marker), in one
+        atomic dump, so a crash never leaves a complete manifest
+        without its content hash or lineage.
 
-        The manifest's row count comes from the parquet footers
-        (driver-side metadata read) — never from a second full scan of
-        the data.
-
-        With defer_manifest=True the data is written but the manifest
-        file is NOT: the caller enriches the returned dict (e.g. with
-        Observation-collected rows/content_hash) and commits it via
-        finalize(). This keeps the commit marker a single atomic dump —
-        a crash between two dumps could otherwise leave a `complete`
-        manifest missing content_hash, which a resumed run would skip
-        and downstream consumers would KeyError on.
-        """
+        Row count and an order-insensitive content signature are
+        observed DURING the write job (`df.observe`: sum of per-row
+        murmur3 — commutative, so invariant under partitioning and
+        parallelism); the per-file lineage (rows, bytes per output
+        file) comes from one read of the parquet footers (driver-side
+        metadata). No second scan of the data — at 100 TB a re-scan
+        per table would double the pipeline's IO."""
         prev = self.manifest(table)
         if prev is not None and prev.get("kind") == "log":
             raise ValueError(
                 f"{table} is a log table — use append(), not write() "
                 "(a snapshot write would orphan its delta segments)")
         version = (prev["version"] + 1) if prev and "version" in prev else 1
-        w = df.write.mode("overwrite")
+        obs = Observation()
+        w = df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                       content_sig_col(df)).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         t0 = time.time()
         w.parquet(self.path(table, version))
-        rows = sum(r for _, r, _ in self.file_stats(table, version))
+        got = obs.get
+        rows = int(got["rows"])
+        content_hash = format(int(got["sig"] or 0) % (1 << 63), "016x")
         snapshots = list(prev.get("snapshots", [])) if prev else []
         snapshots.append({"version": version, "rows": rows,
+                          "content_hash": content_hash,
                           **({"run_id": extra["run_id"]}
                              if extra and "run_id" in extra else {})})
         manifest = {
@@ -113,6 +138,9 @@ class TableIO:
             "complete": True,
             "version": version,
             "rows": rows,
+            "content_hash": content_hash,
+            "files": [{"path": p, "rows": r, "bytes": b}
+                      for p, r, b in self.file_stats(table, version)],
             "schema": df.schema.jsonValue(),
             "partition_by": partition_by or [],
             "inputs_fingerprint": inputs_fingerprint,
@@ -120,15 +148,8 @@ class TableIO:
             "snapshots": snapshots,
             **(extra or {}),
         }
-        if defer_manifest:
-            return manifest
-        return self.finalize(table, manifest)
-
-    def finalize(self, table: str, manifest: dict) -> dict:
-        """Atomically commit a manifest (single dump) + expire old
-        snapshots — the one place the commit marker is born."""
         self._dump_manifest(table, manifest)
-        self.expire_snapshots(table, keep=self.KEEP_SNAPSHOTS)
+        self.expire_snapshots(table)
         return manifest
 
     # -- append-log tables (Iceberg-style delta segments) ---------------
@@ -210,14 +231,13 @@ class TableIO:
             # parquet) rather than re-executing the delta's
             # unmaterialized plan a second time.
             dup = (
-                df.sparkSession.read.parquet(self.path(table, version))
+                df.sparkSession.read.schema(seg.schema)
+                .parquet(self.path(table, version))
                 .where(~F.col("_del"))
                 .groupBy(*log_keys).count()
                 .where(F.col("count") > 1).limit(1).collect()
             )
             if dup:
-                import shutil
-
                 shutil.rmtree(self.path(table, version),
                               ignore_errors=True)
                 # In a foreachBatch caller an offending delta is a
@@ -233,14 +253,8 @@ class TableIO:
                     f"log key {sample} — latest-wins within one "
                     f"segment would be nondeterministic; dedupe the "
                     f"delta before append")
-        stats = self.file_stats(table, version)
-        rows = sum(r for _, r, _ in stats)
-        nbytes = sum(b for _, _, b in stats)
         segments = list(prev.get("segments", [])) if prev else []
-        segments.append(
-            {"version": version, "rows": rows, "bytes": nbytes,
-             "batch_tag": batch_tag}
-        )
+        segments.append(self._segment(table, version, batch_tag))
         manifest = {
             "table": table,
             "complete": True,
@@ -255,6 +269,16 @@ class TableIO:
         self._dump_manifest(table, manifest)
         return manifest
 
+    def _segment(self, table: str, version: int,
+                 batch_tag: str | None) -> dict:
+        """The manifest record of one written segment: rows and bytes
+        summed from its parquet footers."""
+        stats = self.file_stats(table, version)
+        return {"version": version,
+                "rows": sum(r for _, r, _ in stats),
+                "bytes": sum(b for _, _, b in stats),
+                "batch_tag": batch_tag}
+
     def prune_batch(self, table: str, batch_tag: str) -> int:
         """Drop every segment written under `batch_tag` (crash
         rollback for a half-applied batch). Returns segments dropped.
@@ -263,8 +287,6 @@ class TableIO:
         segments carry batch_tag None, so a None/absent tag would
         silently match — and delete — COMMITTED state instead of
         being a no-op."""
-        import shutil
-
         if batch_tag is None:
             raise ValueError(
                 "prune_batch(None) would drop compacted/untagged "
@@ -275,10 +297,8 @@ class TableIO:
         keep = [s for s in m["segments"] if s.get("batch_tag") != batch_tag]
         dropped = [s for s in m["segments"] if s.get("batch_tag") == batch_tag]
         for s in dropped:
-            shutil.rmtree(
-                os.path.join(self.table_dir(table), f"_v{s['version']}"),
-                ignore_errors=True,
-            )
+            shutil.rmtree(self.path(table, s["version"]),
+                          ignore_errors=True)
         if not keep:
             os.remove(self.manifest_path(table))
             return len(dropped)
@@ -293,8 +313,6 @@ class TableIO:
         single fresh segment and drop the old ones. Cost is O(state),
         so callers amortize it (every K batches) — per-batch appends
         stay O(batch) and reads stay bounded at K segments."""
-        import shutil
-
         m = self.manifest(table)
         if not m or m.get("kind") != "log":
             raise ValueError(f"{table} is not a log table")
@@ -305,30 +323,22 @@ class TableIO:
             "_seg", F.lit(version)
         )
         seg.write.mode("overwrite").parquet(self.path(table, version))
-        stats = self.file_stats(table, version)
-        m["segments"] = [
-            {"version": version,
-             "rows": sum(r for _, r, _ in stats),
-             "bytes": sum(b for _, _, b in stats),
-             "batch_tag": None}
-        ]
+        m["segments"] = [self._segment(table, version, None)]
         m["version"] = version
         m["rows"] = m["segments"][0]["rows"]
         self._dump_manifest(table, m)
         for s in old:
-            shutil.rmtree(
-                os.path.join(self.table_dir(table), f"_v{s['version']}"),
-                ignore_errors=True,
-            )
+            shutil.rmtree(self.path(table, s["version"]),
+                          ignore_errors=True)
         return m
 
     def _read_log(self, spark: SparkSession, table: str,
                   m: dict) -> DataFrame:
-        paths = [
-            os.path.join(self.table_dir(table), f"_v{s['version']}")
-            for s in m["segments"]
-        ]
-        df = spark.read.parquet(*paths)
+        paths = [self.path(table, s["version"]) for s in m["segments"]]
+        df = spark.read.schema(
+            stored_schema(m).add("_del", T.BooleanType())
+            .add("_seg", T.IntegerType())
+        ).parquet(*paths)
         keys = m.get("log_keys") or []
         agg = m.get("agg_spec")
         if keys:
@@ -355,12 +365,11 @@ class TableIO:
             return df  # aggregation drops _seg/_del already
         return df.drop("_seg", "_del")
 
-    def expire_snapshots(self, table: str, keep: int = 2) -> None:
-        """Drop snapshot data dirs older than the newest `keep`
-        (manifest history rows are retained). Log tables keep all
-        their segments (compact() bounds them instead)."""
-        import shutil
-
+    def expire_snapshots(self, table: str) -> None:
+        """Drop snapshot data dirs older than the newest
+        KEEP_SNAPSHOTS (manifest history rows are retained). Log
+        tables keep all their segments (compact() bounds them
+        instead)."""
         m = self.manifest(table)
         if not m or "version" not in m or m.get("kind") == "log":
             return
@@ -374,7 +383,7 @@ class TableIO:
                     v = int(name[2:])
                 except ValueError:
                     continue
-                if v <= cur - keep:
+                if v <= cur - self.KEEP_SNAPSHOTS:
                     shutil.rmtree(os.path.join(base, name),
                                   ignore_errors=True)
 
@@ -382,7 +391,8 @@ class TableIO:
                    version: int | None = None) -> list[tuple[str, int, int]]:
         """(relpath, rows, bytes) per output parquet file, straight from
         the footers (driver-side metadata read; no data scan). One file
-        per write task -> these are the per-partition lineage counters."""
+        per write task -> these are the per-partition lineage counters
+        a snapshot manifest stores as `files`."""
         import pyarrow.parquet as pq
 
         root = self.path(table, version)
@@ -403,11 +413,21 @@ class TableIO:
              version: int | None = None) -> DataFrame:
         """Read the current snapshot, or time-travel to `version`.
         Log tables resolve to their merged view (union of segments;
-        latest-wins per key + tombstone filter when keyed)."""
+        latest-wins per key + tombstone filter when keyed).
+
+        The current data is read with the manifest's schema, so the
+        read runs no schema-inference job; partition columns are left
+        out of it and still come from the directory names, as they
+        would with inference. Time travel infers (an old snapshot's
+        schema is not kept)."""
         m = self.manifest(table)
-        if m is not None and m.get("kind") == "log" and version is None:
+        if m is None or version is not None:
+            return spark.read.parquet(self.path(table, version))
+        if m.get("kind") == "log":
             return self._read_log(spark, table, m)
-        return spark.read.parquet(self.path(table, version))
+        return spark.read.schema(
+            stored_schema(m, drop=m["partition_by"])
+        ).parquet(self.path(table, m["version"]))
 
     def manifest(self, table: str) -> dict | None:
         p = self.manifest_path(table)

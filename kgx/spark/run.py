@@ -8,14 +8,14 @@ whose manifest is complete AND whose inputs fingerprint is unchanged is
 skipped — so a run killed after stage k resumes at k+1 and produces
 byte-identical output (tested in tests/test_resume.py).
 
-Lineage costs (nearly) nothing extra: row count and an
-order-insensitive content signature are collected DURING the write job
-via `df.observe` (sum of per-row murmur3 — commutative, so invariant
+Lineage costs (nearly) nothing extra and lives in the manifest that
+commits each table: TableIO.write observes the row count and an
+order-insensitive content signature DURING the write job (invariant
 under partitioning/parallelism; this is what the local[8]-vs-local[32]
-equality assertion in bench uses), and per-output-file counters
-(rows, bytes) come from the parquet footers (driver-side metadata
-read) into the `metrics` table. No second scan of the data per stage —
-at 100 TB a re-scan per stage would double the pipeline's IO.
+equality assertion in bench uses) and records one (path, rows, bytes)
+entry per output file from the parquet footers. A killed run keeps
+the lineage of every table it committed. Each commit adds one event
+built from that manifest.
 
 Each stage's outputs are built lazily (one builder per table), so the
 eager work a stage needs — the tag stage's duplication-rate probe, the
@@ -70,25 +70,6 @@ TAG_DISTINCT_AUTO_MIN_RATE_LEXICON = 15.0
 # resumes from; the loop's per-iteration localCheckpoint only cuts
 # lineage (executor-local, lost with the executor).
 CC_CHECKPOINT_EVERY = 5
-
-METRICS_SCHEMA = (
-    "run_id string, stage string, table string, partition_id int, "
-    "rows bigint, bytes bigint, content_hash string"
-)
-
-
-def content_sig_col(df: DataFrame):
-    """Order/partitioning-invariant content signature aggregate:
-    sum of per-row murmur3 hashes, computed JVM-side inside whatever
-    job consumes it (no extra scan). F.hash handles nested
-    array/struct columns natively — no stringification (casting a
-    spans array<struct> to string per row measured ~30% of the tag
-    stage). Engine-specific values, but only ever compared
-    Spark-to-Spark (resume identity, N-vs-4N equality)."""
-    return F.sum(
-        F.hash(*[F.col(c) for c in df.columns]).cast("bigint")
-    ).alias("sig")
-
 
 def read_alias_dict(spark: SparkSession, dims_dir: str) -> DataFrame:
     """The latest alias dictionary (lazy: no job until used)."""
@@ -148,7 +129,6 @@ class Runner:
         self.tag_distinct = tag_distinct
         self._tagger = None
         self.events: list[dict] = []
-        self._metrics_rows: list[dict] = []
 
     # -- plumbing ------------------------------------------------------
 
@@ -176,61 +156,17 @@ class Runner:
 
     def _commit(self, stage: str, table: str, df: DataFrame,
                 fingerprint: str, partition_by=None) -> None:
-        from pyspark.sql import Observation
-
         t0 = time.time()
-        obs = Observation(f"{self.run_id}:{table}")
-        observed = df.observe(obs, F.count(F.lit(1)).alias("rows"),
-                              content_sig_col(df))
-        # the manifest (commit marker) is written exactly ONCE, after
-        # the Observation values are in hand — defer_manifest keeps a
-        # crash from leaving a complete-but-hashless manifest behind
         man = self.io.write(
-            observed, table, partition_by=partition_by,
+            df, table, partition_by=partition_by,
             inputs_fingerprint=fingerprint,
-            extra={"run_id": self.run_id, "stage": stage},
-            defer_manifest=True,
-        )
-        got = obs.get
-        content = format(int(got["sig"] or 0) % (1 << 63), "016x")
-        man["rows"] = int(got["rows"])
-        man["snapshots"][-1]["rows"] = man["rows"]
-        man["content_hash"] = content
-        self.io.finalize(table, man)
-
-        # per-output-file lineage counters from parquet footers;
-        # buffered and flushed as one write at end of run (each tiny
-        # append is otherwise its own Spark job)
-        stats = self.io.file_stats(table, man["version"])
-        wall_ms = int((time.time() - t0) * 1000)
-        self._metrics_rows.extend(
-            {"run_id": self.run_id, "stage": stage, "table": table,
-             "partition_id": i, "rows": r, "bytes": b,
-             "content_hash": "", "wall_ms": wall_ms}
-            for i, (_, r, b) in enumerate(stats)
-        )
+            extra={"run_id": self.run_id, "stage": stage})
         self.events.append(
             {"stage": stage, "table": table, "rows": man["rows"],
-             "partitions": len(stats),
-             "content_hash": content,
+             "partitions": len(man["files"]),
+             "content_hash": man["content_hash"],
              "wall_s": round(time.time() - t0, 3), "skipped": False}
         )
-
-    def flush_metrics(self) -> None:
-        if not self._metrics_rows:
-            return
-        import pandas as pd
-
-        # Arrow path (pandas -> createDataFrame) instead of a list of
-        # dicts: the row-list path plans a 32-slice Python RDD whose
-        # pickling re-runs on every action — measured ~5 s per flush
-        # for a few hundred rows vs ~1 s via Arrow.
-        mdf = self.spark.createDataFrame(
-            pd.DataFrame(self._metrics_rows),
-            METRICS_SCHEMA + ", wall_ms bigint")
-        mdf.coalesce(1).write.mode("append").parquet(
-            self.io.path("metrics"))
-        self._metrics_rows = []
 
     def _fingerprint(self, input_paths: list[str]) -> str:
         return fingerprint_paths(*input_paths) + f"|b{self.buckets}"
@@ -265,13 +201,10 @@ class Runner:
         if unknown:
             raise SystemExit(
                 f"unknown stage(s) {unknown}; valid: {', '.join(STAGES)}")
-        try:
-            for stage in wanted:
-                getattr(self, f"stage_{stage}")()
-                if upto is not None and stage == upto:
-                    break
-        finally:
-            self.flush_metrics()
+        for stage in wanted:
+            getattr(self, f"stage_{stage}")()
+            if upto is not None and stage == upto:
+                break
         return self.events
 
     def stage_ingest(self):

@@ -246,7 +246,10 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
       nodes) are appended to the keyed cc_labels log (latest-wins on
       read), and entity_map / cc_vertices are recomputed only for the
       affected components, with tombstones for canonical vertices that
-      merged away.
+      merged away: the affected nodes' canonical ids before the batch
+      are read from the entity_map log, never recomputed;
+    * every log read takes its schema from the table's manifest, so
+      reading state runs no schema-inference job.
 
     Restart safety (exactly-once on an at-least-once foreachBatch):
     every segment written for a batch carries a batch tag, and a
@@ -354,6 +357,7 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
         # so these stay consistent across the appends below
         nodes_prev = io.read(spark, "nodes")
         labels_prev = io.read(spark, "cc_labels")
+        map_prev = io.read(spark, "entity_map")
         new_only = (
             nodes_b.join(nodes_prev.select("node_id"), "node_id",
                          "left_anti")
@@ -377,32 +381,25 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
             labels_prev, new_only, lsh_new
         ).localCheckpoint()
 
-        # affected components, before and after this batch
+        # affected components after this batch: every old member of a
+        # merged component is relabeled in the delta, so members_now
+        # covers all of them, and their canonical ids before the batch
+        # are in the entity_map log — the ones that are no longer
+        # canonical are the tombstones
         aff_new = delta_labels.select("label").distinct()
-        # existing changed nodes = delta rows whose node_id was already
-        # labeled (new nodes are absent from labels_prev)
-        aff_prev = (
-            labels_prev.join(delta_labels.select("node_id"), "node_id",
-                             "left_semi")
-            .select("label")
-            .unionByName(
-                labels_prev.select("label").join(aff_new, "label",
-                                                 "left_semi")
-            )
-            .distinct()
-        )
-        prev_members = labels_prev.join(aff_prev, "label", "left_semi")
-        _, prev_cv = stages.canonicalize(nodes_prev, prev_members)
-        prev_canon = prev_cv.select("entity_id").localCheckpoint()
-
         io.append(delta_labels, "cc_labels", log_keys=["node_id"],
                   batch_tag=tag)
         labels_now = io.read(spark, "cc_labels")
         members_now = labels_now.join(aff_new, "label", "left_semi")
         em_delta, cv_delta = stages.canonicalize(nodes_all, members_now)
         cv_delta = cv_delta.localCheckpoint()
-        tombstones = prev_canon.join(cv_delta.select("entity_id"),
-                                     "entity_id", "left_anti")
+        tombstones = (
+            map_prev.join(members_now.select("node_id"), "node_id",
+                          "left_semi")
+            .select(F.col("canonical_id").alias("entity_id"))
+            .distinct()
+            .join(cv_delta.select("entity_id"), "entity_id", "left_anti")
+        )
         io.append(em_delta, "entity_map", log_keys=["node_id"],
                   batch_tag=tag)
         io.append(cv_delta, "cc_vertices", log_keys=["entity_id"],

@@ -6,7 +6,7 @@ same job — the full checkpointed KG pipeline on the identical bench
 fixture — runs at two parallelism levels, local[8] (N) and local[32]
 (4N), each in a fresh SparkSession with shuffle partitions matched to
 cores. Outputs are asserted identical via the partitioning-invariant
-per-table content hashes from the lineage metrics. Efficiency =
+per-table content hashes from the table manifests. Efficiency =
 (T_N / T_4N) / 4.
 
 Writes BENCH/scaling_{N}v{4N}.json (+ canonical scaling.json and a

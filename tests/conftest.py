@@ -34,3 +34,25 @@ def spark():
     s = get_spark("kgx-tests", cores=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """`spark_jobs(fn)` calls fn and returns the ids of the Spark jobs
+    it ran (a fresh job group per call, read from the status
+    tracker)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn) -> list[int]:
+        group = f"counted-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs counted by a test")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    return run

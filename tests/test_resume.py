@@ -1,4 +1,4 @@
-"""Checkpoint/resume + per-partition lineage metrics (north_rule:
+"""Checkpoint/resume + per-file lineage in the manifests (north_rule:
 "resumable from checkpoint with per-partition lineage + metrics").
 
 Simulated failure after stage k -> re-run skips 1..k, completes, and
@@ -10,7 +10,12 @@ import os
 
 import pytest
 
-from kgx.spark.run import Runner
+from kgx.spark.run import STAGES, Runner
+
+# every table a complete run commits
+TABLES = ("turns", "tagged", "triples_raw", "mentions", "nodes",
+          "lsh_edges", "links", "entity_map", "cc_vertices", "edges",
+          "vertices")
 
 
 @pytest.fixture(scope="module")
@@ -54,20 +59,54 @@ def test_resume_after_simulated_failure(spark, t1_dir, warehouses):
         ), table
 
 
+def assert_manifest_lineage(r, table):
+    """The manifest that committed `table` lists every data file of
+    its snapshot with the file's bytes, and the files' rows add up to
+    the table's."""
+    m = r.io.manifest(table)
+    root = r.io.path(table)
+    on_disk = {os.path.relpath(p, root) for p in glob.glob(
+        os.path.join(root, "**", "*.parquet"), recursive=True)}
+    assert {f["path"] for f in m["files"]} == on_disk, table
+    for f in m["files"]:
+        assert f["bytes"] == os.path.getsize(os.path.join(root, f["path"]))
+    n = r.read(table).count()
+    assert sum(f["rows"] for f in m["files"]) == m["rows"] == n, table
+
+
 def test_metrics_lineage_rows(spark, t1_dir, warehouses):
+    """Per-file lineage and the content hash live in the manifest that
+    commits each table, stamped with the run and stage that wrote it."""
     wh = str(warehouses / "clean")
     r = Runner(spark, t1_dir, wh, "clean", buckets=8)
-    m = r.read("metrics")
-    cols = set(m.columns)
-    assert {"run_id", "stage", "table", "partition_id", "rows", "bytes",
-            "content_hash", "wall_ms"} <= cols
-    per_table = {
-        row["table"]: row["s"]
-        for row in m.groupBy("table").sum("rows")
-        .withColumnRenamed("sum(rows)", "s").collect()
-    }
-    for table in ("turns", "mentions", "triples_raw", "edges", "vertices"):
-        assert per_table.get(table, 0) == r.read(table).count(), table
+    for table in TABLES:
+        m = r.io.manifest(table)
+        assert m["run_id"] == "clean", table
+        assert len(m["content_hash"]) == 16, table
+        assert m["snapshots"][-1]["content_hash"] == m["content_hash"]
+        assert_manifest_lineage(r, table)
+    assert {r.io.manifest(t)["stage"] for t in TABLES} == set(STAGES)
+    assert not os.path.exists(os.path.join(wh, "metrics"))
+
+
+def test_killed_run_keeps_lineage_of_committed_tables(spark, t1_dir,
+                                                      tmp_path):
+    """A run killed after its tag stage never reaches the end of run();
+    every table it committed keeps its lineage, and the resumed run
+    skips those tables and keeps the first run's records of them."""
+    wh = str(tmp_path / "wh")
+    killed = Runner(spark, t1_dir, wh, "killed", buckets=8)
+    killed.stage_ingest()
+    killed.stage_tag()
+
+    resumed = Runner(spark, t1_dir, wh, "resumed", buckets=8)
+    resumed.run()
+    skipped = {e["table"] for e in resumed.events if e.get("skipped")}
+    assert skipped == {"turns", "tagged"}
+    for table in TABLES:
+        assert_manifest_lineage(resumed, table)
+        want = "killed" if table in skipped else "resumed"
+        assert resumed.io.manifest(table)["run_id"] == want, table
 
 
 def test_input_change_invalidates_resume(spark, t1_dir, warehouses,
@@ -243,7 +282,8 @@ def test_events_keyed_uniquely_by_stage_and_table(auto_run):
 
 
 def test_rerun_of_complete_run_skips_probe_and_cc_loop(spark, t1_dir,
-                                                       auto_run):
+                                                       auto_run,
+                                                       spark_jobs):
     """A rerun on a complete warehouse does none of a finished stage's
     eager work — no dup-rate probe, no CC loop, no table or dim read,
     so no Spark job at all — and leaves every table's content hash as
@@ -252,17 +292,22 @@ def test_rerun_of_complete_run_skips_probe_and_cc_loop(spark, t1_dir,
               if e.get("content_hash")}
     again = Runner(spark, t1_dir, auto_run.io.warehouse, "again",
                    buckets=8)
-    sc = spark.sparkContext
-    sc.setJobGroup("rerun_complete", "rerun of a complete warehouse")
-    try:
-        again.run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sc.statusTracker().getJobIdsForGroup("rerun_complete") == []
+    assert spark_jobs(again.run) == []
     assert not [e for e in again.events if e.get("probe")], again.events
     assert not [e for e in again.events
                 if e["table"] == "cc_loop" and not e.get("skipped")]
     assert all(e.get("skipped") for e in again.events), again.events
     assert {t: again.io.manifest(t)["content_hash"]
             for t in hashes} == hashes
+
+
+def test_read_back_runs_no_job(spark, auto_run, spark_jobs):
+    """Reading back every table of a finished run takes the schema from
+    its manifest — no schema-inference job — and yields the schema
+    inference would have."""
+    frames = {}
+    assert spark_jobs(lambda: frames.update(
+        (t, auto_run.read(t)) for t in TABLES)) == []
+    for table, df in frames.items():
+        inferred = spark.read.parquet(auto_run.io.path(table))
+        assert df.schema == inferred.schema, table

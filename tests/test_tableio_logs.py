@@ -214,3 +214,16 @@ def test_prune_batch_requires_a_tag(spark, tmp_path):
     with pytest.raises(ValueError, match="prune_batch"):
         io.prune_batch("t", None)
     assert _rows(io.read(spark, "t"), "id", "v") == {(1, "a")}
+
+
+def test_log_read_runs_no_job(spark, tmp_path, spark_jobs):
+    """A keyed log's merged view is planned from the manifest's schema
+    plus the log columns: building it runs no Spark job."""
+    io = TableIO(str(tmp_path))
+    for tag, rows in (("b0", [(1, "a"), (2, "b")]), ("b1", [(1, "A")])):
+        io.append(spark.createDataFrame(rows, "id int, v string"), "t",
+                  log_keys=["id"], batch_tag=tag)
+    got = []
+    assert spark_jobs(lambda: got.append(io.read(spark, "t"))) == []
+    assert _rows(got[0], "id", "v") == {(1, "A"), (2, "b")}
+    assert got[0].columns == ["id", "v"]
