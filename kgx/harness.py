@@ -2680,10 +2680,12 @@ def stream_windowed_counts(spark, sf):
 def stream_incremental_canon(spark, sf):
     """Streaming incremental link/canon/edges (B.9): fixture
     transcripts arrive as TWO files -> two micro-batches; each batch's
-    new nodes are diffed in, similarity edges generated new-x-all only,
-    connected components solved on the condensed (batch-sized) graph,
-    label/map/vertex DELTAS appended to keyed logs, and the batch's
-    triples folded into the additive node-keyed edge log. Returns the
+    new nodes are diffed in (the first batch against an empty state,
+    on the same path), similarity edges generated new-x-all only,
+    connected components solved on the condensed (batch-sized) graph
+    of the components the batch touches, entity_map/vertex DELTAS
+    appended to keyed logs, and the batch's triples folded into the
+    additive node-keyed edge log. Returns the
     final canonical vertices (equality of vertices, entity_map AND the
     canonical edge view with the batch pipeline is pytest-gated in
     tests/test_streaming_canon.py)."""

@@ -618,34 +618,37 @@ def _observed_changed(obs, new_labels: DataFrame,
     ).count()
 
 
-def incremental_labels(labels_prev: DataFrame, new_nodes: DataFrame,
+def touched_components(map_prev: DataFrame, new_nodes: DataFrame,
                        new_edges: DataFrame) -> DataFrame:
     """Condensed-graph incremental connected components: given the
-    previous converged labels, a batch of NEW nodes, and new edges
-    (each touching at least one new node — what similar_edges returns
-    for a batch's new nodes), return the LABEL DELTA: rows only for existing nodes
-    whose component merged plus the new nodes.
+    entity_map before a batch (node_id -> canonical_id), the batch's
+    NEW nodes and its new edges (each touching at least one new node —
+    what similar_edges returns for a batch's new nodes), return
+    (node_id, label) for every node of every component the batch
+    touches: the new nodes plus all members of each old component a
+    new edge reaches. Untouched components are not returned.
 
-    The CC itself runs on the CONDENSED graph — nodes are previous
-    component labels + new node ids, edges are the new edges with
-    endpoints mapped through labels_prev (new nodes map to
-    themselves). A previous label is the min id of its component, so
-    the condensed component minimum IS the full-graph component
-    minimum; the CC input is batch-sized, never corpus-sized.
+    The CC runs on the CONDENSED graph: edges are the new edges with
+    endpoints mapped through map_prev.canonical_id (new nodes map to
+    themselves), minus self-loops; nodes are their endpoints plus the
+    new node ids. A canonical id names its component uniquely, so the
+    CC input is batch-sized, never corpus-sized. A label only groups
+    a component for canonicalize; it need not be a min node id.
+    Against an empty map_prev the condensed graph is the whole graph.
     Equivalence with a cold full-graph CC is property-tested over
     random graphs (tests/test_properties.py) and end-to-end by the
     batch==stream suite."""
-    lab_src = labels_prev.select(
-        F.col("node_id").alias("src"), F.col("label").alias("ls"))
-    lab_dst = labels_prev.select(
-        F.col("node_id").alias("dst"), F.col("label").alias("ld"))
+    rep_src = map_prev.select(
+        F.col("node_id").alias("src"), F.col("canonical_id").alias("cs"))
+    rep_dst = map_prev.select(
+        F.col("node_id").alias("dst"), F.col("canonical_id").alias("cd"))
     cedges = (
         new_edges.select("src", "dst")
-        .join(lab_src, "src", "left")
-        .join(lab_dst, "dst", "left")
+        .join(rep_src, "src", "left")
+        .join(rep_dst, "dst", "left")
         .select(
-            F.coalesce("ls", F.col("src")).alias("src"),
-            F.coalesce("ld", F.col("dst")).alias("dst"),
+            F.coalesce("cs", F.col("src")).alias("src"),
+            F.coalesce("cd", F.col("dst")).alias("dst"),
         )
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
@@ -654,27 +657,15 @@ def incremental_labels(labels_prev: DataFrame, new_nodes: DataFrame,
         cedges.select(F.col("src").alias("node_id"))
         .unionByName(cedges.select(F.col("dst").alias("node_id")))
         .unionByName(new_nodes.select("node_id"))
-        .distinct()
     )
     clabels = connected_components(
         cnodes, cedges.withColumn("sim", F.lit(1.0)))
-    changed = clabels.where(F.col("node_id") != F.col("label"))
-
-    # delta: existing nodes in re-labeled components + new nodes
-    # (coalesce-to-self covers isolated new nodes)
-    delta_old = labels_prev.join(
-        changed.select(F.col("node_id").alias("label"),
-                       F.col("label").alias("nl")),
-        "label",
-    ).select("node_id", F.col("nl").alias("label"))
-    delta_new = (
-        new_nodes.select("node_id")
-        .distinct()
-        .join(clabels, "node_id", "left")
-        .select("node_id",
-                F.coalesce("label", F.col("node_id")).alias("label"))
-    )
-    return delta_old.unionByName(delta_new)
+    old = map_prev.join(
+        clabels.withColumnRenamed("node_id", "canonical_id"),
+        "canonical_id",
+    ).select("node_id", "label")
+    new = new_nodes.select("node_id").distinct().join(clabels, "node_id")
+    return old.unionByName(new)
 
 
 SALT_K = 16  # fan-out CAP per hot key (raise with cluster width)
@@ -748,9 +739,12 @@ def canonicalize(nodes: DataFrame, labels: DataFrame):
     The member frame is localCheckpointed once: it feeds THREE
     consumers (the degree probe, the two-phase aggregation, and
     entity_map), and nodes-join-labels would otherwise re-execute per
-    consumer per action. Members are entity-alias rows — bounded by
-    distinct mentions, not corpus size — so the materialization is
-    small even at 100 TB of turns."""
+    consumer per action. The per-label aggregate is localCheckpointed
+    too: entity_map and cc_vertices both read it, so neither re-runs
+    the two-phase plan. Members are entity-alias rows — bounded by
+    distinct mentions, not corpus size — and the aggregate has one row
+    per component, so both materializations are small even at 100 TB
+    of turns."""
     member = salted_members(
         nodes.join(labels, "node_id").localCheckpoint())
     partial = member.groupBy("label", "salt").agg(
@@ -764,7 +758,7 @@ def canonicalize(nodes: DataFrame, labels: DataFrame):
         F.sort_array(
             F.array_distinct(F.flatten(F.collect_list("al")))
         ).alias("aliases"),
-    )
+    ).localCheckpoint()
     member = member.drop("salt")
     entity_map = (
         member.select("node_id", "label")

@@ -6,6 +6,9 @@ TableIO warehouse of delta logs, then reports the resolved state.
 Re-running with the same --checkpoint only processes files that
 arrived since the last run; crashes roll back half-applied batches
 and replay exactly-once (batch-tagged segments + commit marker).
+Every batch, the first included, runs the same incremental path; after
+a batch, each delta log holding at least --compact-every segments is
+folded back to one (0 never compacts).
 
     python -m kgx.spark.stream_run --arrivals /data/in \
         --out /data/wh --checkpoint /data/ck --dims fixtures/t1 \
@@ -44,12 +47,9 @@ def main(argv=None) -> dict:
                     "patterns.parquet and the tagger artifact")
     ap.add_argument("--artifact", default="tagger_v1.npz")
     ap.add_argument("--compact-every", type=int, default=16,
-                    help="compact the delta logs every N batches "
-                    "(0 = only the segment-count trigger)")
-    ap.add_argument("--max-segments", type=int, default=16,
-                    help="auto-compact any log table that exceeds "
-                    "this many delta segments after a batch — the "
-                    "default read fan-in bound (0 = never)")
+                    help="after a batch, compact every delta log that "
+                    "holds at least this many segments — the read "
+                    "fan-in bound (0 = never)")
     ap.add_argument("--max-files-per-trigger", type=int, default=4)
     ap.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
@@ -78,7 +78,6 @@ def main(argv=None) -> dict:
         patterns_rows=dims["patterns_rows"],
         max_files_per_trigger=args.max_files_per_trigger,
         compact_every=args.compact_every,
-        max_segments=args.max_segments,
         turns=turns,
     )
     io = TableIO(args.out)

@@ -8,9 +8,11 @@ directory are tagged with the same offsets tagger UDF
 and rolled into watermarked tumbling-window mention counts. The
 incremental KG path (incremental_canon_updater) runs the batch
 runner's fused tag+relation pass (stages.tag_extract) per micro-batch
-and folds the same pattern/uses_tool triples into its logs. The stage
-functions are shared — DataFrame code is identical for batch and
-streaming in Spark; only source/sink differ.
+and folds the same pattern/uses_tool triples into its logs. It runs
+one path for every micro-batch, the first included: its component
+state is the entity_map log, and a cold warehouse starts from an empty
+one. The stage functions are shared — DataFrame code is identical for
+batch and streaming in Spark; only source/sink differ.
 
 At production scale this is the "10^12 turns keep arriving" story:
 file (or Iceberg/Kafka) source -> per-microbatch tagging ->
@@ -153,8 +155,8 @@ def run_available_now(query_df: DataFrame, checkpoint_dir: str,
     return q
 
 
-CANON_TABLES = ("nodes", "lsh_edges", "cc_labels", "entity_map",
-                "cc_vertices", "edges_raw", "tool_turns", "conv_speakers")
+CANON_TABLES = ("nodes", "lsh_edges", "entity_map", "cc_vertices",
+                "edges_raw", "tool_turns", "conv_speakers")
 
 EDGES_AGG_SPEC = {
     "keys": ["subj_node", "pred", "obj_node"],
@@ -197,8 +199,7 @@ def _canon_mark_applied(io, batch_id: int) -> None:
 def incremental_canon_updater(spark: SparkSession, warehouse: str,
                               dict_df: DataFrame, tag_spans_udf,
                               patterns_rows: list,
-                              compact_every: int = 0,
-                              max_segments: int = 16):
+                              compact_every: int = 16):
     """foreachBatch sink that streams the WHOLE KG forward: each
     micro-batch of raw turns is tagged in-batch, its mentions merged
     into the accumulated canonical node state (B.9 'incremental
@@ -223,8 +224,13 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
     batch retroactively keys every earlier tool turn of its
     conversation, exactly as the batch pipeline would.
 
-    Per-batch COMPUTE and IO are both proportional to the batch, not
-    to accumulated history:
+    Every micro-batch, the first included, runs one path. The
+    component state is the entity_map log: it maps every node to its
+    component's canonical id, which names the component uniquely. A
+    warehouse with no node log starts from an empty node log and an
+    empty entity_map, against which the batch's nodes are all new and
+    its condensed graph is the whole graph. Per-batch COMPUTE and IO
+    are both proportional to the batch, not to accumulated history:
 
     * new (etype, norm) nodes are diffed against the node log and only
       the delta segment is appended (TableIO.append);
@@ -236,41 +242,36 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
       one per-batch pass over accumulated state is this call's scan
       of the node log (plus one bigram-frequency aggregate over it);
       a batch that adds no node skips it;
-    * connected components run on the CONDENSED graph — nodes = old
-      component labels + new node ids, edges = the new similarity
-      edges with endpoints mapped through the previous labels. An old label is
-      the min id of its component, so the condensed component minimum
-      IS the full-graph component minimum; the CC input is
-      batch-sized, never corpus-sized;
-    * only labels that actually changed (merged components + new
-      nodes) are appended to the keyed cc_labels log (latest-wins on
-      read), and entity_map / cc_vertices are recomputed only for the
-      affected components, with tombstones for canonical vertices that
-      merged away: the affected nodes' canonical ids before the batch
-      are read from the entity_map log, never recomputed;
+    * connected components run on the CONDENSED graph
+      (stages.touched_components) — nodes = the canonical ids the new
+      edges reach + new node ids, edges = the new similarity edges
+      with endpoints mapped through the previous entity_map; the CC
+      input is batch-sized, never corpus-sized;
+    * entity_map / cc_vertices are recomputed only for the touched
+      components, with tombstones for canonical vertices that merged
+      away: the touched nodes' canonical ids before the batch are read
+      from the entity_map log, never recomputed;
     * every log read takes its schema from the table's manifest, so
       reading state runs no schema-inference job.
 
     Restart safety (exactly-once on an at-least-once foreachBatch):
     every segment written for a batch carries a batch tag, and a
     commit marker records the last FULLY applied batch, written only
-    after all five tables' deltas landed. A replayed batch id at or
+    after all seven tables' deltas landed. A replayed batch id at or
     below the marker is a no-op; a half-applied batch (crash between
     table commits) is rolled back segment-exactly with prune_batch()
     before the replay recomputes it. Final (entity_map, cc_vertices)
     equal the batch pipeline's on the same data, and per-batch write
     volume is asserted O(batch) — tests/test_streaming_canon.py.
 
-    `compact_every` > 0 compacts the logs every K batches (O(state)
-    amortized over K). Independently, `max_segments` (DEFAULT ON at
-    16; 0 disables) auto-compacts any log table whose segment count
-    exceeds it after a batch commits, so an unconfigured long-running
-    stream has BOUNDED read fan-in: each table accumulates at most
-    ~max_segments delta segments before folding back to one, i.e.
-    O(state) compaction IO amortized over max_segments batches —
-    the same amortization as compact_every, but triggered by the
-    fan-in it exists to bound (tests/test_streaming_canon.py pins
-    the default bound over a many-batch run)."""
+    Compaction bounds read fan-in: after a batch commits, every log
+    table holding at least `compact_every` segments (and more than
+    one) is folded back to one segment, so O(state) compaction IO is
+    amortized over about `compact_every` appends to that table. A
+    table the batch did not append to is not rewritten, and a
+    compaction that failed after the marker is retried at the next
+    batch. The default (16) keeps an unconfigured long-running stream
+    bounded; 0 never compacts."""
     from kgx.spark.io import TableIO
 
     io = TableIO(warehouse)
@@ -282,130 +283,75 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
         tag = f"b{batch_id}"
         for tbl in CANON_TABLES:
             io.prune_batch(tbl, tag)  # roll back a crashed half-apply
-
-        def finish() -> None:
-            _canon_mark_applied(io, batch_id)
-            periodic = bool(compact_every
-                            and (batch_id + 1) % compact_every == 0)
-            for tbl in CANON_TABLES:
-                m = io.manifest(tbl)
-                # single-segment tables have nothing to merge —
-                # rewriting them would burn O(state) IO per
-                # boundary on sparse streams for zero fan-in gain
-                if (m is None or m.get("kind") != "log"
-                        or len(m["segments"]) <= 1):
-                    continue
-                over_fanin = bool(max_segments
-                                  and len(m["segments"]) > max_segments)
-                if periodic or over_fanin:
-                    io.compact(spark, tbl)
-
         clean = stages.nonempty_text(turns_batch)
-        if clean.isEmpty():
-            finish()
-            return
+        if not clean.isEmpty():
+            apply(clean, tag)
+        _canon_mark_applied(io, batch_id)
+        for tbl in CANON_TABLES:
+            segments = (io.manifest(tbl) or {}).get("segments", ())
+            if compact_every and len(segments) >= max(compact_every, 2):
+                io.compact(spark, tbl)
+
+    def apply(clean: DataFrame, tag: str) -> None:
         tagged = stages.tag_extract(
             clean, tag_spans_udf, patterns_rows).localCheckpoint()
-        mentions_batch = stages.mentions_of(tagged)
-
-        def append_edge_delta() -> None:
-            # pattern relations are per-turn facts: aggregate and fold
-            # into the additive edge log now. uses_tool triples need
-            # the conversation's GLOBAL first PER mention, so only the
-            # raw facts are logged (tool turns + the batch's speaker
-            # partial — min-of-struct merges across batches); the
-            # speaker join happens in the canonical_edges view.
-            delta = stages.edges_partial(stages.triples_node_keyed(
-                stages.pattern_triples_of(tagged), dict_df))
-            io.append(delta, "edges_raw", agg_spec=EDGES_AGG_SPEC,
-                      batch_tag=tag)
-            io.append(stages.tool_turns_of(tagged), "tool_turns",
-                      batch_tag=tag)
-            io.append(stages.conv_speakers_of(tagged), "conv_speakers",
-                      agg_spec=SPEAKERS_AGG_SPEC, batch_tag=tag)
-
-        nodes_b = stages.link_nodes(mentions_batch, dict_df)
-
-        # cold start keys on STATE existence, not the commit marker: a
-        # first batch that was entirely filtered (empty text) marks
-        # itself applied without seeding any table, and the next batch
-        # must still take this branch
-        if io.manifest("nodes") is None:
-            # cold start: first batch seeds the logs (a node row is
-            # one (node_id, norm) alias — never dedup by node_id
-            # alone, a dict entity keeps one row per alias)
-            io.append(nodes_b.dropDuplicates(["node_id", "norm"]),
-                      "nodes", batch_tag=tag)
-            nodes0 = io.read(spark, "nodes")
-            io.append(stages.similar_edges(nodes0, nodes0), "lsh_edges",
-                      batch_tag=tag)
-            edges0 = io.read(spark, "lsh_edges")
-            labels = stages.connected_components(nodes0, edges0)
-            io.append(labels, "cc_labels", log_keys=["node_id"],
-                      batch_tag=tag)
-            labels = io.read(spark, "cc_labels")
-            entity_map, cc_vertices = stages.canonicalize(nodes0, labels)
-            io.append(entity_map, "entity_map", log_keys=["node_id"],
-                      batch_tag=tag)
-            io.append(cc_vertices, "cc_vertices",
-                      log_keys=["entity_id"], batch_tag=tag)
-            append_edge_delta()
-            finish()
-            return
-
+        nodes_b = stages.link_nodes(stages.mentions_of(tagged), dict_df)
         # pre-batch state: _read_log pins segment paths at read() time,
-        # so these stay consistent across the appends below
-        nodes_prev = io.read(spark, "nodes")
-        labels_prev = io.read(spark, "cc_labels")
-        map_prev = io.read(spark, "entity_map")
+        # so these stay consistent across the appends below. It keys on
+        # the node log, not the commit marker: a batch of blank turns
+        # marks itself applied without seeding any table.
+        if io.manifest("nodes") is None:
+            nodes_prev = nodes_b.limit(0)
+            map_prev = nodes_prev.select(
+                "node_id", F.col("node_id").alias("canonical_id"))
+        else:
+            nodes_prev = io.read(spark, "nodes")
+            map_prev = io.read(spark, "entity_map")
+        # a node row is one (node_id, norm) alias — never dedup by
+        # node_id alone, a dict entity keeps one row per alias
         new_only = (
             nodes_b.join(nodes_prev.select("node_id"), "node_id",
                          "left_anti")
             .dropDuplicates(["node_id", "norm"])
             .localCheckpoint()
         )
-        if new_only.isEmpty():
-            # no graph change, but the batch's triples still count
-            append_edge_delta()
-            finish()
-            return
-        io.append(new_only, "nodes", batch_tag=tag)
-        nodes_all = io.read(spark, "nodes")
-        lsh_new = stages.similar_edges(new_only, nodes_all).localCheckpoint()
-        io.append(lsh_new.select("src", "dst", "sim"), "lsh_edges",
+        if not new_only.isEmpty():
+            io.append(new_only, "nodes", batch_tag=tag)
+            nodes_all = io.read(spark, "nodes")
+            lsh_new = stages.similar_edges(
+                new_only, nodes_all).localCheckpoint()
+            io.append(lsh_new.select("src", "dst", "sim"), "lsh_edges",
+                      batch_tag=tag)
+            members = stages.touched_components(
+                map_prev, new_only, lsh_new).localCheckpoint()
+            em_delta, cv_delta = stages.canonicalize(nodes_all, members)
+            # the touched nodes' canonical ids before the batch that
+            # are no longer canonical are the tombstones
+            tombstones = (
+                map_prev.join(members, "node_id", "left_semi")
+                .select(F.col("canonical_id").alias("entity_id"))
+                .distinct()
+                .join(cv_delta.select("entity_id"), "entity_id",
+                      "left_anti")
+            )
+            io.append(em_delta, "entity_map", log_keys=["node_id"],
+                      batch_tag=tag)
+            io.append(cv_delta, "cc_vertices", log_keys=["entity_id"],
+                      batch_tag=tag, deletes=tombstones)
+        # pattern relations are per-turn facts: aggregate and fold into
+        # the additive edge log now. uses_tool triples need the
+        # conversation's GLOBAL first PER mention, so only the raw
+        # facts are logged (tool turns + the batch's speaker partial —
+        # min-of-struct merges across batches); the speaker join
+        # happens in the canonical_edges view.
+        delta = stages.edges_partial(stages.triples_node_keyed(
+            stages.pattern_triples_of(tagged), dict_df))
+        io.append(delta, "edges_raw", agg_spec=EDGES_AGG_SPEC,
                   batch_tag=tag)
-
-        # condensed-graph incremental CC (batch-sized input) -> label
-        # delta for merged components + new nodes
-        delta_labels = stages.incremental_labels(
-            labels_prev, new_only, lsh_new
-        ).localCheckpoint()
-
-        # affected components after this batch: every old member of a
-        # merged component is relabeled in the delta, so members_now
-        # covers all of them, and their canonical ids before the batch
-        # are in the entity_map log — the ones that are no longer
-        # canonical are the tombstones
-        aff_new = delta_labels.select("label").distinct()
-        io.append(delta_labels, "cc_labels", log_keys=["node_id"],
+        io.append(stages.tool_turns_of(tagged), "tool_turns",
                   batch_tag=tag)
-        labels_now = io.read(spark, "cc_labels")
-        members_now = labels_now.join(aff_new, "label", "left_semi")
-        em_delta, cv_delta = stages.canonicalize(nodes_all, members_now)
-        cv_delta = cv_delta.localCheckpoint()
-        tombstones = (
-            map_prev.join(members_now.select("node_id"), "node_id",
-                          "left_semi")
-            .select(F.col("canonical_id").alias("entity_id"))
-            .distinct()
-            .join(cv_delta.select("entity_id"), "entity_id", "left_anti")
-        )
-        io.append(em_delta, "entity_map", log_keys=["node_id"],
-                  batch_tag=tag)
-        io.append(cv_delta, "cc_vertices", log_keys=["entity_id"],
-                  batch_tag=tag, deletes=tombstones)
-        append_edge_delta()
-        finish()
+        io.append(stages.conv_speakers_of(tagged), "conv_speakers",
+                  agg_spec=SPEAKERS_AGG_SPEC, batch_tag=tag)
 
     return update
 
@@ -415,8 +361,7 @@ def run_incremental_canon(spark: SparkSession, arrivals_dir: str | None,
                           tag_spans_udf, dict_df: DataFrame,
                           patterns_rows: list,
                           max_files_per_trigger: int = 1,
-                          compact_every: int = 0,
-                          max_segments: int = 16,
+                          compact_every: int = 16,
                           turns: DataFrame | None = None):
     """Drain currently-available transcript arrivals through the
     incremental link/canon/edge path (Trigger.AvailableNow);
@@ -435,8 +380,7 @@ def run_incremental_canon(spark: SparkSession, arrivals_dir: str | None,
         turns.writeStream
         .foreachBatch(incremental_canon_updater(
             spark, warehouse, dict_df, tag_spans_udf,
-            patterns_rows=patterns_rows, compact_every=compact_every,
-            max_segments=max_segments))
+            patterns_rows=patterns_rows, compact_every=compact_every))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

@@ -164,17 +164,27 @@ def test_cc_long_chain_converges_logarithmically(spark):
 
 
 def test_incremental_labels_equal_cold_cc(spark):
-    """Condensed-graph incremental CC (stages.incremental_labels) must
-    reach the exact labels a cold full-graph CC computes, for random
-    graphs and random batch splits — including merges of several old
+    """Condensed-graph incremental CC (stages.touched_components) must
+    return exactly the nodes of the components a batch touches, and
+    merging its labels into the previous entity_map must give the
+    node partition a cold full-graph CC computes, for random graphs
+    and random batch splits — including merges of several old
     components through one new node, isolated new nodes, and
-    new-to-new edges. (Invariant exploited: every post-batch edge
-    touches >= 1 new node, which stages.similar_edges guarantees.)"""
+    new-to-new edges. The previous representatives are each
+    component's MAX id, so nothing may rely on a min-id label.
+    (Invariant exploited: every post-batch edge touches >= 1 new node,
+    which stages.similar_edges guarantees.)"""
     import random
 
     from pyspark.sql import functions as F
 
-    from kgx.spark.stages import connected_components, incremental_labels
+    from kgx.spark.stages import connected_components, touched_components
+
+    def partition(labels):
+        groups = {}
+        for node, label in labels.items():
+            groups.setdefault(label, set()).add(node)
+        return {frozenset(g) for g in groups.values()}
 
     for seed in (11, 22, 33):
         rng = random.Random(seed)
@@ -201,19 +211,34 @@ def test_incremental_labels_equal_cold_cc(spark):
                 "src string, dst string",
             ).withColumn("sim", F.lit(1.0))
 
-        labels_prev = connected_components(
-            df_nodes(old), df_edges(e1)).localCheckpoint()
-        delta = incremental_labels(labels_prev, df_nodes(new),
-                                   df_edges(e2))
-        merged = {r["node_id"]: r["label"] for r in labels_prev.collect()}
-        merged.update(
-            {r["node_id"]: r["label"] for r in delta.collect()})
+        cold_old = {
+            r["node_id"]: r["label"]
+            for r in connected_components(
+                df_nodes(old), df_edges(e1)).collect()
+        }
+        rep = {}
+        for node, label in cold_old.items():
+            rep[label] = max(rep.get(label, node), node)
+        prev = {node: rep[label] for node, label in cold_old.items()}
+        map_prev = spark.createDataFrame(
+            sorted(prev.items()), "node_id string, canonical_id string")
+        members = {
+            r["node_id"]: r["label"]
+            for r in touched_components(map_prev, df_nodes(new),
+                                        df_edges(e2)).collect()
+        }
+        reached = {prev[x] for pair in e2 for x in pair if x in prev}
+        assert set(members) == (
+            {n for n in old if prev[n] in reached} | set(new)
+        ), f"seed {seed}"
+        merged = {n: ("old", c) for n, c in prev.items()}
+        merged.update({n: ("new", lab) for n, lab in members.items()})
         want = {
             r["node_id"]: r["label"]
             for r in connected_components(
                 df_nodes(old + new), df_edges(e1 | e2)).collect()
         }
-        assert merged == want, f"seed {seed}"
+        assert partition(merged) == partition(want), f"seed {seed}"
 
 
 @settings(max_examples=30, deadline=None)

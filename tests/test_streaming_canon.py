@@ -44,9 +44,11 @@ def test_incremental_canon_equals_batch(spark, t1_dir, tmp_path):
     io = TableIO(wh)
     # the state really went through multiple incremental merges
     assert io.manifest("nodes")["version"] >= 2
-    # linking keeps no state besides the node log and its edges
-    assert io.manifest("node_bands") is None
-    assert not os.path.exists(io.table_dir("node_bands"))
+    # linking keeps no state besides the node log and its edges, and
+    # the component state is the entity_map log alone
+    for gone in ("node_bands", "cc_labels"):
+        assert io.manifest(gone) is None, gone
+        assert not os.path.exists(io.table_dir(gone)), gone
 
     got_map = {
         (r["node_id"], r["canonical_id"])
@@ -100,14 +102,14 @@ def test_incremental_canon_equals_batch(spark, t1_dir, tmp_path):
 
     # per-batch write volume is O(batch), not O(history): the node log
     # never rewrites a node (segment rows sum to the state size), and
-    # the second batch's label/map/vertex deltas are strictly smaller
+    # the second batch's map/vertex deltas are strictly smaller
     # than the accumulated state they'd have rewritten under the old
     # full-state-per-batch scheme
     nseg = io.manifest("nodes")["segments"]
     assert len(nseg) >= 2
     assert sum(s["rows"] for s in nseg) == io.read(
         spark, "nodes").count()
-    for tbl in ("cc_labels", "entity_map", "cc_vertices"):
+    for tbl in ("entity_map", "cc_vertices"):
         segs = io.manifest(tbl)["segments"]
         state_rows = io.read(spark, tbl).count()
         assert segs[-1]["rows"] < state_rows, (
@@ -212,13 +214,13 @@ def test_incremental_canon_crash_replay(spark, t1_dir, tmp_path,
     io = TableIO(wh)
     assert streaming.canon_last_applied(io) == 0
 
-    # crash mid-batch-1: the cc_labels commit raises AFTER nodes and
-    # lsh_edges landed (the exact ADVICE scenario)
+    # crash mid-batch-1: the entity_map commit raises AFTER nodes and
+    # lsh_edges landed
     real_append = TableIO.append
 
     def exploding_append(self, df, table, **kw):
-        if table == "cc_labels":
-            raise RuntimeError("simulated crash before cc_labels")
+        if table == "entity_map":
+            raise RuntimeError("simulated crash before entity_map")
         return real_append(self, df, table, **kw)
 
     monkeypatch.setattr(TableIO, "append", exploding_append)
@@ -259,9 +261,9 @@ def test_incremental_canon_crash_replay(spark, t1_dir, tmp_path,
 
 def test_empty_first_batch_then_data(spark, t1_dir, tmp_path):
     """A first micro-batch whose rows are all filtered by the
-    empty-text guard must not wedge the stream: cold start keys on
-    state existence, not on the commit marker, so the next real batch
-    still seeds the logs."""
+    empty-text guard must not wedge the stream: the empty state comes
+    from the missing node log, not from the commit marker, so the next
+    real batch still seeds the logs."""
     from pyspark.sql import functions as F
 
     from kgx.spark.udfs import make_tagger_spans_udf
@@ -273,7 +275,7 @@ def test_empty_first_batch_then_data(spark, t1_dir, tmp_path):
     wh = str(tmp_path / "wh")
     update = streaming.incremental_canon_updater(
         spark, wh, dict_df, udf, patterns_rows=patterns,
-        compact_every=3)
+        compact_every=2)
     blank = spark.createDataFrame(
         [("c0", 0, "user", "   ", None, None)],
         "conv_id string, turn_idx int, role string, text string,"
@@ -286,18 +288,49 @@ def test_empty_first_batch_then_data(spark, t1_dir, tmp_path):
 
     cut = "c000020"
     update(_turns_of(spark, t1_dir, F.col("conv_id") < cut), 1)
-    assert io.read(spark, "entity_map").count() > 0  # cold path worked
-    # batch 2 appends second segments AND hits the compaction boundary
-    # ((2+1) % 3 == 0): multi-segment logs must fold to ONE segment
-    # whose batch_tag is None — proof compaction actually ran, not
-    # just that the log started with one segment
+    assert io.read(spark, "entity_map").count() > 0  # seeded
+    # batch 2 appends second segments, reaching compact_every=2: the
+    # logs must fold to ONE segment whose batch_tag is None — proof
+    # compaction actually ran, not just that the log started with one
+    # segment
     update(_turns_of(spark, t1_dir, F.col("conv_id") >= cut), 2)
     compacted = 0
     for tbl in streaming.CANON_TABLES:
         segs = io.manifest(tbl)["segments"]
         assert len(segs) == 1, tbl
         compacted += segs[0]["batch_tag"] is None
-    assert compacted >= 6, "multi-segment logs were not compacted"
+    assert compacted == len(streaming.CANON_TABLES), (
+        "multi-segment logs were not compacted")
+
+
+def test_compaction_counts_segments_per_table(spark, t1_dir, tmp_path):
+    """Compaction is triggered per table by its own segment count, not
+    by the batch id: a batch that adds no node appends no node
+    segment, so after cold -> node-adding -> repeat-only batches with
+    compact_every=3 the node log keeps its 2 segments while the edge
+    log, appended by every batch, folds to 1."""
+    from pyspark.sql import functions as F
+
+    from kgx.spark.udfs import make_tagger_spans_udf
+
+    dims = load_dims(spark, t1_dir)
+    udf = make_tagger_spans_udf(spark, dims["artifact"])
+    wh = str(tmp_path / "wh")
+    update = streaming.incremental_canon_updater(
+        spark, wh, dims["dict_df"], udf,
+        patterns_rows=dims["patterns_rows"], compact_every=3)
+    cut = "c000020"
+    first = _turns_of(spark, t1_dir, F.col("conv_id") < cut)
+    update(first, 0)
+    update(_turns_of(spark, t1_dir, F.col("conv_id") >= cut), 1)
+    io = TableIO(wh)
+    nodes_before = io.manifest("nodes")["rows"]
+    update(first, 2)  # repeats batch 0's turns: no new node
+    assert io.manifest("nodes")["rows"] == nodes_before
+    assert [s["batch_tag"] for s in
+            io.manifest("nodes")["segments"]] == ["b0", "b1"]
+    assert [s["batch_tag"] for s in
+            io.manifest("edges_raw")["segments"]] == [None]
 
 
 def test_updater_requires_udf_and_patterns(spark, tmp_path):
@@ -307,11 +340,10 @@ def test_updater_requires_udf_and_patterns(spark, tmp_path):
 
 
 def test_auto_compaction_bounds_segment_fanin(spark, t1_dir, tmp_path):
-    """The segment-count compaction trigger is ON by default: a
-    long-running stream with no compaction config must end with a
-    BOUNDED number of delta segments per log table (not one per
-    batch), and the auto-compacted state must still resolve to the
-    batch pipeline's canonical map."""
+    """The compaction trigger is ON by default: a long-running stream
+    with no compaction config must end with a BOUNDED number of delta
+    segments per log table (not one per batch), and the auto-compacted
+    state must still resolve to the batch pipeline's canonical map."""
     import inspect
 
     from pyspark.sql import functions as F
@@ -320,9 +352,9 @@ def test_auto_compaction_bounds_segment_fanin(spark, t1_dir, tmp_path):
 
     # default-on contract: both entry points ship a positive bound
     assert (inspect.signature(streaming.incremental_canon_updater)
-            .parameters["max_segments"].default == 16)
+            .parameters["compact_every"].default == 16)
     assert (inspect.signature(streaming.run_incremental_canon)
-            .parameters["max_segments"].default == 16)
+            .parameters["compact_every"].default == 16)
 
     dims = load_dims(spark, t1_dir)
     udf = make_tagger_spans_udf(spark, dims["artifact"])
@@ -330,7 +362,7 @@ def test_auto_compaction_bounds_segment_fanin(spark, t1_dir, tmp_path):
     cap = 3  # small bound so 10 batches cross it repeatedly
     update = streaming.incremental_canon_updater(
         spark, wh, dims["dict_df"], udf,
-        patterns_rows=dims["patterns_rows"], max_segments=cap)
+        patterns_rows=dims["patterns_rows"], compact_every=cap)
 
     convs = sorted(
         r["conv_id"] for r in
@@ -348,9 +380,9 @@ def test_auto_compaction_bounds_segment_fanin(spark, t1_dir, tmp_path):
         if m is None or m.get("kind") != "log":
             continue
         nseg = len(m["segments"])
-        assert nseg <= cap + 1, (
+        assert nseg < cap, (
             f"{tbl}: {nseg} segments after 10 batches — fan-in "
-            f"unbounded despite max_segments={cap}")
+            f"unbounded despite compact_every={cap}")
 
     got_map = {
         (r["node_id"], r["canonical_id"])
