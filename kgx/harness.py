@@ -1604,22 +1604,16 @@ def _cluster_keep(pairs: DataFrame) -> DataFrame:
     member is a drop candidate.
 
     At 100 TB the pair graph is sparse (bucket-capped,
-    verify-filtered); CC input is pairs-sized, not corpus-sized, and
-    singleton docs never enter the join. The DuckDB twin
+    verify-filtered); CC runs on the pair edges alone (no node set),
+    so its input is pairs-sized, not corpus-sized, and singleton docs
+    never enter the join. The DuckDB twin
     (_cluster_keep_sql) closes the same pair set with a recursive CTE,
     so the driver value-hash gate covers the component resolution
     across engines for ALL FOUR instantiating ops."""
     from kgx.spark.stages import connected_components
 
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node_id"))
-        .unionByName(edges.select(F.col("dst").alias("node_id")))
-        .distinct()
-    )
-    labels = connected_components(nodes, edges)
+    labels = connected_components(None, pairs.select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")))
     return (
         labels.groupBy(F.col("label").alias("keep_id"))
         .agg(

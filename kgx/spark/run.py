@@ -65,11 +65,6 @@ STAGES = ("ingest", "tag", "extract", "link", "canon", "materialize")
 # magnitude costlier per text) must re-measure this break-even.
 TAG_DISTINCT_AUTO_MIN_RATE_LEXICON = 15.0
 
-# The canon stage commits connected-components state to the warehouse
-# every this many iterations. That commit is the durable cut a rerun
-# resumes from; the loop's per-iteration localCheckpoint only cuts
-# lineage (executor-local, lost with the executor).
-CC_CHECKPOINT_EVERY = 5
 
 def read_alias_dict(spark: SparkSession, dims_dir: str) -> DataFrame:
     """The latest alias dictionary (lazy: no job until used)."""
@@ -296,14 +291,14 @@ class Runner:
         @functools.cache
         def canon():
             # the CC loop runs its per-iteration actions EAGERLY here
-            # (localCheckpoint per round), before _commit starts its
+            # (localCheckpoint per round, a cc_state commit every
+            # stages.CC_COMMIT_EVERY rounds), before _commit starts its
             # clock — record it as its own event so per-stage walls
             # account for the full run (scaling_bench sums these)
             t_cc = time.time()
             labels = stages.connected_components(
                 self.read("nodes"), self.read("lsh_edges"),
-                state_io=self.io, state_fp=self._fingerprint(inputs),
-                checkpoint_every=CC_CHECKPOINT_EVERY)
+                state_io=self.io, state_fp=self._fingerprint(inputs))
             self.events.append(
                 {"stage": "canon", "table": "cc_loop", "rows": None,
                  "partitions": None, "content_hash": None,

@@ -23,14 +23,16 @@ Pattern matching is a constant-folded WHEN chain of literal regexes
 (similar_edges) is one exact prefix-filtered equi-join over the
 distinct (etype, norm) nodes; a streaming batch that adds nodes runs
 it with its new nodes against the accumulated node log (one scan and
-one bigram-frequency aggregate of that log). The CC loop
-localCheckpoints every iteration to cut lineage; the durable cut is
-the optional warehouse commit of its state (connected_components).
+one bigram-frequency aggregate of that log). The CC loop iterates over
+the edge endpoints only (nodes no edge names are unioned back once,
+after convergence) and localCheckpoints every iteration to cut
+lineage; the durable cut is the optional warehouse commit of its
+state every CC_COMMIT_EVERY iterations (connected_components).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from kgx.contract import JACCARD_TAU, SEP
@@ -475,15 +477,26 @@ def link_links(mentions: DataFrame, dict_df: DataFrame,
 
 
 CC_STATE_TABLE = "cc_state"
+# The loop commits its state to the warehouse (when given a state_io)
+# every this many iterations: that commit is the durable cut a rerun
+# resumes from; the per-iteration localCheckpoint only cuts lineage
+# (executor-local, lost with the executor).
+CC_COMMIT_EVERY = 5
 
 
-def connected_components(nodes: DataFrame, lsh_edges: DataFrame,
+def connected_components(nodes: DataFrame | None, lsh_edges: DataFrame,
                          state_io=None, state_fp: str | None = None,
-                         checkpoint_every: int = 5,
                          max_iters: int = CC_MAX_ITERS) -> DataFrame:
     """Min-label propagation + pointer doubling over iterative
     DataFrame joins; localCheckpoint each iteration cuts the lineage
-    (SURVEY §4). Returns (node_id, label).
+    (SURVEY §4). Returns (node_id, label) for every edge endpoint and
+    every node of `nodes` (None: the endpoints only); a node no edge
+    names keeps label = node_id.
+
+    The loop runs over the edge endpoints only: labels start from the
+    symmetric edge frame, and the nodes no edge names are unioned back
+    once, by a lazy anti-join, after convergence. A graph with no
+    edges converges in its first (empty) round.
 
     Each round does (a) neighbor-min — label(v) <- min over v's
     neighborhood — and (b) a pointer jump — label(v) <-
@@ -496,26 +509,11 @@ def connected_components(nodes: DataFrame, lsh_edges: DataFrame,
     executor-local storage, so on a real cluster an executor loss
     mid-loop makes the lineage unrecoverable. The durable cut is the
     warehouse commit: pass `state_io` (a TableIO) to commit the label
-    table every `checkpoint_every` iterations, tagged with `state_fp`
-    (the Runner always does, every run.CC_CHECKPOINT_EVERY
-    iterations). A rerun with the same (io, fp) RESUMES from the last
-    committed iteration (tested by killing a run mid-loop in
-    tests/test_cc_checkpoint.py)."""
-    spark = nodes.sparkSession
-    start_iter = 0
-    labels = None
-    if state_io is not None and state_io.is_complete(CC_STATE_TABLE,
-                                                     state_fp):
-        man = state_io.manifest(CC_STATE_TABLE)
-        start_iter = int(man.get("cc_iter", -1)) + 1
-        labels = state_io.read(spark, CC_STATE_TABLE)
-    if labels is None:
-        labels = (
-            nodes.select("node_id")
-            .distinct()
-            .withColumn("label", F.col("node_id"))
-            .localCheckpoint()
-        )
+    table every CC_COMMIT_EVERY iterations, tagged with `state_fp`
+    (the Runner always does). A rerun with the same (io, fp) RESUMES
+    from the last committed iteration (tested by killing a run
+    mid-loop in tests/test_cc_checkpoint.py)."""
+    spark = lsh_edges.sparkSession
     sym = (
         lsh_edges.select("src", "dst")
         .unionByName(
@@ -525,10 +523,18 @@ def connected_components(nodes: DataFrame, lsh_edges: DataFrame,
         )
         .localCheckpoint()
     )
-    if sym.isEmpty():
-        return labels
-    from pyspark.sql import Observation
-
+    start_iter = 0
+    if state_io is not None and state_io.is_complete(CC_STATE_TABLE,
+                                                     state_fp):
+        man = state_io.manifest(CC_STATE_TABLE)
+        start_iter = int(man.get("cc_iter", -1)) + 1
+        labels = state_io.read(spark, CC_STATE_TABLE)
+    else:
+        labels = (
+            sym.select(F.col("src").alias("node_id"))
+            .distinct()
+            .withColumn("label", F.col("node_id"))
+        )
     for it in range(start_iter, max_iters):
         nbr = (
             sym.join(labels, sym.src == labels.node_id)
@@ -548,13 +554,11 @@ def connected_components(nodes: DataFrame, lsh_edges: DataFrame,
             F.col("node_id").alias("l_node"),
             F.col("label").alias("l_label"),
         )
-        # convergence check rides the SAME job as the checkpoint: the
-        # previous label is carried as a column and the changed count
-        # is an observe() metric collected while localCheckpoint
-        # materializes — no separate join+count job per iteration
-        # (halves Spark jobs across the loop).
+        # the previous label is carried as a column, so the changed
+        # count rides the checkpoint job instead of a separate
+        # join+count action per round
         obs = Observation(f"cc_changed_{it}")
-        new_labels = (
+        labels = (
             stepped.join(lookup, stepped.label == lookup.l_node, "left")
             .select(
                 "node_id",
@@ -571,51 +575,26 @@ def connected_components(nodes: DataFrame, lsh_edges: DataFrame,
                 ).alias("changed"),
             )
             .localCheckpoint()
+            .select("node_id", "label")
         )
-        changed = _observed_changed(obs, new_labels)
-        labels = new_labels.select("node_id", "label")
-        if changed == 0:
-            return labels
-        if (
-            state_io is not None
-            and checkpoint_every
-            and (it + 1) % checkpoint_every == 0
-        ):
+        if not obs.get["changed"]:
+            break
+        if state_io is not None and (it + 1) % CC_COMMIT_EVERY == 0:
             state_io.write(labels, CC_STATE_TABLE,
                            inputs_fingerprint=state_fp,
                            extra={"cc_iter": it})
             labels = state_io.read(spark, CC_STATE_TABLE)
-    raise RuntimeError(f"CC did not converge in {max_iters} iterations")
-
-
-def _observed_changed(obs, new_labels: DataFrame,
-                      timeout_s: float = 30.0) -> int:
-    """Changed-label count for one CC iteration, from the observe()
-    metric that rides the localCheckpoint job — fetched with a
-    BOUNDED wait. Observation.get blocks forever if the runtime never
-    delivers QueryExecutionListener metrics for the checkpoint action
-    (it does on the pinned Spark — asserted by every CC test — but a
-    hang is the wrong failure mode), so poll the non-blocking
-    getRowOrEmpty until the deadline and then fall back to one
-    explicit aggregate over the already-materialized frame."""
-    import time
-
-    deadline = time.monotonic() + timeout_s
-    while time.monotonic() < deadline:
-        try:
-            # _jo / getRowOrEmpty are PySpark/Scala PRIVATE surface —
-            # present on the pinned Spark 4.1, but a minor-version
-            # bump may remove either; degrade to the explicit
-            # aggregate instead of crashing the CC loop.
-            if (obs._jo is not None
-                    and obs._jo.getRowOrEmpty().isDefined()):
-                return int(obs.get["changed"] or 0)
-        except Exception:  # AttributeError / Py4JError
-            break
-        time.sleep(0.05)
-    return new_labels.where(
-        F.col("label") != F.col("old_label")
-    ).count()
+    else:
+        raise RuntimeError(f"CC did not converge in {max_iters} iterations")
+    if nodes is None:
+        return labels
+    isolated = (
+        nodes.select("node_id")
+        .distinct()
+        .join(labels, "node_id", "left_anti")
+        .withColumn("label", F.col("node_id"))
+    )
+    return labels.unionByName(isolated)
 
 
 def touched_components(map_prev: DataFrame, new_nodes: DataFrame,
@@ -630,10 +609,11 @@ def touched_components(map_prev: DataFrame, new_nodes: DataFrame,
 
     The CC runs on the CONDENSED graph: edges are the new edges with
     endpoints mapped through map_prev.canonical_id (new nodes map to
-    themselves), minus self-loops; nodes are their endpoints plus the
-    new node ids. A canonical id names its component uniquely, so the
-    CC input is batch-sized, never corpus-sized. A label only groups
-    a component for canonicalize; it need not be a min node id.
+    themselves), minus self-loops, plus the new nodes (a new node no
+    condensed edge names keeps its own id). A canonical id names its
+    component uniquely, so the CC input is batch-sized, never
+    corpus-sized. A label only groups a component for canonicalize;
+    it need not be a min node id.
     Against an empty map_prev the condensed graph is the whole graph.
     Equivalence with a cold full-graph CC is property-tested over
     random graphs (tests/test_properties.py) and end-to-end by the
@@ -653,13 +633,7 @@ def touched_components(map_prev: DataFrame, new_nodes: DataFrame,
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
     )
-    cnodes = (
-        cedges.select(F.col("src").alias("node_id"))
-        .unionByName(cedges.select(F.col("dst").alias("node_id")))
-        .unionByName(new_nodes.select("node_id"))
-    )
-    clabels = connected_components(
-        cnodes, cedges.withColumn("sim", F.lit(1.0)))
+    clabels = connected_components(new_nodes, cedges)
     old = map_prev.join(
         clabels.withColumnRenamed("node_id", "canonical_id"),
         "canonical_id",

@@ -7,15 +7,25 @@ cluster.)"""
 import pytest
 
 from kgx.spark.io import TableIO
-from kgx.spark.stages import CC_STATE_TABLE, connected_components
+from kgx.spark.stages import (
+    CC_COMMIT_EVERY,
+    CC_STATE_TABLE,
+    connected_components,
+)
+
+
+ISOLATED = ("iso0", "iso1")
 
 
 @pytest.fixture()
 def chain(spark):
-    """64-node chain: diameter 63, needs several pointer-doubling
-    rounds — guaranteed not to converge within 2 iterations."""
+    """64-node chain: diameter 63, converges in 7 pointer-doubling
+    rounds, so the commit after round CC_COMMIT_EVERY (5) is
+    mid-flight. Plus two nodes no edge names: every run must union
+    them back with label = node_id."""
     nodes = spark.createDataFrame(
-        [(f"{i:03d}",) for i in range(64)], "node_id string"
+        [(f"{i:03d}",) for i in range(64)] + [(n,) for n in ISOLATED],
+        "node_id string",
     )
     edges = spark.createDataFrame(
         [(f"{i:03d}", f"{i + 1:03d}", 1.0) for i in range(63)],
@@ -24,35 +34,40 @@ def chain(spark):
     return nodes, edges
 
 
-def test_cc_resumes_from_committed_iteration(spark, chain, tmp_path):
+def test_cc_resumes_from_committed_iteration(spark, spark_jobs, chain,
+                                             tmp_path):
     nodes, edges = chain
-    clean = {
-        r["node_id"]: r["label"]
-        for r in connected_components(nodes, edges).collect()
-    }
-    assert set(clean.values()) == {"000"}  # one chain component
+    clean = {}
+    clean_jobs = spark_jobs(lambda: clean.update(
+        (r["node_id"], r["label"])
+        for r in connected_components(nodes, edges).collect()))
+    assert {clean[n] for n in clean if n not in ISOLATED} == {"000"}
+    assert all(clean[n] == n for n in ISOLATED)
 
     io = TableIO(str(tmp_path / "wh"))
-    # simulate a mid-canon kill: state committed every iteration, run
-    # dies after 2 iterations (non-convergence error is the stand-in)
+    # simulate a mid-canon kill: the run dies right after the commit
+    # of round CC_COMMIT_EVERY (non-convergence error is the stand-in)
     with pytest.raises(RuntimeError):
         connected_components(nodes, edges, state_io=io, state_fp="fp1",
-                             checkpoint_every=1, max_iters=2)
+                             max_iters=CC_COMMIT_EVERY)
     man = io.manifest(CC_STATE_TABLE)
-    assert man is not None and man["cc_iter"] == 1
+    assert man is not None and man["cc_iter"] == CC_COMMIT_EVERY - 1
     partial = {
         r["node_id"]: r["label"]
         for r in io.read(spark, CC_STATE_TABLE).collect()
     }
-    assert partial != clean  # genuinely mid-flight state
+    assert partial != {n: clean[n] for n in partial}  # mid-flight
 
-    # rerun with the same (io, fingerprint): resumes past iter 1 and
-    # converges to exactly the uninterrupted result
-    resumed = connected_components(nodes, edges, state_io=io,
-                                   state_fp="fp1", checkpoint_every=1)
-    got = {r["node_id"]: r["label"] for r in resumed.collect()}
+    # rerun with the same (io, fingerprint): resumes past the commit,
+    # so it runs fewer rounds (jobs) than a clean run, and converges
+    # to exactly the uninterrupted result, isolated nodes included
+    got = {}
+    resumed_jobs = spark_jobs(lambda: got.update(
+        (r["node_id"], r["label"])
+        for r in connected_components(nodes, edges, state_io=io,
+                                      state_fp="fp1").collect()))
     assert got == clean
-    assert io.manifest(CC_STATE_TABLE)["cc_iter"] > 1  # advanced
+    assert len(resumed_jobs) < len(clean_jobs)
 
 
 def test_cc_one_action_per_iteration(spark, chain):
@@ -61,10 +76,11 @@ def test_cc_one_action_per_iteration(spark, chain):
     separate join+count action — at 25-iteration ceilings the old
     two-actions-per-iteration shape cost 25 extra full-label joins.
 
-    With AQE off, every action is exactly one job: 2 init checkpoints
-    + 1 isEmpty + k iterations x 1. The 64-chain converges in 7
-    pointer-doubling rounds -> 10 jobs; the two-action shape would be
-    17."""
+    With AQE off, every action is exactly one job: 1 edge-frame
+    checkpoint + k rounds x 1; the isolated nodes are unioned back
+    lazily. The 64-chain converges in 7 pointer-doubling rounds (the
+    7th observes no change) -> 8 jobs; the two-action shape would be
+    15."""
     nodes, edges = chain
     sc = spark.sparkContext
     prev = spark.conf.get("spark.sql.adaptive.enabled")
@@ -76,8 +92,8 @@ def test_cc_one_action_per_iteration(spark, chain):
         n_jobs = len(sc.statusTracker().getJobIdsForGroup("cc-jobcount"))
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
-    assert {r["label"] for r in labels.collect()} == {"000"}
-    assert n_jobs <= 12, f"{n_jobs} jobs: convergence check not folded"
+    assert {r["label"] for r in labels.collect()} == {"000", *ISOLATED}
+    assert n_jobs <= 8, f"{n_jobs} jobs: convergence check not folded"
 
 
 def test_cc_ignores_stale_state(spark, chain, tmp_path):
@@ -87,47 +103,13 @@ def test_cc_ignores_stale_state(spark, chain, tmp_path):
     io = TableIO(str(tmp_path / "wh"))
     with pytest.raises(RuntimeError):
         connected_components(nodes, edges, state_io=io, state_fp="old",
-                             checkpoint_every=1, max_iters=2)
+                             max_iters=CC_COMMIT_EVERY)
+    assert io.manifest(CC_STATE_TABLE) is not None
     # same io, new fingerprint: starts from scratch and converges
     got = {
         r["node_id"]: r["label"]
         for r in connected_components(
-            nodes, edges, state_io=io, state_fp="new",
-            checkpoint_every=1
+            nodes, edges, state_io=io, state_fp="new"
         ).collect()
     }
-    assert set(got.values()) == {"000"}
-
-
-def test_observed_changed_degrades_without_private_api(spark, chain):
-    """_observed_changed leans on PySpark-private surface
-    (Observation._jo / getRowOrEmpty); if a Spark version removes
-    either, the probe must fall back to the explicit aggregate
-    instead of crashing the CC loop (round-4 ADVICE)."""
-    from pyspark.sql import functions as F
-
-    from kgx.spark.stages import _observed_changed
-
-    nodes, edges = chain
-    frame = (
-        nodes.withColumn("label", F.col("node_id"))
-        .withColumn("old_label", F.lit("different"))
-    )
-
-    class NoJo:
-        @property
-        def _jo(self):
-            raise AttributeError("private attr gone in this Spark")
-
-    got = _observed_changed(NoJo(), frame, timeout_s=5.0)
-    assert got == frame.count()  # every row 'changed' in the fixture
-
-    class JoBroken:
-        class _J:
-            def getRowOrEmpty(self):
-                raise RuntimeError("Py4J bridge error")
-
-        _jo = _J()
-
-    got = _observed_changed(JoBroken(), frame, timeout_s=5.0)
-    assert got == frame.count()
+    assert set(got.values()) == {"000", *ISOLATED}

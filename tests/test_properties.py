@@ -119,26 +119,33 @@ def test_minhash_estimate_is_bounded(a, b):
 
 
 @settings(max_examples=25, deadline=None)
-@given(pairs=st.lists(
-    st.tuples(st.integers(0, 14), st.integers(0, 14)),
-    min_size=0, max_size=25))
-def test_connected_components_matches_networkx(spark, pairs):
+@given(
+    pairs=st.lists(st.tuples(st.integers(0, 14), st.integers(0, 14)),
+                   min_size=0, max_size=25),
+    node_ids=st.sets(st.integers(0, 19), max_size=12),
+)
+def test_connected_components_matches_networkx(spark, pairs, node_ids):
+    """The node set is a random subset that may omit edge endpoints
+    and may hold nodes no edge names: labels must cover exactly the
+    subset plus the endpoints, each with its networkx component's
+    min id."""
     import networkx as nx
 
     from kgx.spark.stages import connected_components
 
-    nodes = sorted({f"n{i}" for p in pairs for i in p} | {"n0"})
+    nodes = sorted(f"n{i}" for i in node_ids)
     edges = [(f"n{a}", f"n{b}") for a, b in pairs if a != b]
     ndf = spark.createDataFrame([(n,) for n in nodes], "node_id string")
     edf = spark.createDataFrame(
         edges or [("n0", "n0")], "src string, dst string"
     ).where("src <> dst")
-    labels = {r["node_id"]: r["label"]
-              for r in connected_components(ndf, edf).collect()}
+    rows = connected_components(ndf, edf).collect()
+    labels = {r["node_id"]: r["label"] for r in rows}
 
     g = nx.Graph()
     g.add_nodes_from(nodes)
     g.add_edges_from(edges)
+    assert len(rows) == len(labels) == g.number_of_nodes()
     for comp in nx.connected_components(g):
         want = min(comp)  # min-label propagation -> lexicographic min
         for n in comp:
