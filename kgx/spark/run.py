@@ -31,9 +31,11 @@ check the code path the CLI ships.
 CLI (also the spark-submit entry point; see scripts/submit.sh):
 
     python -m kgx.spark.run --input fixtures/bench --out /tmp/wh \
-        --run-id r1 --stages all [--buckets 32] [--stop-after tag]
+        --run-id r1 [--buckets 32] [--stop-after tag]
 
-`--stop-after` simulates a mid-run failure for resume tests.
+`--stop-after` simulates a mid-run failure for resume tests. The tag
+stage picks its path (per row or once per distinct text) from a
+measured duplication-rate probe.
 """
 
 from __future__ import annotations
@@ -108,20 +110,13 @@ class Runner:
 
     def __init__(self, spark: SparkSession, input_dir: str, out: str,
                  run_id: str, buckets: int = 32,
-                 artifact: str = "tagger_v1.npz",
-                 tag_distinct: bool | None = None):
+                 artifact: str = "tagger_v1.npz"):
         self.spark = spark
         self.input_dir = input_dir
         self.io = TableIO(out)
         self.run_id = run_id
         self.buckets = buckets
         self.artifact_path = os.path.join(input_dir, artifact)
-        # content-addressed tagging: tag distinct texts, join back
-        # (value-identical output/content hashes; wins when the corpus
-        # repeats turns). True/False force the mode; None (default)
-        # decides per run from a measured duplication-rate probe in
-        # stage_tag.
-        self.tag_distinct = tag_distinct
         self._tagger = None
         self.events: list[dict] = []
 
@@ -190,15 +185,13 @@ class Runner:
 
     # -- stages --------------------------------------------------------
 
-    def run(self, upto: str | None = None, only=None) -> list[dict]:
-        wanted = list(STAGES if not only else only)
-        unknown = [s for s in wanted if s not in STAGES]
-        if unknown:
+    def run(self, upto: str | None = None) -> list[dict]:
+        if upto is not None and upto not in STAGES:
             raise SystemExit(
-                f"unknown stage(s) {unknown}; valid: {', '.join(STAGES)}")
-        for stage in wanted:
+                f"unknown stage {upto!r}; valid: {', '.join(STAGES)}")
+        for stage in STAGES:
             getattr(self, f"stage_{stage}")()
-            if upto is not None and stage == upto:
+            if stage == upto:
                 break
         return self.events
 
@@ -218,10 +211,10 @@ class Runner:
 
     def _tagged(self) -> DataFrame:
         turns = self.read("turns")
-        distinct = self.tag_distinct
-        if distinct is None:
-            distinct = self._probe_dup_rate(turns)
-        if distinct:
+        # content-addressed tagging (tag distinct texts, join back) is
+        # value-identical to the per-row path and wins when the corpus
+        # repeats turns; the probe alone picks between them
+        if self._probe_dup_rate(turns):
             return stages.tag_extract_distinct(
                 turns, self.tagger(), self.patterns_rows,
                 buckets=self.buckets)
@@ -229,13 +222,13 @@ class Runner:
                                   self.patterns_rows)
 
     def _probe_dup_rate(self, turns: DataFrame) -> bool:
-        """Auto mode: one cheap column-pruned aggregate over the
+        """One cheap column-pruned aggregate over the
         already-checkpointed turns table (count + HLL distinct of
         `text`) measures the duplication rate; past the measured
         break-even (TAG_DISTINCT_AUTO_MIN_RATE_LEXICON) the
         content-addressed path wins. The probe's
         outcome only picks between two VALUE-IDENTICAL plans (same
-        content hashes — tests/test_resume.py cross-mode flip), so HLL
+        content hashes — tests/test_resume.py cross-path resume), so HLL
         approximation error cannot affect output, and the stage
         fingerprint is mode-independent, so resume is unaffected by
         what a previous run chose."""
@@ -334,7 +327,6 @@ def main(argv=None) -> dict:
     ap.add_argument("--input", required=True)
     ap.add_argument("--out", required=True)
     ap.add_argument("--run-id", default="r0")
-    ap.add_argument("--stages", default="all")
     ap.add_argument("--buckets", type=int, default=32)
     ap.add_argument("--artifact", default="tagger_v1.npz",
                     help="tagger checkpoint file inside --input (the "
@@ -343,18 +335,6 @@ def main(argv=None) -> dict:
     ap.add_argument("--stop-after", default=None,
                     help="simulate failure after this stage (resume test)")
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--tag-distinct", action="store_true",
-                    default=None, dest="tag_distinct",
-                    help="force content-addressed tagging: run the "
-                    "tagger once per DISTINCT text and join spans/rel "
-                    "back (value-identical output — same content "
-                    "hashes, rows reordered). Default: AUTO — a "
-                    "duplication-rate probe at the tag stage picks "
-                    "the faster path per run")
-    ap.add_argument("--no-tag-distinct", action="store_false",
-                    dest="tag_distinct",
-                    help="force plain per-row tagging (disable the "
-                    "auto duplication probe)")
     ap.add_argument("--max-partition-mb", type=int, default=16,
                     help="spark.sql.files.maxPartitionBytes in MB; 16MB "
                     "keeps scan tasks fine-grained for the UDF-heavy tag "
@@ -366,12 +346,10 @@ def main(argv=None) -> dict:
     spark = get_spark("kgx-run", cores=args.cores)
     spark.conf.set("spark.sql.files.maxPartitionBytes",
                    str(args.max_partition_mb * 1024 * 1024))
-    only = None if args.stages == "all" else args.stages.split(",")
     t0 = time.time()
     runner = Runner(spark, args.input, args.out, args.run_id,
-                    buckets=args.buckets, artifact=args.artifact,
-                    tag_distinct=args.tag_distinct)
-    events = runner.run(upto=args.stop_after, only=only)
+                    buckets=args.buckets, artifact=args.artifact)
+    events = runner.run(upto=args.stop_after)
     report = {
         "run_id": args.run_id,
         "wall_s": round(time.time() - t0, 3),

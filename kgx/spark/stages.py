@@ -180,11 +180,9 @@ def tag_extract_distinct(turns: DataFrame, tag_spans_udf,
     skewed exactly on the hot duplicated texts, which AQE's skew split
     handles (same mechanism as join_skew_aqe), and the build side is
     unique-per-key so there is no pair explosion. Selected
-    automatically by default: the runner probes the corpus
-    duplication rate at the tag stage and flips this path on past the
-    measured break-even (run.TAG_DISTINCT_AUTO_MIN_RATE_LEXICON);
-    `--tag-distinct` /
-    `--no-tag-distinct` force either mode.
+    automatically: the runner probes the corpus duplication rate at
+    the tag stage and takes this path past the measured break-even
+    (run.TAG_DISTINCT_AUTO_MIN_RATE_LEXICON).
 
     Measured on the x20-duplicated 4.37M-turn fixture at local[32],
     WITH the bucket re-alignment shuffle included: tagged-stage wall

@@ -7,10 +7,11 @@ fixture — runs at two parallelism levels, local[8] (N) and local[32]
 (4N), each in a fresh SparkSession with shuffle partitions matched to
 cores. Outputs are asserted identical via the partitioning-invariant
 per-table content hashes from the table manifests. Efficiency =
-(T_N / T_4N) / 4.
+(T_N / T_4N) / 4. The runner's duplication probe picks the tag path,
+as in any product run.
 
 Writes BENCH/scaling_{N}v{4N}.json (+ canonical scaling.json and a
-generated report for the primary 2,8 pair); prints one JSON line and
+generated report for the primary 1,4 pair); prints one JSON line and
 exits non-zero when the output hashes differ across levels.
 
 Usage: python scripts/scaling_bench.py [--tier bench] [--repeat 1]
@@ -46,8 +47,7 @@ def count_turns(fixture: str) -> int:
     return total
 
 
-def run_level(cores: int, fixture: str, buckets: int,
-              tag_mode: str = "plain") -> dict:
+def run_level(cores: int, fixture: str, buckets: int) -> dict:
     """One parallelism level = one fresh subprocess pinned (taskset) to
     exactly `cores` CPUs. Without pinning, a local[8] session's Python
     UDF workers spill onto the machine's idle cores and the 'N-core
@@ -71,14 +71,6 @@ def run_level(cores: int, fixture: str, buckets: int,
         "--run-id", f"scale{cores}",
         "--buckets", str(buckets), "--cores", str(cores),
     ]
-    # default: pin plain per-row tagging so the curve stays
-    # method-identical to the r1-r4 records (the replicate-N fixture
-    # is ~N*7.6x duplicated, which would flip the runner's AUTO
-    # content-addressed probe and change what is being measured);
-    # --tag-mode auto measures the product default instead, disclosed
-    # as its own row in BENCH/BASELINE.md
-    if tag_mode == "plain":
-        cmd.append("--no-tag-distinct")
     try:
         t0 = time.time()
         proc = subprocess.run(
@@ -160,13 +152,6 @@ def main() -> None:
                     help="clone each conv N times (bigger identical input)")
     ap.add_argument("--levels", default="8,32",
                     help="comma-separated core counts for N and 4N")
-    ap.add_argument("--tag-mode", default="plain",
-                    choices=("plain", "auto"),
-                    help="plain (default): pin --no-tag-distinct for "
-                    "method continuity with the r1-r4 records; auto: "
-                    "measure the product-default duplication probe "
-                    "(flips content-addressed tagging on the "
-                    "replicated fixture)")
     args = ap.parse_args()
 
     fixture = os.path.join(REPO, "fixtures", args.tier)
@@ -187,7 +172,7 @@ def main() -> None:
     for cores in lv:
         best = None
         for _ in range(args.repeat):
-            r = run_level(cores, fixture, buckets, args.tag_mode)
+            r = run_level(cores, fixture, buckets)
             if best is None or r["wall_s"] < best["wall_s"]:
                 best = r
         levels[cores] = best
@@ -203,21 +188,17 @@ def main() -> None:
         "outputs_identical": identical,
         "levels": levels,
         "tier": args.tier,
-        "tag_mode": args.tag_mode,
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # pair-specific record always (auto-mode runs get their own
-    # suffix); the canonical scaling.json and the generated report
-    # only for the primary (1,4) PLAIN pair — the pair where both legs
-    # are compute-bound, i.e. the closest single-VM analogue of adding
-    # executors (see BENCH/BASELINE.md) — so a secondary-pair or
-    # auto-mode run cannot clobber the headline report
-    suffix = "" if args.tag_mode == "plain" else f"_{args.tag_mode}"
+    # pair-specific record always; the canonical scaling.json and the
+    # generated report only for the primary (1,4) pair — the pair
+    # where both legs are compute-bound, i.e. the closest single-VM
+    # analogue of adding executors (see BENCH/BASELINE.md) — so a
+    # secondary-pair run cannot clobber the headline report
     with open(os.path.join(
-            REPO, "BENCH",
-            f"scaling_{lv[0]}v{lv[1]}{suffix}.json"), "w") as f:
+            REPO, "BENCH", f"scaling_{lv[0]}v{lv[1]}.json"), "w") as f:
         json.dump(out, f, indent=2)
-    primary = lv == [1, 4] and args.tag_mode == "plain"
+    primary = lv == [1, 4]
     if primary:
         with open(os.path.join(REPO, "BENCH", "scaling.json"), "w") as f:
             json.dump(out, f, indent=2)

@@ -10,6 +10,7 @@ import os
 
 import pytest
 
+from kgx.spark import run as run_mod
 from kgx.spark.run import STAGES, Runner
 
 # every table a complete run commits
@@ -169,38 +170,52 @@ def test_snapshot_versioning_time_travel(spark, t1_dir, tmp_path):
     assert len(io.manifest("t")["snapshots"]) == 3
 
 
-def test_resume_across_tag_distinct_modes(spark, t1_dir, warehouses):
-    """Flipping --tag-distinct on an existing warehouse must NOT
-    invalidate checkpoints: the two tag paths are value-identical, so
-    a run killed in default mode resumes cleanly in distinct mode
-    (tag stage skips — its inputs fingerprint is mode-independent by
-    design) and the final tables equal a clean single-shot run's."""
+def probe_event(runner):
+    evs = [e for e in runner.events if e.get("probe") == "dup_rate"]
+    assert len(evs) == 1, runner.events
+    return evs[0]
+
+
+def test_resume_across_tag_distinct_modes(spark, t1_dir, warehouses,
+                                          monkeypatch):
+    """A warehouse whose tag stage ran the per-row path resumes cleanly
+    when the probe would now pick the distinct path: the two tag paths
+    are value-identical, so the tag stage skips (its inputs fingerprint
+    is path-independent by design) and the final tables equal a clean
+    single-shot run's on the distinct path. The break-even constant
+    forces each path (inf: per-row, 0.0: distinct)."""
     wh = str(warehouses / "flip")
+    monkeypatch.setattr(run_mod, "TAG_DISTINCT_AUTO_MIN_RATE_LEXICON",
+                        float("inf"))
     first = Runner(spark, t1_dir, wh, "f1", buckets=8)
     first.run(upto="tag")
     assert {e["table"] for e in first.events} >= {"turns", "tagged"}
+    assert probe_event(first)["auto_tag_distinct"] is False
 
-    resumed = Runner(spark, t1_dir, wh, "f2", buckets=8,
-                     tag_distinct=True)
+    monkeypatch.setattr(run_mod, "TAG_DISTINCT_AUTO_MIN_RATE_LEXICON",
+                        0.0)
+    resumed = Runner(spark, t1_dir, wh, "f2", buckets=8)
     resumed.run()
     skipped = {e["table"] for e in resumed.events if e.get("skipped")}
     assert "tagged" in skipped  # the checkpoint survived the flip
 
     clean = Runner(spark, t1_dir, str(warehouses / "flip_clean"),
-                   "fc", buckets=8, tag_distinct=True)
+                   "fc", buckets=8)
     clean.run()
+    assert probe_event(clean)["auto_tag_distinct"] is True
     for table in ("tagged", "edges", "vertices"):
         assert (clean.io.manifest(table)["content_hash"]
                 == resumed.io.manifest(table)["content_hash"]), table
 
 
 def test_auto_tag_distinct_probe_picks_by_duplication(
-        spark, t1_dir, warehouses, tmp_path_factory):
-    """Flagless (auto) mode must measure the corpus duplication rate
-    and pick the faster tag path per run — content-addressed on a
-    heavily duplicated corpus, plain on a unique one — with content
-    hashes equal to the forced mode either way (the probe only picks
-    between value-identical plans)."""
+        spark, t1_dir, warehouses, tmp_path_factory, monkeypatch):
+    """The probe must measure the corpus duplication rate and pick the
+    faster tag path per run — content-addressed on a heavily
+    duplicated corpus, plain on a unique one — with content hashes
+    equal to the other path's either way (the probe only picks
+    between value-identical plans; the other path is forced through
+    the break-even constant: 0.0 distinct, inf plain)."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -240,15 +255,10 @@ def test_auto_tag_distinct_probe_picks_by_duplication(
         ).drop("_rep"),
     )
 
-    def probe_event(runner):
-        evs = [e for e in runner.events if e.get("probe") == "dup_rate"]
-        assert len(evs) == 1, runner.events
-        return evs[0]
-
     for fixture, want_distinct in ((dup, True), (uniq, False)):
         tag = "dup" if want_distinct else "uniq"
         auto = Runner(spark, fixture, str(root / f"wh_auto_{tag}"),
-                      "a", buckets=8)  # tag_distinct unset -> AUTO
+                      "a", buckets=8)
         auto.run(upto="tag")
         ev = probe_event(auto)
         assert ev["auto_tag_distinct"] is want_distinct, ev
@@ -256,11 +266,32 @@ def test_auto_tag_distinct_probe_picks_by_duplication(
             assert ev["dup_rate"] > 10, ev
         else:
             assert ev["dup_rate"] < 1.2, ev
-        forced = Runner(spark, fixture, str(root / f"wh_f_{tag}"),
-                        "f", buckets=8, tag_distinct=not want_distinct)
-        forced.run(upto="tag")
+        with monkeypatch.context() as m:
+            m.setattr(run_mod, "TAG_DISTINCT_AUTO_MIN_RATE_LEXICON",
+                      float("inf") if want_distinct else 0.0)
+            forced = Runner(spark, fixture, str(root / f"wh_f_{tag}"),
+                            "f", buckets=8)
+            forced.run(upto="tag")
+        assert probe_event(forced)["auto_tag_distinct"] is (
+            not want_distinct), probe_event(forced)
         assert (auto.io.manifest("tagged")["content_hash"]
                 == forced.io.manifest("tagged")["content_hash"]), tag
+
+
+def test_unknown_stop_stage_raises_before_any_stage(tmp_path,
+                                                    monkeypatch):
+    """`run(upto=)` names a stage to stop after; a misspelt one must
+    fail before any stage runs, not run the whole pipeline."""
+    calls = []
+    for s in STAGES:
+        monkeypatch.setattr(Runner, f"stage_{s}",
+                            lambda self, s=s: calls.append(s))
+    r = Runner(None, str(tmp_path), str(tmp_path / "wh"), "x")
+    with pytest.raises(SystemExit, match="'tagg'; valid: ingest, tag,"):
+        r.run(upto="tagg")
+    assert calls == []
+    r.run(upto="tag")
+    assert calls == ["ingest", "tag"]
 
 
 @pytest.fixture(scope="module")
