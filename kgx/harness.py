@@ -1381,22 +1381,19 @@ def dedup_exact(spark, sf):
     )
 
 
-def _lsh_candidate_pairs(banded: DataFrame, id_col: str,
-                         bk_col: str = "bk",
-                         cap: int = MAX_LSH_BUCKET) -> DataFrame:
+def _lsh_candidate_pairs(banded: DataFrame, id_col: str) -> DataFrame:
     """(id, band-key) rows -> deduped candidate pairs (id_a < id_b).
 
     Thin adapter over the bucket-size guard the dedup/ANN harness ops
     share (kgx/spark/lsh.py guarded_bucket_pairs; entity linking does
-    not use it — stages.similar_edges is an exact join): buckets up to
-    `cap` members emit the full within-bucket clique, larger buckets
-    star-link every member to the bucket's min id (linear,
+    not use it — stages.similar_edges is an exact join): `bk` buckets up
+    to MAX_LSH_BUCKET members emit the full within-bucket clique, larger
+    buckets star-link every member to the bucket's min id (linear,
     connectivity-preserving; recall caveat + multi-band pigeonhole
     contract documented in that module and pinned by
     tests/test_dedup.py)."""
     pairs = guarded_bucket_pairs(
-        banded, bucket_cols=[bk_col], member_cols=[id_col], cap=cap
-    )
+        banded, bucket_cols=["bk"], member_cols=[id_col])
     return pairs.select(
         F.col(f"a_{id_col}").alias("id_a"),
         F.col(f"b_{id_col}").alias("id_b"),

@@ -117,22 +117,20 @@ class Runner:
         self.run_id = run_id
         self.buckets = buckets
         self.artifact_path = os.path.join(input_dir, artifact)
-        self._tagger = None
         self.events: list[dict] = []
 
     # -- plumbing ------------------------------------------------------
 
+    # the tagger UDF and the dims are built at most once per run, and
+    # only by a builder that runs — a rerun of a complete warehouse
+    # builds none of them
+    @functools.cached_property
     def tagger(self):
-        if self._tagger is None:
-            from kgx.spark.udfs import make_tagger_spans_udf
+        from kgx.spark.udfs import make_tagger_spans_udf
 
-            self._tagger = make_tagger_spans_udf(
-                self.spark, TaggerArtifact.load(self.artifact_path)
-            )
-        return self._tagger
+        return make_tagger_spans_udf(
+            self.spark, TaggerArtifact.load(self.artifact_path))
 
-    # dims are read at most once per run, and only by a builder that
-    # runs — a rerun of a complete warehouse reads neither
     @functools.cached_property
     def alias_dict(self) -> DataFrame:
         return read_alias_dict(self.spark, self.input_dir)
@@ -216,9 +214,9 @@ class Runner:
         # repeats turns; the probe alone picks between them
         if self._probe_dup_rate(turns):
             return stages.tag_extract_distinct(
-                turns, self.tagger(), self.patterns_rows,
+                turns, self.tagger, self.patterns_rows,
                 buckets=self.buckets)
-        return stages.tag_extract(turns, self.tagger(),
+        return stages.tag_extract(turns, self.tagger,
                                   self.patterns_rows)
 
     def _probe_dup_rate(self, turns: DataFrame) -> bool:

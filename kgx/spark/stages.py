@@ -644,50 +644,48 @@ SALT_K = 16  # fan-out CAP per hot key (raise with cluster width)
 SALT_HOT_MIN = 1024  # a key is salt-eligible only past this degree
 
 
-def salted_members(member: DataFrame, key: str = "label",
-                   member_col: str = "node_id",
-                   hot_min: int = SALT_HOT_MIN) -> DataFrame:
-    """Quantile-driven per-key salt fan-out (SURVEY §4): instead of a
-    static SALT_K for every key, measure each key's degree once (a
-    partial-aggregated count — one shuffled row per key), derive the
+def salted_members(member: DataFrame) -> DataFrame:
+    """Quantile-driven per-label salt fan-out (SURVEY §4): instead of a
+    static SALT_K for every label, measure each label's degree once (a
+    partial-aggregated count — one shuffled row per label), derive the
     skew threshold from the degree distribution itself (p95 quantile,
-    floored at `hot_min` so 'hot' means a genuinely large reducer
+    floored at SALT_HOT_MIN so 'hot' means a genuinely large reducer
     group, not the top of a uniformly tiny distribution), and fan out
-    ONLY the hot keys: fan = ceil(degree / threshold) capped at
-    SALT_K. Cold keys keep salt 0, so phase-2 merge touches one row
-    per cold key and the salted plan degenerates to the unsalted one
-    on unskewed data.
+    ONLY the hot labels: fan = ceil(degree / threshold) capped at
+    SALT_K, salt = hash(node_id) mod fan. Cold labels keep salt 0, so
+    phase-2 merge touches one row per cold label and the salted plan
+    degenerates to the unsalted one on unskewed data.
 
-    Scale shape: the hot-key table is tiny by construction (degree >
-    max(p95, hot_min) keys) and is BROADCAST back onto the members —
-    the member frame is never pre-shuffled by key just to learn its
-    fan-out; the only wide exchange stays the phase-1 (key, salt)
-    aggregation. Output equality with any static salt (including
-    none) holds because both downstream combines are algebraic
-    (min-of-struct) or set-union (collect_set) — pinned by
+    Scale shape: the hot-label table is tiny by construction (degree >
+    max(p95, SALT_HOT_MIN) labels) and is BROADCAST back onto the
+    members — the member frame is never pre-shuffled by label just to
+    learn its fan-out; the only wide exchange stays the phase-1
+    (label, salt) aggregation. Output equality with any static salt
+    (including none) holds because both downstream combines are
+    algebraic (min-of-struct) or set-union (collect_set) — pinned by
     tests/test_salt_fanout.py and the oracle-parity suite."""
-    deg = member.groupBy(key).agg(F.count("*").alias("_deg"))
+    deg = member.groupBy("label").agg(F.count("*").alias("_deg"))
     p95 = deg.select(
         F.percentile_approx("_deg", F.lit(0.95)).alias("_p95"))
     hot = (
         deg.crossJoin(F.broadcast(p95))
         .where((F.col("_deg") > F.col("_p95"))
-               & (F.col("_deg") > hot_min))
+               & (F.col("_deg") > SALT_HOT_MIN))
         .select(
-            key,
+            "label",
             F.least(
                 F.lit(SALT_K),
                 F.ceil(F.col("_deg")
-                       / F.greatest(F.col("_p95"), F.lit(hot_min))),
+                       / F.greatest(F.col("_p95"), F.lit(SALT_HOT_MIN))),
             ).cast("int").alias("_fan"),
         )
     )
     return (
-        member.join(F.broadcast(hot), key, "left")
+        member.join(F.broadcast(hot), "label", "left")
         .withColumn(
             "salt",
             F.when(F.col("_fan").isNull(), F.lit(0)).otherwise(
-                F.pmod(F.xxhash64(member_col), F.col("_fan"))
+                F.pmod(F.xxhash64("node_id"), F.col("_fan"))
             ),
         )
         .drop("_fan")
@@ -697,47 +695,42 @@ def salted_members(member: DataFrame, key: str = "label",
 def canonicalize(nodes: DataFrame, labels: DataFrame):
     """A.8: per-component canonical node + entity_map + cc vertices.
 
-    The alias list is a two-phase SALTED aggregation (north star:
-    "salted aggregation for high-degree nodes"): collect_set is
-    holistic — a hot component (an entity with a huge alias set) would
-    funnel every row to one reducer. Phase 1 collects per (label,
-    salt); phase 2 merges the <=SALT_K partial sets per label. min()
-    over structs is algebraic, so the canonical-node pick composes
-    across phases unchanged. Equality with the unsalted form is
-    covered by the oracle-parity and distribution-invariance tests.
+    One two-phase SALTED aggregation (north star: "salted aggregation
+    for high-degree nodes") builds a row per component holding its
+    canonical node, its aliases and its member node ids: collect_set
+    is holistic — a hot component (an entity with a huge alias set)
+    would funnel every row to one reducer. Phase 1 collects per
+    (label, salt); phase 2 merges the <=SALT_K partial sets per label.
+    min() over structs is algebraic, so the canonical-node pick
+    composes across phases unchanged. Equality with the unsalted form
+    is covered by the oracle-parity and distribution-invariance tests.
     The per-label fan-out is degree-quantile-driven (salted_members),
     not static.
 
-    The member frame is localCheckpointed once: it feeds THREE
-    consumers (the degree probe, the two-phase aggregation, and
-    entity_map), and nodes-join-labels would otherwise re-execute per
-    consumer per action. The per-label aggregate is localCheckpointed
-    too: entity_map and cc_vertices both read it, so neither re-runs
-    the two-phase plan. Members are entity-alias rows — bounded by
-    distinct mentions, not corpus size — and the aggregate has one row
-    per component, so both materializations are small even at 100 TB
-    of turns."""
-    member = salted_members(
-        nodes.join(labels, "node_id").localCheckpoint())
+    That per-component frame is localCheckpointed once and both
+    outputs read it: cc_vertices projects it and entity_map explodes
+    its member ids, so neither re-runs the two-phase plan and nothing
+    joins back onto the members. It has one row per component, with
+    id and alias sets bounded by distinct mentions, not corpus size,
+    so it stays small even at 100 TB of turns."""
+    member = salted_members(nodes.join(labels, "node_id"))
     partial = member.groupBy("label", "salt").agg(
         F.min(
             F.struct("is_prov", "etype", "norm", "node_id", "display")
         ).alias("c"),
         F.collect_set("norm").alias("al"),
+        F.collect_set("node_id").alias("ids"),
     )
     canon = partial.groupBy("label").agg(
         F.min("c").alias("c"),
         F.sort_array(
             F.array_distinct(F.flatten(F.collect_list("al")))
         ).alias("aliases"),
+        F.array_distinct(F.flatten(F.collect_list("ids"))).alias("ids"),
     ).localCheckpoint()
-    member = member.drop("salt")
-    entity_map = (
-        member.select("node_id", "label")
-        .distinct()
-        .join(canon.select("label", F.col("c.node_id").alias("canonical_id")),
-              "label")
-        .select("node_id", "canonical_id")
+    entity_map = canon.select(
+        F.explode("ids").alias("node_id"),
+        F.col("c.node_id").alias("canonical_id"),
     )
     cc_vertices = canon.select(
         F.col("c.node_id").alias("entity_id"),

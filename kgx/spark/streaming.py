@@ -120,12 +120,9 @@ def windowed_mention_counts(turns: DataFrame, tag_spans_udf,
     Late turns beyond the watermark are dropped (documented at-most
     lateness); state for closed windows is reclaimed — this is what
     bounds memory on an unbounded stream."""
-    tagged = stages.tag_spans(stages.nonempty_text(turns), tag_spans_udf)
-    mentions = tagged.select(
-        "ts", F.explode("spans").alias("sp")
-    ).select("ts", F.col("sp.etype").alias("etype"))
     return (
-        mentions.withWatermark("ts", watermark)
+        stream_mentions(turns, tag_spans_udf)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"), "etype")
         .agg(F.count("*").alias("n_mentions"))
         .select(

@@ -279,3 +279,29 @@ def test_salted_members_broadcasts_hot_keys_no_member_preshuffle(spark):
 
     for m in _re.finditer(r"hashpartitioning\(([^)]*)\)", plan):
         assert "node_id" not in m.group(1), m.group(0)
+
+
+def test_entity_map_reads_the_component_aggregate(spark):
+    """entity_map is an explode of canonicalize's checkpointed
+    per-component row: its plan is a Generate over the checkpoint —
+    no join back onto the members and no shuffle."""
+    import pandas as pd
+
+    from kgx.spark.stages import canonicalize
+
+    nodes = spark.createDataFrame(pd.DataFrame({
+        "node_id": ["a", "a", "b", "c"],
+        "is_prov": [False, False, True, True],
+        "etype": ["PER", "PER", "PER", "ORG"],
+        "norm": ["ann", "annie", "ann b", "acme"],
+        "display": ["Ann", "Annie", "Ann B", "Acme"],
+    }))
+    labels = spark.createDataFrame(pd.DataFrame({
+        "node_id": ["a", "b", "c"], "label": ["a", "a", "c"]}))
+    entity_map, _ = canonicalize(nodes, labels)
+    tree = plan_of(entity_map).split("\n\n")[0]
+    assert "Generate" in tree, tree
+    assert "Join" not in tree, tree
+    assert "Exchange" not in tree, tree
+    assert sorted(map(tuple, entity_map.collect())) == [
+        ("a", "a"), ("b", "a"), ("c", "c")]

@@ -55,10 +55,21 @@ def test_hot_key_fans_out_cold_keys_stay_unsalted(spark):
 
 
 def test_salted_canonicalize_equals_unsalted_reference(spark):
-    member = _skewed_member(spark)
+    """Every hot node and every third cold label's nodes also carry a
+    second alias row (same node_id, new norm): a node is one entity_map
+    row however many aliases it has, and every alias reaches the
+    component's alias set."""
+    base = _skewed_member(spark)
+    second = base.where(
+        F.col("node_id").startswith("n")
+        | (F.substring("label", 2, 4).cast("int") % 3 == 0)
+    ).withColumn("norm", F.concat("norm", F.lit(" bis")))
+    member = base.unionByName(second).repartition(8)
+    n_second = second.count()
+    assert n_second > HOT_DEG
     nodes = member.select("node_id", "is_prov", "etype", "norm",
                           "display")
-    labels = member.select("node_id", "label")
+    labels = member.select("node_id", "label").distinct()
     entity_map, cc_vertices = canonicalize(nodes, labels)
     got_v = {
         (r["entity_id"], r["canonical_name"], r["etype"],
@@ -86,9 +97,15 @@ def test_salted_canonicalize_equals_unsalted_reference(spark):
         for r in ref.collect()
     }
     assert got_v == want_v
+    aliases = {a for v in got_v for a in v[3]}
+    assert {"alias 7", "alias 7 bis", "org 3 1", "org 3 1 bis",
+            "org 4 1"} <= aliases
+    assert "org 4 1 bis" not in aliases
+    assert sum(len(v[3]) for v in got_v) == HOT_DEG + 3 * N_COLD + n_second
     # entity_map covers every node exactly once, mapped into its label
     em = entity_map.collect()
     assert len(em) == HOT_DEG + 3 * N_COLD
+    assert len({r["node_id"] for r in em}) == len(em)
     canon_of_hot = {r["canonical_id"] for r in em
                     if r["node_id"].startswith("n")}
     assert canon_of_hot == {"n000000"}
