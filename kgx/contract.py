@@ -66,7 +66,11 @@ def tool_id(tool: str) -> str:
 
 
 def normalize(surface: str) -> str:
-    """NFKC → casefold → strip. Applied to copies only, never to `text`."""
+    """NFKC → casefold → strip. Applied to copies only, never to `text`.
+
+    Its JVM twin, kgx.spark.udfs.norm_col (ICU 77, Unicode 16), differs
+    only on the 125 codepoints that Python 3.11's unicodedata still calls
+    `Cn` (e.g. U+1C89, U+A7CB); tests/test_spark_parity.py pins that."""
     return unicodedata.normalize("NFKC", surface).casefold().strip()
 
 

@@ -4,7 +4,8 @@
     turns -tag_extract-> tagged (spans + candidate rel, no text)
     tagged -mentions_of / triples_from_tagged-> mentions, triples_raw
     mentions + alias_dict -link_nodes / similar_edges / link_links->
-        nodes, lsh_edges, links
+        nodes, lsh_edges, links (resolve is the one surface -> node id
+        rule: JVM normalize, broadcast dict lookup, provisional id)
     nodes + lsh_edges -connected_components/canonicalize->
         entity_map, cc_vertices
     triples_raw + entity_map -materialize_*-> edges, vertices
@@ -40,7 +41,7 @@ from kgx.spark.udfs import (
     SPANS_FROM_OFFSETS,
     bigram_arr_col,
     jaccard_col,
-    normalize_surface,
+    norm_col,
 )
 
 CC_MAX_ITERS = 25
@@ -300,41 +301,46 @@ def dict_latest(alias_dict: DataFrame) -> DataFrame:
     )
 
 
-def _dict_cols(dict_df: DataFrame) -> DataFrame:
-    return dict_df.select(
-        F.col("etype").alias("d_etype"),
-        F.col("alias").alias("d_alias"),
-        F.col("entity_id").alias("d_entity_id"),
-        F.col("canonical_name").alias("d_canonical"),
+def resolve(df: DataFrame, etype: str, surface: str, dict_df: DataFrame,
+            out: str) -> DataFrame:
+    """A.7's one node-id rule: adds `{out}_norm` (the normalized
+    surface), `{out}_ent` (the latest alias_dict entity for
+    (etype, norm), null on a miss) and `{out}` = the entity, else the
+    provisional id. One broadcast left join per call."""
+    norm, ent = f"{out}_norm", f"{out}_ent"
+    dic = dict_df.select(F.col("etype").alias(etype),
+                         F.col("alias").alias(norm),
+                         F.col("entity_id").alias(ent))
+    # the norm is projected before the join: reflect is nondeterministic
+    # to Catalyst and may not sit in a join condition
+    return (
+        df.withColumn(norm, norm_col(surface))
+        .join(F.broadcast(dic), [etype, norm], "left")
+        .withColumn(out, F.coalesce(F.col(ent),
+                                    prov_id_col(F.col(etype), F.col(norm))))
     )
 
 
 def link_nodes(mentions: DataFrame, dict_df: DataFrame) -> DataFrame:
     """Node rows: dict entries ∪ provisional (distinct unlinked norms)."""
-    ment = mentions.withColumn("norm", normalize_surface("surface"))
-    dic = _dict_cols(dict_df)
-    dict_nodes = dic.select(
-        F.col("d_entity_id").alias("node_id"),
-        F.col("d_etype").alias("etype"),
-        F.col("d_alias").alias("norm"),
-        F.col("d_canonical").alias("display"),
+    dict_nodes = dict_df.select(
+        F.col("entity_id").alias("node_id"),
+        "etype",
+        F.col("alias").alias("norm"),
+        F.col("canonical_name").alias("display"),
         F.lit(0).alias("is_prov"),
     )
     prov_nodes = (
-        ment.select("etype", "norm")
-        .distinct()
-        .join(
-            F.broadcast(dic),
-            (F.col("etype") == dic.d_etype) & (F.col("norm") == dic.d_alias),
-            "left_anti",
-        )
+        resolve(mentions, "etype", "surface", dict_df, "node_id")
+        .where(F.col("node_id_ent").isNull())
         .select(
-            prov_id_col(F.col("etype"), F.col("norm")).alias("node_id"),
+            "node_id",
             "etype",
-            "norm",
-            F.col("norm").alias("display"),
+            F.col("node_id_norm").alias("norm"),
+            F.col("node_id_norm").alias("display"),
             F.lit(1).alias("is_prov"),
         )
+        .distinct()
     )
     return dict_nodes.unionByName(prov_nodes)
 
@@ -431,17 +437,7 @@ def link_links(mentions: DataFrame, dict_df: DataFrame,
     (method "lsh", the contract's name) or provisional. Pass a
     materialized lsh_edges (read back from its checkpoint) so the
     similarity join is not recomputed."""
-    ment = mentions.withColumn("norm", normalize_surface("surface"))
-    dic = _dict_cols(dict_df)
-    exact = ment.join(
-        F.broadcast(dic),
-        (ment.etype == dic.d_etype) & (ment.norm == dic.d_alias),
-        "left",
-    ).withColumn(
-        "node_id",
-        F.coalesce(F.col("d_entity_id"),
-                   prov_id_col(F.col("etype"), F.col("norm"))),
-    )
+    exact = resolve(mentions, "etype", "surface", dict_df, "node_id")
     node_sim = (
         lsh_edges.select(F.col("src").alias("nid"), "sim")
         .unionByName(lsh_edges.select(F.col("dst").alias("nid"), "sim"))
@@ -460,11 +456,11 @@ def link_links(mentions: DataFrame, dict_df: DataFrame,
             "turn_idx",
             "begin",
             F.col("node_id").alias("entity_id"),
-            F.when(F.col("d_entity_id").isNotNull(), "exact")
+            F.when(F.col("node_id_ent").isNotNull(), "exact")
             .when(F.col("best_sim").isNotNull(), "lsh")
             .otherwise("prov")
             .alias("method"),
-            F.when(F.col("d_entity_id").isNotNull(), F.lit(1.0))
+            F.when(F.col("node_id_ent").isNotNull(), F.lit(1.0))
             .otherwise(F.coalesce(F.col("best_sim"), F.lit(0.0)))
             .alias("score"),
         )
@@ -751,43 +747,15 @@ def triples_node_keyed(triples_raw: DataFrame,
     canonical ids which move when components merge. This is the
     stateless per-batch half of edge materialization; the canonical
     re-key happens in edges_canonical."""
-    dic_s = dict_df.select(
-        F.col("etype").alias("s_etype"), F.col("alias").alias("s_alias"),
-        F.col("entity_id").alias("s_ent"),
-    )
-    dic_o = dict_df.select(
-        F.col("etype").alias("o_etype"), F.col("alias").alias("o_alias"),
-        F.col("entity_id").alias("o_ent"),
-    )
-    return (
-        triples_raw.withColumn("subj_norm", normalize_surface("subj_surface"))
-        .withColumn("obj_norm", normalize_surface("obj_surface"))
-        .join(
-            F.broadcast(dic_s),
-            (F.col("subj_etype") == F.col("s_etype"))
-            & (F.col("subj_norm") == F.col("s_alias")),
-            "left",
-        )
-        .join(
-            F.broadcast(dic_o),
-            (F.col("obj_etype") == F.col("o_etype"))
-            & (F.col("obj_norm") == F.col("o_alias")),
-            "left",
-        )
-        .withColumn(
-            "subj_node",
-            F.coalesce(F.col("s_ent"),
-                       prov_id_col(F.col("subj_etype"), F.col("subj_norm"))),
-        )
-        .withColumn(
-            "obj_node",
-            F.when(F.col("pred") == "uses_tool",
-                   tool_id_col(F.col("obj_surface")))
-            .otherwise(
-                F.coalesce(F.col("o_ent"),
-                           prov_id_col(F.col("obj_etype"),
-                                       F.col("obj_norm")))),
-        )
+    keyed = resolve(
+        resolve(triples_raw, "subj_etype", "subj_surface", dict_df,
+                "subj_node"),
+        "obj_etype", "obj_surface", dict_df, "obj_node")
+    return keyed.withColumn(
+        "obj_node",
+        F.when(F.col("pred") == "uses_tool",
+               tool_id_col(F.col("obj_surface")))
+        .otherwise(F.col("obj_node")),
     )
 
 

@@ -1,7 +1,8 @@
-"""Arrow-vectorized pandas UDFs — the only Python on the executor hot
-path (SURVEY.md §2 Table B.10).
+"""Arrow-vectorized pandas UDFs and their JVM twins (SURVEY.md §2
+Table B.10).
 
-The taggers follow the iterator-of-series pattern: the frozen model is
+The tagger UDFs are the pipeline's only Python on the executor hot
+path. They follow the iterator-of-series pattern: the frozen model is
 materialized once per Python worker (from a broadcast), then every
 Arrow batch runs tagcore's batched path (make_batch_emitter ->
 viterbi_batch_padded) in length-sorted chunks — one numpy DP per
@@ -11,7 +12,10 @@ decodes with decode_bio_batch_arrays and returns span offsets as
 primitive int arrays, the cheapest Arrow crossing, and
 stages.tag_spans builds the span structs JVM-side. `make_tagger_udf`
 returns the raw per-character BIO tags, which only the conlleval
-paths need. Everything else is vectorized pandas/numpy.
+paths need. `minhash_sig` and `hp_band_keys` serve only harness ops.
+The rest are JVM column expressions that twin a contract function
+(norm_col, bigram_arr_col, jaccard_col, band_key_cols), so link,
+materialize and every stream batch cross into Python nowhere.
 """
 
 from __future__ import annotations
@@ -20,7 +24,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -145,10 +149,24 @@ END
 """
 
 
-@F.pandas_udf(T.StringType())
-def normalize_surface(s: pd.Series) -> pd.Series:
-    """A.7 normalize: NFKC -> casefold -> strip (vectorized pandas str)."""
-    return s.fillna("").str.normalize("NFKC").str.casefold().str.strip()
+# contract.normalize strips what str.isspace accepts (29 codepoints);
+# F.trim strips only U+0020
+_SPACE = "".join(
+    f"\\x{{{cp:x}}}" for cp in range(0x110000) if chr(cp).isspace())
+_STRIP = rf"\A[{_SPACE}]+|[{_SPACE}]+\z"
+
+
+def norm_col(c: str | Column) -> Column:
+    """A.7 normalize as a JVM expression: the twin of contract.normalize
+    (NFKC -> casefold -> strip) through the ICU4J jar Spark ships.
+    Null gives "" (reflect throws on null). Catalyst treats reflect as
+    nondeterministic, so project the result with withColumn before a
+    join or aggregate uses it; never put it in a join condition."""
+    nfkc = F.reflect(F.lit("com.ibm.icu.text.Normalizer"), F.lit("compose"),
+                     F.coalesce(c, F.lit("")), F.lit(True))
+    folded = F.reflect(F.lit("com.ibm.icu.lang.UCharacter"),
+                       F.lit("foldCase"), nfkc, F.lit(True))
+    return F.regexp_replace(folded, _STRIP, "")
 
 
 @F.pandas_udf(T.ArrayType(T.LongType()))

@@ -52,24 +52,53 @@ def test_ingest_scan_prunes_and_pushes(spark, t1_dir):
     assert cols <= {"conv_id", "turn_idx", "text"}, plan
 
 
-def test_link_uses_broadcast_join(spark, t1_dir):
-    """The alias-dict dimension join must be a BroadcastHashJoin, not a
-    shuffle (sort-merge) join."""
+def _resolve_plans(spark, t1_dir) -> dict[str, str]:
+    """Plans of the three functions that turn a surface into a node id
+    through stages.resolve, on tiny in-memory inputs (a pattern triple
+    and a uses_tool triple, whose object is keyed by tool id)."""
     from kgx.spark import stages
-    from kgx.spark.udfs import normalize_surface
 
     mentions = spark.createDataFrame(
         [("c1", 0, 0, 3, "Ana", "PER")],
         "conv_id string, turn_idx int, begin int, end int, "
         "surface string, etype string",
     )
-    dict_df = spark.read.parquet(f"{t1_dir}/alias_dict.parquet")
-    dict_df = stages.dict_latest(dict_df)
+    triples = spark.createDataFrame(
+        [("c1", 0, "Ana", "PER", "works_at", "Nova", "ORG", 0),
+         ("c1", 1, "Ana", "PER", "uses_tool", "grep", "TOOL", 1)],
+        "conv_id string, turn_idx int, subj_surface string, "
+        "subj_etype string, pred string, obj_surface string, "
+        "obj_etype string, ts long",
+    )
+    dict_df = stages.dict_latest(
+        spark.read.parquet(f"{t1_dir}/alias_dict.parquet"))
     nodes = stages.link_nodes(mentions, dict_df)
     lsh = stages.similar_edges(nodes, nodes)
-    plan = plan_of(stages.link_links(mentions, dict_df, lsh))
-    assert "BroadcastHashJoin" in plan, plan
-    del normalize_surface
+    return {
+        "link_nodes": plan_of(nodes),
+        "link_links": plan_of(stages.link_links(mentions, dict_df, lsh)),
+        "triples_node_keyed": plan_of(
+            stages.triples_node_keyed(triples, dict_df)),
+    }
+
+
+def test_link_uses_broadcast_join(spark, t1_dir):
+    """The alias-dict dimension join must be a BroadcastHashJoin, not a
+    shuffle (sort-merge) join — in link and in both of
+    triples_node_keyed's dict lookups."""
+    plans = _resolve_plans(spark, t1_dir)
+    assert "BroadcastHashJoin" in plans["link_links"], plans["link_links"]
+    keyed = plans["triples_node_keyed"]
+    assert keyed.count("BroadcastHashJoin LeftOuter") >= 2, keyed
+    assert "SortMergeJoin" not in keyed, keyed
+
+
+def test_link_and_materialize_run_no_python_udf(spark, t1_dir):
+    """Normalization is a JVM expression (udfs.norm_col): turning a
+    surface into a node id crosses into Python nowhere."""
+    for name, plan in _resolve_plans(spark, t1_dir).items():
+        assert "ArrowEvalPython" not in plan, (name, plan)
+        assert "BatchEvalPython" not in plan, (name, plan)
 
 
 def test_flagship_plan_broadcasts_dims(spark):

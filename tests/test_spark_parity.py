@@ -111,6 +111,44 @@ def test_sha16_spark_twin_matches_python(spark):
         assert r["t"] == tool_id(r["norm"])
 
 
+def test_norm_col_twin_matches_python(spark):
+    """udfs.norm_col (ICU4J in the JVM) == contract.normalize on every
+    codepoint, on composed strings and at every strip boundary. The one
+    known gap: ICU implements a newer Unicode than this Python, so a
+    codepoint Python still calls unassigned (Cn) may normalize
+    differently. Pinned as a subset, so a Python upgrade shrinks it."""
+    import unicodedata
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from kgx.contract import normalize
+    from kgx.spark.udfs import norm_col
+
+    singles = [chr(cp) for cp in range(0x110000)
+               if not 0xD800 <= cp <= 0xDFFF]
+    spaces = [c for c in singles if c.isspace()]
+    composed = [
+        "é", "ẛ̣", "ą́", "각",
+        "한글", "ＫＧ实验室 Ｎｏｖａ", "Straße", "ﬁﬂ",
+        "ΣΑΣ", "İstanbul", "ǅemal", "数据科学家", "㍿", "①②",
+    ]
+    edges = [f"{w}{c}x{w}y{w}" for w in spaces for c in ("", "ß", "Ａ")]
+    texts = singles + composed + edges + [None]
+    df = spark.createDataFrame(pd.DataFrame(
+        {"s": texts, "want": [normalize(t or "") for t in texts]}))
+    bad = (
+        df.withColumn("got", norm_col("s"))
+        .where(F.col("got") != F.col("want"))
+        .select("s")
+        .collect()
+    )
+    assert [r.s for r in bad if r.s is None or len(r.s) != 1] == []
+    assert {unicodedata.category(r.s) for r in bad} <= {"Cn"}, bad[:20]
+    assert df.where(F.col("s").isNull()).select(
+        norm_col("s").alias("n")).first().n == ""
+
+
 def test_distribution_invariance_bucket_counts(spark, t1_dir):
     """SURVEY §7: identical edges/vertices content under different
     partitionings (buckets=1 vs buckets=8). Deterministic-output
