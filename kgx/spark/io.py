@@ -1,18 +1,22 @@
-"""Table IO abstraction: Iceberg-style tables stood in by partitioned
-parquet + a JSON manifest (SURVEY.md §7 hard parts: Iceberg runtime
-jars are absent in this sandbox; this layer keeps the pipeline code
-backend-agnostic so `spark.read.format('iceberg')` is a drop-in).
+"""Table IO abstraction: Iceberg-style tables stood in by parquet data
+plus one JSON manifest per table (SURVEY.md §7 hard parts: Iceberg
+runtime jars are absent in this sandbox; this layer keeps the pipeline
+code backend-agnostic so `spark.read.format('iceberg')` is a drop-in).
 
 A manifest is the one record of a table's metadata, as Iceberg's
 snapshot metadata would be: inputs fingerprint, row count, content
 hash, schema, per-file lineage (path, rows, bytes) and the completion
 marker — what stage-level checkpoint/resume needs (BASELINE
 north_rule: "resumable from checkpoint with per-partition lineage +
-metrics"). Reads of the current data use its schema (no inference).
+metrics"). Reads use its schema (no inference); a table without a
+manifest was never committed, and reading it raises.
 
-Two table kinds:
-  * snapshot tables (write): every write is a full immutable snapshot
-    `_v{n}`; reads see the current one; old ones expire.
+Every table version is one data directory `{table}/v{n}`, written by
+one writer (`TableIO._write_version`) that returns the version's rows,
+bytes and per-file lineage from the parquet footers. Two table kinds:
+  * snapshot tables (write): every write is a full version; reads see
+    the current one. The previous version is kept, since a lazy reader
+    may still hold it; older ones are deleted. There is no time travel.
   * log tables (append): every write is a DELTA segment; reads resolve
     the merged view — plain union, latest-wins-per-key with tombstones
     (upsert log), or per-key sum/min/max (aggregation log). Segments
@@ -54,14 +58,13 @@ def stored_schema(manifest: dict, drop=()) -> T.StructType:
 
 
 class TableIO:
-    """Versioned tables (Iceberg-lite): every write creates a new
-    immutable snapshot directory `{table}/_v{n}`; the manifest's
-    `version` points at the current one and `snapshots` keeps the
-    history (run_id, rows, content hash per version). `read(version=k)`
-    time-travels; `expire_snapshots` bounds disk. Swapping this layer
-    for real Iceberg keeps the pipeline code unchanged."""
-
-    KEEP_SNAPSHOTS = 2
+    """Versioned tables (Iceberg-lite). `_write_version` writes every
+    data directory `{table}/v{n}` — snapshot writes, delta segments and
+    compactions alike — and `_drop_versions` deletes them; the
+    manifest's `version` names the current one. A snapshot table keeps
+    its current and previous version, a log table the segments its
+    manifest lists. Swapping this layer for real Iceberg keeps the
+    pipeline code unchanged."""
 
     def __init__(self, warehouse: str):
         self.warehouse = warehouse
@@ -71,18 +74,18 @@ class TableIO:
         return os.path.join(self.warehouse, table)
 
     def path(self, table: str, version: int | None = None) -> str:
-        """Data dir of a snapshot (default: current). For a table that
+        """Data dir of a version (default: current). For a table that
         has never been written, returns the would-be v1 dir (useful
         only for fingerprinting of absent inputs)."""
         if version is None:
             m = self.manifest(table)
-            version = m["version"] if m and "version" in m else 1
-        return os.path.join(self.table_dir(table), f"_v{version}")
+            version = m["version"] if m else 1
+        return os.path.join(self.table_dir(table), f"v{version}")
 
     def manifest_path(self, table: str) -> str:
         return os.path.join(self.warehouse, f"{table}.manifest.json")
 
-    def _dump_manifest(self, table: str, manifest: dict) -> None:
+    def dump_manifest(self, table: str, manifest: dict) -> None:
         """Atomic manifest commit (tmp + rename): the exactly-once
         replay path READS manifests to roll back a half-applied batch,
         so a torn in-place write would wedge the stream exactly when
@@ -92,6 +95,38 @@ class TableIO:
             json.dump(manifest, f, indent=2)
         os.replace(tmp, self.manifest_path(table))
 
+    def _write_version(self, df: DataFrame, table: str, version: int,
+                       partition_by: list[str] | None = None) -> dict:
+        """Write `df` as data dir `version` of `table` and return its
+        `{version, rows, bytes, files}` record, read once from the
+        parquet footers (driver-side metadata; no data scan). One file
+        per write task, so `files` (path, rows, bytes each) is the
+        per-partition lineage."""
+        import pyarrow.parquet as pq
+
+        root = self.path(table, version)
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(root)
+        files = []
+        for dp, _, fns in os.walk(root):
+            for fn in sorted(fns):
+                if fn.endswith(".parquet"):
+                    p = os.path.join(dp, fn)
+                    files.append({
+                        "path": os.path.relpath(p, root),
+                        "rows": pq.ParquetFile(p).metadata.num_rows,
+                        "bytes": os.path.getsize(p)})
+        return {"version": version,
+                "rows": sum(f["rows"] for f in files),
+                "bytes": sum(f["bytes"] for f in files),
+                "files": files}
+
+    def _drop_versions(self, table: str, versions) -> None:
+        for v in versions:
+            shutil.rmtree(self.path(table, v), ignore_errors=True)
+
     def write(
         self,
         df: DataFrame,
@@ -100,56 +135,42 @@ class TableIO:
         inputs_fingerprint: str | None = None,
         extra: dict | None = None,
     ) -> dict:
-        """Write a new parquet snapshot of `table` and commit its
+        """Write a new version of snapshot table `table` and commit its
         manifest; the manifest lands last (commit marker), in one
         atomic dump, so a crash never leaves a complete manifest
         without its content hash or lineage.
 
-        Row count and an order-insensitive content signature are
-        observed DURING the write job (`df.observe`: sum of per-row
-        murmur3 — commutative, so invariant under partitioning and
-        parallelism); the per-file lineage (rows, bytes per output
-        file) comes from one read of the parquet footers (driver-side
-        metadata). No second scan of the data — at 100 TB a re-scan
-        per table would double the pipeline's IO."""
+        An order-insensitive content signature is observed DURING the
+        write job (`df.observe`: sum of per-row murmur3 — commutative,
+        so invariant under partitioning and parallelism); rows and the
+        per-file lineage come from the parquet footers. No second scan
+        of the data — at 100 TB a re-scan per table would double the
+        pipeline's IO."""
         prev = self.manifest(table)
         if prev is not None and prev.get("kind") == "log":
             raise ValueError(
                 f"{table} is a log table — use append(), not write() "
                 "(a snapshot write would orphan its delta segments)")
-        version = (prev["version"] + 1) if prev and "version" in prev else 1
+        version = prev["version"] + 1 if prev else 1
         obs = Observation()
-        w = df.observe(obs, F.count(F.lit(1)).alias("rows"),
-                       content_sig_col(df)).write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
         t0 = time.time()
-        w.parquet(self.path(table, version))
-        got = obs.get
-        rows = int(got["rows"])
-        content_hash = format(int(got["sig"] or 0) % (1 << 63), "016x")
-        snapshots = list(prev.get("snapshots", [])) if prev else []
-        snapshots.append({"version": version, "rows": rows,
-                          "content_hash": content_hash,
-                          **({"run_id": extra["run_id"]}
-                             if extra and "run_id" in extra else {})})
+        rec = self._write_version(df.observe(obs, content_sig_col(df)),
+                                  table, version, partition_by)
         manifest = {
             "table": table,
             "complete": True,
-            "version": version,
-            "rows": rows,
-            "content_hash": content_hash,
-            "files": [{"path": p, "rows": r, "bytes": b}
-                      for p, r, b in self.file_stats(table, version)],
+            **rec,
+            "content_hash": format(int(obs.get["sig"] or 0) % (1 << 63),
+                                   "016x"),
             "schema": df.schema.jsonValue(),
             "partition_by": partition_by or [],
             "inputs_fingerprint": inputs_fingerprint,
             "wall_s": round(time.time() - t0, 3),
-            "snapshots": snapshots,
             **(extra or {}),
         }
-        self._dump_manifest(table, manifest)
-        self.expire_snapshots(table)
+        self.dump_manifest(table, manifest)
+        # keep the previous version: a lazy reader may still hold it
+        self._drop_versions(table, [version - 2])
         return manifest
 
     # -- append-log tables (Iceberg-style delta segments) ---------------
@@ -206,7 +227,7 @@ class TableIO:
                     f"{table}: delta schema drift — manifest has "
                     f"{sorted(want.items())}, append got "
                     f"{sorted(got.items())}")
-        version = (prev["version"] + 1) if prev else 1
+        version = prev["version"] + 1 if prev else 1
         seg = df.withColumn("_del", F.lit(False))
         if deletes is not None:
             if not log_keys:
@@ -221,7 +242,7 @@ class TableIO:
                 .withColumn("_del", F.lit(True))
             )
         seg = seg.withColumn("_seg", F.lit(version))
-        seg.write.mode("overwrite").parquet(self.path(table, version))
+        rec = self._write_version(seg, table, version)
         if log_keys:
             # one upsert row per key per segment: _read_log's
             # latest-wins window orders by (_seg desc, _del asc), so
@@ -238,8 +259,7 @@ class TableIO:
                 .where(F.col("count") > 1).limit(1).collect()
             )
             if dup:
-                shutil.rmtree(self.path(table, version),
-                              ignore_errors=True)
+                self._drop_versions(table, [version])
                 # In a foreachBatch caller an offending delta is a
                 # POISON BATCH (every replay recomputes it and fails
                 # here again — the stream cannot advance past it), so
@@ -253,8 +273,8 @@ class TableIO:
                     f"log key {sample} — latest-wins within one "
                     f"segment would be nondeterministic; dedupe the "
                     f"delta before append")
-        segments = list(prev.get("segments", [])) if prev else []
-        segments.append(self._segment(table, version, batch_tag))
+        segments = list(prev["segments"]) if prev else []
+        segments.append({**rec, "batch_tag": batch_tag})
         manifest = {
             "table": table,
             "complete": True,
@@ -266,18 +286,8 @@ class TableIO:
             "schema": df.schema.jsonValue(),
             "segments": segments,
         }
-        self._dump_manifest(table, manifest)
+        self.dump_manifest(table, manifest)
         return manifest
-
-    def _segment(self, table: str, version: int,
-                 batch_tag: str | None) -> dict:
-        """The manifest record of one written segment: rows and bytes
-        summed from its parquet footers."""
-        stats = self.file_stats(table, version)
-        return {"version": version,
-                "rows": sum(r for _, r, _ in stats),
-                "bytes": sum(b for _, _, b in stats),
-                "batch_tag": batch_tag}
 
     def prune_batch(self, table: str, batch_tag: str) -> int:
         """Drop every segment written under `batch_tag` (crash
@@ -295,17 +305,16 @@ class TableIO:
         if not m or m.get("kind") != "log":
             return 0
         keep = [s for s in m["segments"] if s.get("batch_tag") != batch_tag]
-        dropped = [s for s in m["segments"] if s.get("batch_tag") == batch_tag]
-        for s in dropped:
-            shutil.rmtree(self.path(table, s["version"]),
-                          ignore_errors=True)
+        dropped = [s["version"] for s in m["segments"]
+                   if s.get("batch_tag") == batch_tag]
+        self._drop_versions(table, dropped)
         if not keep:
             os.remove(self.manifest_path(table))
             return len(dropped)
         m["segments"] = keep
         m["version"] = keep[-1]["version"]
         m["rows"] = sum(s["rows"] for s in keep)
-        self._dump_manifest(table, m)
+        self.dump_manifest(table, m)
         return len(dropped)
 
     def compact(self, spark: SparkSession, table: str) -> dict:
@@ -317,19 +326,16 @@ class TableIO:
         if not m or m.get("kind") != "log":
             raise ValueError(f"{table} is not a log table")
         merged = self.read(spark, table).localCheckpoint()
-        old = list(m["segments"])
+        old = [s["version"] for s in m["segments"]]
         version = m["version"] + 1
-        seg = merged.withColumn("_del", F.lit(False)).withColumn(
-            "_seg", F.lit(version)
-        )
-        seg.write.mode("overwrite").parquet(self.path(table, version))
-        m["segments"] = [self._segment(table, version, None)]
+        rec = self._write_version(
+            merged.withColumn("_del", F.lit(False))
+            .withColumn("_seg", F.lit(version)), table, version)
+        m["segments"] = [{**rec, "batch_tag": None}]
         m["version"] = version
-        m["rows"] = m["segments"][0]["rows"]
-        self._dump_manifest(table, m)
-        for s in old:
-            shutil.rmtree(self.path(table, s["version"]),
-                          ignore_errors=True)
+        m["rows"] = rec["rows"]
+        self.dump_manifest(table, m)
+        self._drop_versions(table, old)
         return m
 
     def _read_log(self, spark: SparkSession, table: str,
@@ -365,64 +371,21 @@ class TableIO:
             return df  # aggregation drops _seg/_del already
         return df.drop("_seg", "_del")
 
-    def expire_snapshots(self, table: str) -> None:
-        """Drop snapshot data dirs older than the newest
-        KEEP_SNAPSHOTS (manifest history rows are retained). Log
-        tables keep all their segments (compact() bounds them
-        instead)."""
+    def read(self, spark: SparkSession, table: str) -> DataFrame:
+        """Read the current version of a committed table. Log tables
+        resolve to their merged view (union of segments; latest-wins
+        per key + tombstone filter when keyed).
+
+        The data is read with the manifest's schema, so the read runs
+        no schema-inference job; partition columns are left out of it
+        and still come from the directory names, as they would with
+        inference. A table with no manifest raises: its data dir, if
+        any, may hold a crashed write's partial output."""
         m = self.manifest(table)
-        if not m or "version" not in m or m.get("kind") == "log":
-            return
-        cur = m["version"]
-        base = self.table_dir(table)
-        if not os.path.isdir(base):
-            return
-        for name in os.listdir(base):
-            if name.startswith("_v"):
-                try:
-                    v = int(name[2:])
-                except ValueError:
-                    continue
-                if v <= cur - self.KEEP_SNAPSHOTS:
-                    shutil.rmtree(os.path.join(base, name),
-                                  ignore_errors=True)
-
-    def file_stats(self, table: str,
-                   version: int | None = None) -> list[tuple[str, int, int]]:
-        """(relpath, rows, bytes) per output parquet file, straight from
-        the footers (driver-side metadata read; no data scan). One file
-        per write task -> these are the per-partition lineage counters
-        a snapshot manifest stores as `files`."""
-        import pyarrow.parquet as pq
-
-        root = self.path(table, version)
-        out = []
-        for dp, _, fns in os.walk(root):
-            for fn in sorted(fns):
-                if not fn.endswith(".parquet"):
-                    continue
-                p = os.path.join(dp, fn)
-                md = pq.ParquetFile(p).metadata
-                out.append(
-                    (os.path.relpath(p, root), md.num_rows,
-                     os.path.getsize(p))
-                )
-        return out
-
-    def read(self, spark: SparkSession, table: str,
-             version: int | None = None) -> DataFrame:
-        """Read the current snapshot, or time-travel to `version`.
-        Log tables resolve to their merged view (union of segments;
-        latest-wins per key + tombstone filter when keyed).
-
-        The current data is read with the manifest's schema, so the
-        read runs no schema-inference job; partition columns are left
-        out of it and still come from the directory names, as they
-        would with inference. Time travel infers (an old snapshot's
-        schema is not kept)."""
-        m = self.manifest(table)
-        if m is None or version is not None:
-            return spark.read.parquet(self.path(table, version))
+        if m is None:
+            raise ValueError(
+                f"{table} has no manifest in {self.warehouse}: it was "
+                "never committed")
         if m.get("kind") == "log":
             return self._read_log(spark, table, m)
         return spark.read.schema(

@@ -9,13 +9,13 @@ skipped — so a run killed after stage k resumes at k+1 and produces
 byte-identical output (tested in tests/test_resume.py).
 
 Lineage costs (nearly) nothing extra and lives in the manifest that
-commits each table: TableIO.write observes the row count and an
-order-insensitive content signature DURING the write job (invariant
-under partitioning/parallelism; this is what the local[8]-vs-local[32]
-equality assertion in bench uses) and records one (path, rows, bytes)
-entry per output file from the parquet footers. A killed run keeps
-the lineage of every table it committed. Each commit adds one event
-built from that manifest.
+commits each table: TableIO.write observes an order-insensitive
+content signature DURING the write job (invariant under
+partitioning/parallelism; this is what the local[8]-vs-local[32]
+equality assertion in bench uses) and takes the row count and one
+(path, rows, bytes) entry per output file from the parquet footers.
+A killed run keeps the lineage of every table it committed. Each
+commit adds one event built from that manifest.
 
 Each stage's outputs are built lazily (one builder per table), so the
 eager work a stage needs — the tag stage's duplication-rate probe, the

@@ -165,32 +165,14 @@ EDGES_AGG_SPEC = {
 SPEAKERS_AGG_SPEC = {"keys": ["conv_id"], "min": ["sp"]}
 
 
-def _canon_marker_path(io) -> str:
-    import os
-
-    return os.path.join(io.warehouse, "_canon_commit.json")
+# the stream's commit marker: a manifest holding the last FULLY
+# applied micro-batch id
+CANON_MARKER = "_canon_commit"
 
 
 def canon_last_applied(io) -> int:
     """Highest fully-committed micro-batch id (-1 before any)."""
-    import json
-    import os
-
-    p = _canon_marker_path(io)
-    if not os.path.exists(p):
-        return -1
-    with open(p) as f:
-        return int(json.load(f)["batch_id"])
-
-
-def _canon_mark_applied(io, batch_id: int) -> None:
-    import json
-    import os
-
-    tmp = _canon_marker_path(io) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"batch_id": batch_id}, f)
-    os.replace(tmp, _canon_marker_path(io))
+    return int((io.manifest(CANON_MARKER) or {"batch_id": -1})["batch_id"])
 
 
 def incremental_canon_updater(spark: SparkSession, warehouse: str,
@@ -283,7 +265,7 @@ def incremental_canon_updater(spark: SparkSession, warehouse: str,
         clean = stages.nonempty_text(turns_batch)
         if not clean.isEmpty():
             apply(clean, tag)
-        _canon_mark_applied(io, batch_id)
+        io.dump_manifest(CANON_MARKER, {"batch_id": batch_id})
         for tbl in CANON_TABLES:
             segments = (io.manifest(tbl) or {}).get("segments", ())
             if compact_every and len(segments) >= max(compact_every, 2):

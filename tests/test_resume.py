@@ -84,7 +84,6 @@ def test_metrics_lineage_rows(spark, t1_dir, warehouses):
         m = r.io.manifest(table)
         assert m["run_id"] == "clean", table
         assert len(m["content_hash"]) == 16, table
-        assert m["snapshots"][-1]["content_hash"] == m["content_hash"]
         assert_manifest_lineage(r, table)
     assert {r.io.manifest(t)["stage"] for t in TABLES} == set(STAGES)
     assert not os.path.exists(os.path.join(wh, "metrics"))
@@ -146,28 +145,38 @@ def test_manifest_commit_marker(spark, t1_dir, tmp_path):
                      recursive=True)
 
 
-def test_snapshot_versioning_time_travel(spark, t1_dir, tmp_path):
-    """Iceberg-lite snapshots: each write is an immutable version; read
-    time-travels; expiry keeps the newest KEEP_SNAPSHOTS data dirs."""
+def test_snapshot_retention_keeps_current_and_previous(spark, tmp_path):
+    """Iceberg-lite snapshots: each write is a new visible `v{n}` data
+    dir; reads see the current one with the manifest's schema, the
+    previous one is kept (a lazy reader may still hold it) and older
+    ones are deleted."""
+    from kgx.spark.io import TableIO, stored_schema
+
+    io = TableIO(str(tmp_path / "wh"))
+    for n in (5, 9, 2):
+        m = io.write(spark.range(n).selectExpr("id", "id * 2 AS v"), "t")
+    assert m["version"] == 3
+    df = io.read(spark, "t")
+    # parquet reads every column back as nullable
+    assert df.schema.simpleString() == stored_schema(m).simpleString()
+    assert df.count() == 2
+    assert os.path.isdir(io.path("t", 2))
+    assert not os.path.exists(io.path("t", 1))
+    names = os.listdir(io.table_dir("t"))
+    assert sorted(names) == ["v2", "v3"]
+    assert not [n for n in names if n.startswith(("_", "."))]
+
+
+def test_read_of_uncommitted_table_raises(spark, tmp_path):
+    """A data dir without a manifest may be a crashed write's partial
+    output: reading it raises instead of inferring a schema over it."""
     from kgx.spark.io import TableIO
 
     io = TableIO(str(tmp_path / "wh"))
-    df1 = spark.range(5).selectExpr("id", "id * 2 AS v")
-    df2 = spark.range(9).selectExpr("id", "id * 3 AS v")
-    m1 = io.write(df1, "t", extra={"run_id": "r1"})
-    m2 = io.write(df2, "t", extra={"run_id": "r2"})
-    assert (m1["version"], m2["version"]) == (1, 2)
-    assert io.read(spark, "t").count() == 9
-    assert io.read(spark, "t", version=1).count() == 5
-    assert [s["rows"] for s in io.manifest("t")["snapshots"]] == [5, 9]
-
-    df3 = spark.range(2).selectExpr("id", "id AS v")
-    io.write(df3, "t", extra={"run_id": "r3"})
-    assert io.read(spark, "t").count() == 2
-    assert io.read(spark, "t", version=2).count() == 9  # kept
-    assert not os.path.exists(io.path("t", version=1))  # expired
-    # history survives expiry
-    assert len(io.manifest("t")["snapshots"]) == 3
+    io.write(spark.range(3), "t")
+    os.remove(io.manifest_path("t"))
+    with pytest.raises(ValueError, match="t has no manifest"):
+        io.read(spark, "t")
 
 
 def probe_event(runner):
